@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from google_spark.functions.codec import block_metadata, encode_postings
 from google_spark.functions.tokenizer import tokenize
+from google_spark.session import SparkSource
 
 DOC_TERMS_SCHEMA = (
     "doc_id long, dl int, term string, tf int, positions array<int>"
@@ -83,7 +84,10 @@ class IndexTables:
         from functools import reduce
         from operator import or_
 
-        df = self.postings
+        # term filter first: touching ``postings.filter`` opens a lazy
+        # handle's session before any Column is built (Catalyst merges the
+        # two filters, so the tb pruning below is unaffected)
+        df = self.postings.filter(F.col("term").isin(terms))
         if self.n_buckets and terms and "tb" in df.columns:
             pred = reduce(
                 or_,
@@ -93,7 +97,7 @@ class IndexTables:
                 ],
             )
             df = df.filter(pred)
-        return df.filter(F.col("term").isin(terms))
+        return df
 
 
 def tokenize_docs(
@@ -472,13 +476,21 @@ def delete_from_index(out_dir: str, doc_ids) -> int:
     return append_delete_file(f"{out_dir}/deletes.parquet", doc_ids)
 
 
-def read_index(spark: SparkSession, out_dir: str) -> IndexTables:
-    stats = spark.read.parquet(f"{out_dir}/stats.parquet").collect()[0]
-    row = stats.asDict()
+def read_index(spark: SparkSource, out_dir: str) -> IndexTables:
+    """Open a published word index (see :func:`write_index`) with no Spark
+    job: the corpus scalars and deletes are pyarrow reads, and the postings
+    and terms tables are :class:`~google_spark.session.LazyParquet` handles
+    that open through ``spark`` (session, opener, or None for get_spark)
+    only when a distributed path first touches them."""
+    import pyarrow.parquet as pq
+
+    from google_spark.session import LazyParquet
+
+    row = pq.read_table(f"{out_dir}/stats.parquet").to_pylist()[0]
     deletes = read_delete_file(f"{out_dir}/deletes.parquet")
     return IndexTables(
-        postings=spark.read.parquet(f"{out_dir}/postings.parquet"),
-        terms=spark.read.parquet(f"{out_dir}/terms.parquet"),
+        postings=LazyParquet(f"{out_dir}/postings.parquet", spark),
+        terms=LazyParquet(f"{out_dir}/terms.parquet", spark),
         n_docs=int(row["n_docs"]),
         avgdl=float(row["avgdl"]),
         n_buckets=int(row.get("n_buckets") or 0) or None,

@@ -41,12 +41,14 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from google_spark.fsutil import atomic_write
 from google_spark.operators.index_build import term_bucket_col
+from google_spark.session import SparkSource
 
 try:  # Python 3.11+ moved sre_parse; both expose the same parse()
     from re import _parser as _sre
@@ -359,10 +361,11 @@ class TrigramIndex:
     deletes: object | None = None
 
     def matching(self, grams: list[str]) -> DataFrame:
-        from functools import reduce
         from operator import or_
 
-        df = self.postings
+        # gram filter first, so a lazy handle opens before any Column is
+        # built (see IndexTables.matching)
+        df = self.postings.filter(F.col("gram").isin(grams))
         if self.n_buckets and grams and "gb" in df.columns:
             pred = reduce(
                 or_,
@@ -372,7 +375,7 @@ class TrigramIndex:
                 ],
             )
             df = df.filter(pred)
-        return df.filter(F.col("gram").isin(grams))
+        return df
 
     def df_map(self, grams: list[str]) -> dict[str, int]:
         rows = self.stats.filter(F.col("gram").isin(grams)).collect()
@@ -479,38 +482,50 @@ def write_trigram_index(
         append_delete_file(f"{out_dir}/deletes.parquet", index.deletes)
 
 
-def read_trigram_index(spark: SparkSession, out_dir: str) -> TrigramIndex:
+def read_trigram_index(spark: SparkSource, out_dir: str) -> TrigramIndex:
     """Open a disk trigram index: the base plus every COMMITTED appended
     segment (see :func:`append_trigram_index`). Each part is read from
     its own parquet root, so the gb partition filter prunes every part;
-    per-gram stats re-aggregate lazily across parts."""
+    per-gram stats re-aggregate lazily across parts. No Spark job: the
+    scalars are pyarrow reads and the tables are LazyParquet handles that
+    open through ``spark`` (session, opener, or None for get_spark) on
+    first distributed use."""
     import json
     import os
 
-    meta = spark.read.parquet(f"{out_dir}/gram_meta.parquet").collect()[0]
-    postings = spark.read.parquet(f"{out_dir}/gram_postings.parquet")
-    stats = spark.read.parquet(f"{out_dir}/gram_stats.parquet")
+    import pyarrow.parquet as pq
+
+    from google_spark.operators.index_build import read_delete_file
+    from google_spark.session import LazyParquet
+
+    meta = pq.read_table(f"{out_dir}/gram_meta.parquet").to_pylist()[0]
+    roots = [out_dir]
     n_docs = int(meta["n_docs"])
     for k in trigram_segments(out_dir):
         seg_dir = os.path.join(_tri_seg_root(out_dir), f"seg={k:05d}")
-        postings = postings.unionByName(
-            spark.read.parquet(f"{seg_dir}/gram_postings.parquet")
-        )
-        stats = stats.unionByName(
-            spark.read.parquet(f"{seg_dir}/gram_stats.parquet")
-        )
+        roots.append(seg_dir)
         with open(os.path.join(seg_dir, "_COMMITTED")) as f:
             n_docs += int(json.load(f)["n_docs"])
-    stats = stats.groupBy("gram").agg(F.sum("df").alias("df"))
-    from google_spark.operators.index_build import read_delete_file
+
+    def union(s: SparkSession, name: str) -> DataFrame:
+        parts = [s.read.parquet(f"{r}/{name}") for r in roots]
+        return reduce(lambda a, b: a.unionByName(b), parts)
 
     return TrigramIndex(
-        postings=postings,
-        stats=stats,
+        postings=LazyParquet(
+            f"{out_dir}/gram_postings.parquet", spark,
+            build=lambda s: union(s, "gram_postings.parquet"),
+        ),
+        stats=LazyParquet(
+            f"{out_dir}/gram_stats.parquet", spark,
+            build=lambda s: union(s, "gram_stats.parquet")
+            .groupBy("gram")
+            .agg(F.sum("df").alias("df")),
+        ),
         n_docs=n_docs,
         n_buckets=int(meta["n_buckets"]) or None,
         disk_path=out_dir,
-        fold_case=bool(meta["fold_case"]) if "fold_case" in meta.__fields__ else False,
+        fold_case=bool(meta.get("fold_case", False)),
         deletes=read_delete_file(f"{out_dir}/deletes.parquet"),
     )
 

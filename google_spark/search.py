@@ -34,6 +34,7 @@ from google_spark.operators.ranking import (
     phrase_match_py,
     proximity_bonus_py,
 )
+from google_spark.session import LazyParquet, SparkSource
 
 CACHE_TTL_S = 30 * 60  # reference: 30-minute cache GC (SearchApi.java:58)
 CACHE_MAX = 1000  # reference: 1000-entry cap (SearchApi.java:171-188)
@@ -358,7 +359,10 @@ class SearchEngine:
             # bundle tombstones join the read-time union
             from google_spark.operators.trigram import read_trigram_index
 
-            spark = self._catalog_spark or new_index.postings.sparkSession
+            post = new_tri.postings
+            spark = self._catalog_spark or (
+                post.spark if isinstance(post, LazyParquet) else post.sparkSession
+            )
             new_tri = read_trigram_index(spark, new_tri.disk_path)
         new_fielded = self.fielded_index
         if self._catalog is not None:
@@ -478,22 +482,24 @@ class SearchEngine:
             ).write.mode("overwrite").parquet(f"{out_dir}/ranks.parquet")
 
     @classmethod
-    def load(cls, spark: SparkSession, index_dir: str, mode: str = "simple") -> "SearchEngine":
-        """Load a published serving bundle (see :meth:`save`). Postings,
-        meta, and snippet lookups are then served driver-side via pyarrow
-        point reads; the DataFrame handles stay available for distributed
-        paths (autocomplete long tail, wand_topk)."""
+    def load(cls, spark: SparkSource, index_dir: str, mode: str = "simple") -> "SearchEngine":
+        """Load a published serving bundle (see :meth:`save`) with no Spark
+        job. Postings, meta, and snippet lookups are then served
+        driver-side via pyarrow point reads; every table is a
+        :class:`~google_spark.session.LazyParquet` handle for the
+        distributed paths (grep, symbols, the autocomplete long tail,
+        synonym vectors, wand_topk), opened through ``spark`` — a session,
+        a zero-argument opener, or None for get_spark — only when one of
+        them first runs."""
         import os
 
+        def table(name: str) -> LazyParquet | None:
+            p = os.path.join(index_dir, name)
+            return LazyParquet(p, spark) if os.path.isdir(p) else None
+
         index = read_index(spark, index_dir)
-        meta_p = os.path.join(index_dir, "doc_meta.parquet")
-        docs_p = os.path.join(index_dir, "docstore.parquet")
-        ranks_p = os.path.join(index_dir, "ranks.parquet")
-        wv_p = os.path.join(index_dir, "word_vectors.parquet")
-        ranks = spark.read.parquet(ranks_p) if os.path.isdir(ranks_p) else None
-        meta = spark.read.parquet(meta_p) if os.path.isdir(meta_p) else None
-        docs = spark.read.parquet(docs_p) if os.path.isdir(docs_p) else None
-        wv = spark.read.parquet(wv_p) if os.path.isdir(wv_p) else None
+        meta = table("doc_meta.parquet")
+        docs = table("docstore.parquet")
         findex = None
         if os.path.isdir(os.path.join(index_dir, "fields")):
             from google_spark.operators.fielded import read_fielded_index
@@ -505,24 +511,19 @@ class SearchEngine:
 
             tindex = read_trigram_index(spark, os.path.join(index_dir, "trigram"))
         eng = cls(
-            index, ranks, meta, docs, mode=mode, word_vectors=wv,
+            index, table("ranks.parquet"), meta, docs, mode=mode,
+            word_vectors=table("word_vectors.parquet"),
             fielded_index=findex, trigram_index=tindex,
         )
-        if meta is not None:
-            eng._meta_path = meta_p
-        if docs is not None:
-            eng._docs_path = docs_p
         # prime the pyarrow dataset handles now (one directory listing
         # each) so the FIRST query doesn't pay ~25ms of file discovery
-        import pyarrow.dataset as pads
-
-        index._pa_dataset = pads.dataset(
-            f"{index_dir}/postings.parquet", format="parquet", partitioning="hive"
-        )
+        index._pa_dataset = index.postings.dataset()
         if meta is not None:
-            eng._meta_ds = pads.dataset(meta_p, format="parquet")
+            eng._meta_path = meta.path
+            eng._meta_ds = meta.dataset()
         if docs is not None:
-            eng._docs_ds = pads.dataset(docs_p, format="parquet")
+            eng._docs_path = docs.path
+            eng._docs_ds = docs.dataset()
         return eng
 
     # -- serving ----------------------------------------------------------
@@ -706,11 +707,11 @@ class SearchEngine:
             self._maybe_refresh()
         if self.docs is None:
             raise ValueError("grep needs the docstore (docs=) to verify")
-        spark = self.index.postings.sparkSession
         # tombstone masking shared with symbols(): the trigram path ALSO
         # masks via its own deletes (redundant but cheap); the full-scan
         # path has only this
         docs = self._masked_docstore()
+        spark = docs.sparkSession
         if self.trigram_index is not None:
             from google_spark.operators.trigram import grep_lines, regex_search
 
@@ -1332,12 +1333,22 @@ class SearchEngine:
     def _idf_for(self, terms: list[str]) -> dict[str, float]:
         """idf for the given terms via a driver-side cache (bounded by the
         vocabulary ever requested); misses fetch in one pruned scan of the
-        vocabulary-sized terms table. Absent terms cache as 0.0."""
+        vocabulary-sized terms table — a pyarrow ``isin`` read on a
+        published bundle, no Spark job. Absent terms cache as 0.0."""
         missing = [t for t in terms if t not in self._idf_cache]
         if missing:
             for t in missing:
                 self._idf_cache[t] = 0.0
-            self._idf_cache.update(self.index.idf_map(missing))
+            if isinstance(self.index.terms, LazyParquet):
+                import pyarrow.dataset as ds
+
+                rows = self.index.terms.dataset().to_table(
+                    filter=ds.field("term").isin(missing),
+                    columns=["term", "idf"],
+                ).to_pylist()
+                self._idf_cache.update({r["term"]: r["idf"] for r in rows})
+            else:
+                self._idf_cache.update(self.index.idf_map(missing))
         return self._idf_cache
 
     def _search_uncached(
@@ -1517,7 +1528,23 @@ class SearchEngine:
     def _top_vocab(self) -> list[tuple[str, int]]:
         """The top-``TRIE_MAX_TERMS`` (term, df) vocabulary, collected once
         and shared by autocomplete and spell suggestion — bounded driver
-        memory at web scale, one small Spark job total."""
+        memory at web scale; a pyarrow read of ``terms.parquet`` on a
+        published bundle, else one small Spark job total."""
+        if self._vocab is None and isinstance(self.index.terms, LazyParquet):
+            import pyarrow.compute as pc
+
+            tbl = self.index.terms.dataset().to_table(columns=["term", "df"])
+            # (df desc, term asc): the Spark orderBy below, ties included
+            # (both compare strings by UTF-8 bytes)
+            keys = [("df", "descending"), ("term", "ascending")]
+            top = tbl.take(pc.select_k_unstable(tbl, TRIE_MAX_TERMS, keys))
+            top = top.take(pc.sort_indices(top, keys))
+            self._vocab = [
+                (t, int(d))
+                for t, d in zip(
+                    top.column("term").to_pylist(), top.column("df").to_pylist()
+                )
+            ]
         if self._vocab is None:
             self._vocab = [
                 (r["term"], int(r["df"]))

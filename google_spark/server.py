@@ -7,10 +7,14 @@ HTML pages are presentation, not engine semantics.
 
 stdlib ``http.server`` is deliberate: with a bundle-loaded engine
 (:meth:`SearchEngine.load`) a request touches no Spark job at all (postings,
-meta, and snippets are pyarrow point reads), so the serving tier needs no
-web framework and no cluster round-trip. Engine calls are serialized with a
-lock — the engine's driver-side caches are plain dicts, and correctness
-beats a microsecond of handler concurrency.
+meta, vocabulary and snippets are pyarrow point reads), so the serving tier
+needs no web framework and no cluster round-trip. Loading the bundle starts
+no JVM either: the engine's tables are lazy parquet handles, and the Spark
+session opens only when a distributed route first runs — /grep, /symbol,
+the autocomplete scan past the trie cap, /synonym with word vectors, and
+the in-memory fallbacks of an engine that was not loaded from a bundle.
+Engine calls are serialized with a lock — the engine's driver-side caches
+are plain dicts, and correctness beats a microsecond of handler concurrency.
 """
 
 from __future__ import annotations

@@ -9,24 +9,36 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import zipfile
+from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _package_zip() -> str:
     """Zip the google_spark package so executors can import it regardless of
     the consumer's cwd — the library equivalent of launching with
-    ``spark-submit --py-files engine.zip`` (BASELINE.json north_rule)."""
+    ``spark-submit --py-files engine.zip`` (BASELINE.json north_rule).
+    Written under a temp name and renamed into place, so a concurrent
+    process never ``addPyFile``s a half-written zip."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     out = os.path.join(tempfile.gettempdir(), "google_spark_pyfiles.zip")
-    with zipfile.ZipFile(out, "w") as zf:
-        for root, _, files in os.walk(pkg_dir):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    zf.write(full, rel)
+    fd, tmp = tempfile.mkstemp(
+        prefix=".google_spark_pyfiles.", suffix=".zip", dir=os.path.dirname(out)
+    )
+    try:
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
+            for root, _, files in os.walk(pkg_dir):
+                for f in files:
+                    if f.endswith(".py"):
+                        full = os.path.join(root, f)
+                        rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+                        zf.write(full, rel)
+        os.replace(tmp, out)
+    except BaseException:
+        os.unlink(tmp)
+        raise
     return out
 
 
@@ -55,3 +67,63 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addPyFile(_package_zip())
     return spark
+
+
+SparkSource = SparkSession | Callable[[], SparkSession] | None
+
+_open_lock = threading.Lock()
+
+
+class LazyParquet:
+    """A parquet directory's DataFrame, opened on first use — so a published
+    bundle loads with no JVM, and only a route that really runs a
+    distributed job starts one.
+
+    ``spark`` is the session to read through: a SparkSession, a zero-argument
+    callable returning one, or None for :func:`get_spark`; it is resolved on
+    first use. Attribute access forwards to the DataFrame; ``join``,
+    ``unionByName`` and ``F.broadcast`` only touch ``other._jdf``, so a
+    handle is accepted wherever a DataFrame is. pyspark builds Columns
+    (``F.col``, ``F.broadcast``) only inside an active session, so touch the
+    handle before building them. ``columns`` and :meth:`dataset` answer
+    from the parquet files without opening a session. ``build`` replaces
+    the plain ``read.parquet(path)`` (e.g. a union of segment dirs);
+    ``path`` then names the one whose schema stands for the result."""
+
+    def __init__(
+        self,
+        path: str,
+        spark: SparkSource = None,
+        build: Callable[[SparkSession], DataFrame] | None = None,
+    ):
+        self.path = path
+        self.spark = spark
+        self._build = build or (lambda s: s.read.parquet(path))
+        self._df: DataFrame | None = None
+        self._ds = None
+
+    def dataset(self):
+        """The pyarrow dataset over ``path`` (memoized)."""
+        if self._ds is None:
+            import pyarrow.dataset as ds
+
+            self._ds = ds.dataset(self.path, format="parquet", partitioning="hive")
+        return self._ds
+
+    @property
+    def columns(self) -> list[str]:
+        if self._df is not None:
+            return self._df.columns
+        return self.dataset().schema.names
+
+    def __getattr__(self, name: str):
+        if name.startswith("__"):  # copy/pickle probes: no session for those
+            raise AttributeError(name)
+        if self._df is None:
+            with _open_lock:
+                if self._df is None:
+                    spark = self.spark
+                    if not isinstance(spark, SparkSession):
+                        spark = (spark or get_spark)()
+                    self._df = self._build(spark)
+        return getattr(self._df, name)

@@ -4,14 +4,18 @@
         --bundle /data/serving_bundle --port 8080
 
 Blocks serving GET /search, /autocomplete, /history, /health (see
-google_spark/server.py). With a bundle (SearchEngine.save output) every
-request is answered from pyarrow point reads — Spark is only used to open
-the bundle's DataFrame handles for the distributed fallback paths.
+google_spark/server.py). The bundle opens with pyarrow alone and no JVM
+starts: every point-read route (/search, /suggest, /autocomplete within
+the trie, /facets, /explain, /related, /wildcard, ...) is answered
+without Spark. The Spark session — ``local[--cores]``, app ``serve`` — is
+started by the first route that runs a distributed job (/grep, /symbol,
+the autocomplete scan past the trie cap, /synonym with word vectors).
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
 import sys
 from pathlib import Path
 
@@ -24,15 +28,21 @@ def main() -> None:
     ap.add_argument("--host", default="127.0.0.1")
     ap.add_argument("--port", type=int, default=8080)
     ap.add_argument("--mode", default="simple", choices=["simple", "code"])
-    ap.add_argument("--cores", default=None)
+    ap.add_argument(
+        "--cores", default=None,
+        help="local[N] cores of the Spark session the distributed routes open",
+    )
     args = ap.parse_args()
 
     from google_spark.search import SearchEngine
     from google_spark.server import serve
     from google_spark.session import get_spark
 
-    spark = get_spark(app="serve", cores=args.cores)
-    engine = SearchEngine.load(spark, args.bundle, mode=args.mode)
+    # opened once, by the first distributed route
+    open_spark = functools.cache(
+        functools.partial(get_spark, app="serve", cores=args.cores)
+    )
+    engine = SearchEngine.load(open_spark, args.bundle, mode=args.mode)
     print(f"serving {args.bundle} on http://{args.host}:{args.port}", flush=True)
     serve(engine, host=args.host, port=args.port)
 

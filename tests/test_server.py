@@ -11,15 +11,22 @@ from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
-def served(spark, corpus_df, tmp_path_factory):
+def bundle(spark, corpus_df, tmp_path_factory):
     from google_spark.search import SearchEngine
-    from google_spark.server import start_server
     from google_spark.sources.tables import with_doc_identity
 
     eng = SearchEngine.build(spark, with_doc_identity(corpus_df))
     out = str(tmp_path_factory.mktemp("srvbundle"))
     eng.save(out)
-    loaded = SearchEngine.load(spark, out)  # bundle: zero Spark jobs/request
+    return out
+
+
+@pytest.fixture(scope="module")
+def served(spark, bundle):
+    from google_spark.search import SearchEngine
+    from google_spark.server import start_server
+
+    loaded = SearchEngine.load(spark, bundle)  # bundle: zero Spark jobs/request
     srv = start_server(loaded)
     host, port = srv.server_address
     yield loaded, f"http://{host}:{port}"
@@ -384,3 +391,103 @@ def test_prf_route_matches_engine_and_operator(served, spark):
     assert [(d, pytest.approx(s)) for d, s in direct] == [
         (r["doc_id"], pytest.approx(r["score"])) for r in dist
     ]
+
+
+# -- session-free bundle serving ------------------------------------------
+
+_POINT_READ_PATHS = [
+    "/search?query=data+partition&pageSize=5",
+    "/search?query=%22merge+sort%22&pageSize=5",
+    "/search?query=data+-partition&pageSize=5",
+    "/search?query=data+repo:org1/repo1&pageSize=5",
+    "/search?query=data+lang:go&pageSize=5",
+    "/search?query=partitoin&pageSize=5",
+    "/suggest?query=partitoin+dta",
+    "/autocomplete?query=pa",
+    "/facets?query=data+partition",
+    "/explain?query=data+partition&limit=3",
+    "/wildcard?query=part*",
+]
+
+
+def _no_spark(*_a, **_k):
+    raise AssertionError("a bundle route opened a Spark session")
+
+
+def test_session_free_bundle_answers_point_read_routes(spark, bundle, served, monkeypatch):
+    """A bundle loaded with ``spark=None`` answers every point-read route
+    with no Spark session and no Spark job, byte-for-byte like a
+    Spark-loaded engine."""
+    import google_spark.session as session
+    from google_spark.search import SearchEngine
+    from google_spark.server import start_server
+
+    monkeypatch.setattr(session, "get_spark", _no_spark)
+    free = SearchEngine.load(None, bundle)
+    assert "rank" in free.doc_meta.columns  # schema read, no session opened
+    srv = start_server(free)
+    host, port = srv.server_address
+    free_base = f"http://{host}:{port}"
+    seed = served[0].search("data partition", k=1)[0].doc_id
+    paths = _POINT_READ_PATHS + [f"/related?doc_id={seed}&limit=5"]
+    tracker = spark.sparkContext.statusTracker()
+    jobs0 = len(tracker.getJobIdsForGroup())
+    try:
+        got = {p: _get(free_base, p) for p in paths}
+    finally:
+        srv.shutdown()
+    assert len(tracker.getJobIdsForGroup()) == jobs0
+    assert got["/search?query=partitoin&pageSize=5"][1]["did_you_mean"]
+    for p in paths:
+        assert got[p] == _get(served[1], p), p
+
+
+def test_session_free_grep_opens_session_on_first_use(bundle, served):
+    """/grep on a session-free engine starts Spark through the lazy
+    handle and answers like the Spark-loaded engine."""
+    from google_spark.search import SearchEngine
+    from google_spark.server import start_server
+
+    free = SearchEngine.load(None, bundle)
+    srv = start_server(free)
+    host, port = srv.server_address
+    try:
+        path = "/grep?pattern=def+open_%5Ba-z_%5D%2B&limit=5"
+        status, body = _get(f"http://{host}:{port}", path)
+    finally:
+        srv.shutdown()
+    assert status == 200 and body["results"]
+    assert body == _get(served[1], path)[1]
+
+
+def test_top_vocab_from_parquet_matches_spark_order(spark, bundle):
+    """The bundle's pyarrow vocabulary equals Spark's
+    orderBy(desc df, asc term), ties included."""
+    from google_spark.search import TRIE_MAX_TERMS, SearchEngine
+
+    vocab = SearchEngine.load(spark, bundle)._top_vocab()
+    want = [
+        (r["term"], int(r["df"]))
+        for r in spark.read.parquet(f"{bundle}/terms.parquet")
+        .orderBy(F.desc("df"), F.asc("term"))
+        .limit(TRIE_MAX_TERMS)
+        .collect()
+    ]
+    assert vocab == want
+    assert len({df for _, df in vocab}) < len(vocab)  # ties exercised
+
+
+def test_idf_from_parquet_matches_idf_map(spark, bundle, monkeypatch):
+    """related()'s idf lookup on a bundle (pyarrow isin read) equals
+    IndexTables.idf_map; absent terms read 0.0."""
+    import google_spark.session as session
+    from google_spark.operators.index_build import read_index
+    from google_spark.search import SearchEngine
+
+    index = read_index(spark, bundle)
+    terms = [r["term"] for r in index.terms.limit(40).collect()]
+    want = index.idf_map(terms)
+    monkeypatch.setattr(session, "get_spark", _no_spark)
+    got = SearchEngine.load(None, bundle)._idf_for(terms + ["zzqxabsent"])
+    assert {t: got[t] for t in terms} == want
+    assert got["zzqxabsent"] == 0.0
