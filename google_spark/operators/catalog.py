@@ -135,7 +135,11 @@ def _write_delete_file(path: str, ids: np.ndarray) -> None:
     import pyarrow.parquet as pq
 
     tmp = path + ".tmp"
-    pq.write_table(pa.table({"doc_id": pa.array(ids, type=pa.int64())}), tmp)
+    pq.write_table(
+        pa.table({"doc_id": pa.array(ids, type=pa.int64())}),
+        tmp,
+        compression="zstd",
+    )
     os.replace(tmp, path)
 
 

@@ -50,6 +50,7 @@ from google_spark.operators.index_build import (
     term_bucket_col,
     term_stats,
     tokenize_docs,
+    write_bucketed_postings,
 )
 
 LINEAGE_SCHEMA = (
@@ -400,13 +401,7 @@ def merge_batches(
 
     tmp = os.path.join(out_dir, "index.tmp")
     final = os.path.join(out_dir, "index")
-    (
-        merged.withColumn("tb", term_bucket_col("term"))
-        .repartition("tb", "term")
-        .write.mode("overwrite")
-        .partitionBy("tb")
-        .parquet(os.path.join(tmp, "postings.parquet"))
-    )
+    write_bucketed_postings(merged, os.path.join(tmp, "postings.parquet"))
     postings = spark.read.parquet(os.path.join(tmp, "postings.parquet"))
     terms = term_stats(postings, total_docs)
     terms.write.mode("overwrite").parquet(os.path.join(tmp, "terms.parquet"))

@@ -47,7 +47,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from google_spark.fsutil import atomic_write
-from google_spark.operators.index_build import term_bucket_col
+from google_spark.operators.index_build import (
+    term_bucket_col,
+    write_bucketed_postings,
+)
 from google_spark.session import SparkSource
 
 try:  # Python 3.11+ moved sre_parse; both expose the same parse()
@@ -446,12 +449,12 @@ def write_trigram_index(
     """Bucket-partitioned parquet, same layout contract as the word index
     (index_build.write_index): query-time gram filters prune to at most
     |query grams| of ``n_buckets`` directories."""
-    (
-        index.postings.withColumn("gb", term_bucket_col("gram", n_buckets))
-        .repartition("gb", "gram")
-        .write.mode("overwrite")
-        .partitionBy("gb")
-        .parquet(f"{out_dir}/gram_postings.parquet")
+    write_bucketed_postings(
+        index.postings,
+        f"{out_dir}/gram_postings.parquet",
+        key="gram",
+        bucket="gb",
+        n_buckets=n_buckets,
     )
     index.stats.write.mode("overwrite").parquet(f"{out_dir}/gram_stats.parquet")
     spark = index.postings.sparkSession
@@ -638,12 +641,12 @@ def append_trigram_index(
         total_docs=n_new,
         fold_case=fold,
     )
-    (
-        seg_idx.postings.withColumn("gb", term_bucket_col("gram", n_buckets))
-        .repartition("gb", "gram")
-        .write.mode("overwrite")
-        .partitionBy("gb")
-        .parquet(f"{seg_dir}/gram_postings.parquet")
+    write_bucketed_postings(
+        seg_idx.postings,
+        f"{seg_dir}/gram_postings.parquet",
+        key="gram",
+        bucket="gb",
+        n_buckets=n_buckets,
     )
     seg_idx.stats.write.mode("overwrite").parquet(
         f"{seg_dir}/gram_stats.parquet"

@@ -48,6 +48,12 @@ def get_spark(
     shuffle_partitions: int = 32,
     driver_memory: str = "24g",
 ) -> SparkSession:
+    """The engine's session (get-or-create) with the standard config: AQE,
+    explicit shuffle partitions, Arrow exchange, UTC, and zstd as the
+    parquet codec, so every table the engine writes (postings, terms,
+    docstore, catalog segments and sidecars, trigram bundles) is zstd.
+    Readers detect the codec per column chunk, so bundles written with
+    another codec keep serving."""
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -60,6 +66,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
     )
