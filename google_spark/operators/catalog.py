@@ -72,6 +72,7 @@ from google_spark.operators.index_build import (
     encode_sorted_terms,
     term_stats,
     tokenize_docs,
+    write_doc_id_file,
     write_index,
 )
 
@@ -126,21 +127,6 @@ def _exclusive_write(path: str, text: str) -> None:
         os.link(tmp, path)  # atomic exclusive create (POSIX)
     finally:
         os.remove(tmp)
-
-
-def _write_delete_file(path: str, ids: np.ndarray) -> None:
-    """One sorted doc_id parquet, written atomically — no Spark job (the
-    serving tier can tombstone without scheduling anything)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tmp = path + ".tmp"
-    pq.write_table(
-        pa.table({"doc_id": pa.array(ids, type=pa.int64())}),
-        tmp,
-        compression="zstd",
-    )
-    os.replace(tmp, path)
 
 
 def _keys_of(docs: DataFrame, id_col: str) -> DataFrame | None:
@@ -660,7 +646,7 @@ class SnapshotCatalog:
         if len(old_ids):
             v = (max(self.versions()) + 1) if self.versions() else 1
             dpath = self._new_data_path("d", v, ".parquet")
-            _write_delete_file(dpath, old_ids)
+            write_doc_id_file(dpath, old_ids)
             deletes.append(os.path.relpath(dpath, self.root))
         n_docs = int(m.summary["n_docs"]) - int(len(old_ids)) + n_new
         total_dl = float(m.summary["total_dl"]) - old_dl + new_dl
@@ -717,7 +703,7 @@ class SnapshotCatalog:
             if existing is not None and len(existing):
                 ids = np.setdiff1d(ids, existing)
             path = self._new_data_path("d", parent.version + 1, ".parquet")
-            _write_delete_file(path, ids)
+            write_doc_id_file(path, ids)
             summary = dict(parent.summary)
             summary["n_deletes"] = int(summary.get("n_deletes", 0)) + int(len(ids))
             # a plain delete leaves n_docs/avgdl frozen (scores of survivors

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from google_spark.functions.codec import block_metadata, encode_postings
 from google_spark.functions.tokenizer import tokenize
-from google_spark.session import SparkSource
+from google_spark.session import PARQUET_CODEC, SparkSource
 
 DOC_TERMS_SCHEMA = (
     "doc_id long, dl int, term string, tf int, positions array<int>"
@@ -456,8 +456,6 @@ def append_delete_file(del_dir: str, doc_ids) -> int:
     import os
 
     import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     ids = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
     existing = read_delete_file(del_dir)
@@ -479,14 +477,26 @@ def append_delete_file(del_dir: str, doc_ids) -> int:
     final = os.path.join(
         del_dir, f"part-del-{n_parts:05d}-{uuid.uuid4().hex[:8]}.parquet"
     )
-    tmp = os.path.join(del_dir, "_" + os.path.basename(final) + ".tmp")
+    write_doc_id_file(final, ids)
+    return int(len(ids))
+
+
+def write_doc_id_file(path: str, ids) -> None:
+    """One doc_id parquet file in the engine's codec, written atomically
+    with pyarrow (no Spark job): staged under a '_'-prefixed name that
+    directory readers skip, then renamed into place."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tmp = os.path.join(os.path.dirname(path), "_" + os.path.basename(path) + ".tmp")
     pq.write_table(
         pa.table({"doc_id": pa.array(ids, type=pa.int64())}),
         tmp,
-        compression="zstd",
+        compression=PARQUET_CODEC,
     )
-    os.replace(tmp, final)
-    return int(len(ids))
+    os.replace(tmp, path)
 
 
 def delete_from_index(out_dir: str, doc_ids) -> int:

@@ -15,6 +15,10 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+# Parquet codec of every table the engine writes: the session default for
+# Spark writes, and the codec the pyarrow delete-file writer passes.
+PARQUET_CODEC = "zstd"
+
 
 def _package_zip() -> str:
     """Zip the google_spark package so executors can import it regardless of
@@ -66,7 +70,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.sql.parquet.compression.codec", PARQUET_CODEC)
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
     )

@@ -39,6 +39,21 @@ def bundle(spark, docs, tmp_path_factory):
     return out
 
 
+@pytest.fixture(scope="module")
+def base_catalog(spark, docs, tmp_path_factory):
+    """A catalog whose one snapshot holds the even half of the corpus; tests
+    work on copies (segment paths in a manifest are relative)."""
+    root = str(tmp_path_factory.mktemp("layout") / "cat")
+    SnapshotCatalog(root).commit_build(spark, _halves(docs)[0], text_col="content")
+    return root
+
+
+def _catalog_copy(src: str, tmp_path) -> SnapshotCatalog:
+    root = str(tmp_path / "cat")
+    shutil.copytree(src, root)
+    return SnapshotCatalog(root)
+
+
 def _assert_matches_oracle(index, docs_df) -> None:
     oracle = OracleIndex(
         [(r.doc_id, r.content) for r in docs_df.select("doc_id", "content").collect()]
@@ -141,10 +156,9 @@ def test_delete_files_are_zstd(spark, docs, bundle, tmp_path):
     assert victim not in {d for q in QUERIES for d, _ in wand_topk_local(index, q, k=300)}
 
 
-def test_catalog_segments_layout(spark, docs, tmp_path):
+def test_catalog_segments_layout(spark, docs, base_catalog, tmp_path):
     base, rest = _halves(docs)
-    cat = SnapshotCatalog(str(tmp_path / "cat"))
-    cat.commit_build(spark, base, text_col="content")
+    cat = _catalog_copy(base_catalog, tmp_path)
     cat.append_docs(spark, rest, text_col="content")
     cat.delete_docs([base.select("doc_id").first().doc_id])
     _assert_compact_layout(cat.root)
@@ -194,10 +208,11 @@ def test_legacy_snappy_bundle_serves(spark, bundle, tmp_path):
         assert old.grep(pat, limit=50) == new.grep(pat, limit=50), pat
 
 
-def test_catalog_legacy_segment_unions_with_zstd_append(spark, docs, tmp_path):
-    base, rest = _halves(docs)
-    cat = SnapshotCatalog(str(tmp_path / "cat"))
-    cat.commit_build(spark, base, text_col="content")
+def test_catalog_legacy_segment_unions_with_zstd_append(
+    spark, docs, base_catalog, tmp_path
+):
+    _, rest = _halves(docs)
+    cat = _catalog_copy(base_catalog, tmp_path)
     (seg,) = cat.manifest().segments
     seg_dir = os.path.join(cat.root, seg)
     staged = str(tmp_path / "legacy_seg")
