@@ -15,10 +15,31 @@ Spark-first:
   (ref: src/cis5550/jobs/PageRank.java:114-224)
 """
 
+import math
+
 __version__ = "0.1.0"
 
 BM25_K1 = 1.2
 BM25_B = 0.75
+
+
+def bm25_idf(n_docs: int, df: int) -> float:
+    """BM25 idf ``ln(1 + (N - df + 0.5) / (df + 0.5))`` of a term found in
+    ``df`` of ``n_docs`` documents. The Spark-Column form of the same
+    expression is ``index_build.term_stats``."""
+    return math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
+
+
+def bm25_term(w, tf, dl, avgdl):
+    """One term's BM25 score, ``w`` being query weight × idf (the
+    reference's ``score += TF·IDF·w`` kernel, RankScore.java:107-185, with
+    BM25 saturation). Plain operators only, so the one body scores floats,
+    NumPy arrays and Spark Columns; every engine path calls it, so every
+    path does the same float operations in the same order."""
+    return (
+        w * tf * (BM25_K1 + 1.0)
+        / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
+    )
 
 
 def __getattr__(name):
@@ -116,11 +137,8 @@ def __getattr__(name):
         ),
         "stream_to_catalog": ("google_spark.streaming.ingest", "stream_to_catalog"),
         "streaming_near_dedup": ("google_spark.streaming.ingest", "streaming_near_dedup"),
-        "boolean_topk": ("google_spark.operators.index_query", "boolean_topk"),
         "prefix_topk": ("google_spark.operators.index_query", "prefix_topk"),
         "wildcard_topk": ("google_spark.operators.index_query", "wildcard_topk"),
-        "near_topk": ("google_spark.operators.index_query", "near_topk"),
-        "explain_topk": ("google_spark.operators.index_query", "explain_topk"),
         "regexp_term_topk": (
             "google_spark.operators.index_query",
             "regexp_term_topk",

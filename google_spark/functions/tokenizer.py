@@ -8,9 +8,10 @@ designed to run inside Arrow-batched pandas UDFs / ``mapInPandas``.
 Two modes:
 
 - ``simple``: lowercase, extract ``[a-z0-9]+`` runs, keep length in [2, 40].
-  This mode is exactly expressible in ANSI SQL (DuckDB oracle parity):
-  ``list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'), t -> len(t)
-  BETWEEN 2 AND 40)``.
+  This mode is exactly expressible in ANSI SQL, so any engine can replay
+  it: ``list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'), t ->
+  len(t) BETWEEN 2 AND 40)`` (checked by
+  tests/test_tokenizer.py::test_simple_basic).
 - ``code``: identifier-aware — splits snake_case and camelCase identifiers
   into subtokens (the source-code analog of the reference's HTML strip, ref:
   src/cis5550/jobs/Indexer.java:92-140), then the same length filter.

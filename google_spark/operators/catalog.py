@@ -828,16 +828,9 @@ class SnapshotCatalog:
                 for d in seg_dirs
             ],
         )
-        terms = seg_terms.groupBy("term").agg(F.sum("df").alias("df")).withColumn(
-            "idf",
-            F.log(
-                (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                + 1.0
-            ),
-        )
         return IndexTables(
             postings=postings,
-            terms=terms,
+            terms=term_stats(seg_terms, n_docs),
             n_docs=n_docs,
             avgdl=float(m.summary["avgdl"]),
             n_buckets=int(m.summary["n_buckets"]),

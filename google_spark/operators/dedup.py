@@ -20,8 +20,9 @@ x = first 48 digest bits mod p) and applies a Carter-Wegman family
 one digest per shingle instead of n_hashes of them, decorrelated minima
 across j (a plain linear combo without the mod lets a single shared
 shingle dominate every band). All arithmetic stays below 2^63 so any
-engine with md5 + hex parsing + int64 mod reproduces it bit-for-bit (the
-DuckDB oracle does, verbatim).
+engine with md5 + hex parsing + int64 mod reproduces it bit-for-bit
+(tests/test_dedup.py::test_minhash_signature_matches_reference replays it
+in pure Python).
 
 Signatures are computed by explode -> hash -> groupBy(doc).agg(16 mins):
 one md5 per shingle *row*, partial aggregation scan-side, whole-stage
@@ -39,7 +40,8 @@ DEFAULT_N_BANDS = 4
 DEFAULT_SHINGLE_K = 3
 
 # Carter-Wegman family constants (fixed; generated once from a seeded PRNG
-# and frozen as literals so every engine — and the DuckDB oracle — agrees).
+# and frozen as literals so every engine agrees; the pure-Python replay in
+# tests/test_dedup.py::test_minhash_signature_matches_reference uses them).
 # Entries 0-15 are the original batch-path family; 16-63 extend it for the
 # 64-hash signature STORE (prefix-compatible: a 16-hash signature is the
 # first 16 positions of the 64-hash one).

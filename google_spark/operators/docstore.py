@@ -66,7 +66,8 @@ def build_docstore(
 # definition-keyword grammar shared across the languages the corpus
 # carries (python def/class, go func, rust fn/struct/trait, js function,
 # java-ish interface) — deliberately line-anchored and keyword-explicit so
-# the same regex is exactly reproducible in the DuckDB oracle
+# the same regex is exactly reproducible by any regex engine (checked by
+# tests/test_docstore.py::test_extract_symbols_grammar)
 SYMBOL_RE = (
     r"^\s*(def|class|func|fn|function|struct|interface|trait)"
     r"\s+([A-Za-z_][A-Za-z0-9_]*)"

@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from google_spark import bm25_idf
 from google_spark.operators.index_build import (
     IndexTables,
     build_index,
@@ -204,7 +205,8 @@ def _field_component_rows(
     weighted, length-normalized tf contribution
     ``w_f * tf / ((1-b_f) + b_f * dl / avgdl_f)`` — decoded straight off
     the pruned postings scan, no shuffle (float op order mirrors
-    ranking.bm25f_topk / the DuckDB oracle exactly)."""
+    ranking.bm25f_topk exactly, checked by
+    tests/test_ranking.py::test_bm25f_index_topk_parity_with_scan_path)."""
     from google_spark.functions.codec import (
         decode_postings_arrays,
         not_deleted_mask,
@@ -272,14 +274,13 @@ def bm25f_local_topk(
     field name -> a decoded-row cache dict (e.g. search.PostingsCache) for
     hot-term reuse across queries. ``weights`` maps EXTRA-field names to
     (w_f, b_f) — title/body only through their dedicated kwargs."""
-    import math
     from collections import Counter
 
     from google_spark.operators.index_query import _entries_for
     from google_spark.operators.ranking import normalize_query
 
     # mode/stem must match build_fielded_index's — same contract as every
-    # other query entry point (wand_topk, exhaustive_topk, boolean_topk)
+    # other query entry point (wand_topk, exhaustive_topk, SearchEngine)
     terms = normalize_query(query, mode=mode, stem=stem)
     if not terms:
         return []
@@ -316,7 +317,7 @@ def bm25f_local_topk(
         u, inv = np.unique(docs, return_inverse=True)
         tfw = np.bincount(inv, weights=comps)  # field combination pre-k1
         df = len(u)
-        widf = float(qf[t]) * math.log((n - df + 0.5) / (df + 0.5) + 1.0)
+        widf = float(qf[t]) * bm25_idf(n, df)
         d_parts.append(u)
         s_parts.append(widf * tfw / (k1 + tfw))
     if not d_parts:
@@ -352,7 +353,6 @@ def bm25f_index_topk(
     their ``(w_f, b_f)`` pair (anchors, etc.); unlisted extra fields
     default to ``(1.0, 0.75)``, and title/body keep their dedicated
     keyword arguments."""
-    import math
     from collections import Counter
 
     from google_spark.operators.ranking import normalize_query
@@ -393,8 +393,7 @@ def bm25f_index_topk(
     )
     n = findex.n_docs
     widf = {
-        r["term"]: float(qf[r["term"]])
-        * math.log((n - int(r["df"]) + 0.5) / (int(r["df"]) + 0.5) + 1.0)
+        r["term"]: float(qf[r["term"]]) * bm25_idf(n, int(r["df"]))
         for r in df_rows
     }
     if not widf:

@@ -31,7 +31,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from google_spark.functions.codec import block_metadata, encode_postings
 from google_spark.functions.tokenizer import tokenize
 from google_spark.session import PARQUET_CODEC, SparkSource
 
@@ -270,7 +269,6 @@ def build_index(
     mode: str = "simple",
     stem: bool = False,
     n_shards: int = 8,
-    persist_tokens: bool = True,  # kept for API compat; tokens now stream
     total_docs: int | None = None,
     max_postings_per_term: int | None = None,
 ) -> IndexTables:

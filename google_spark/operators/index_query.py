@@ -1,17 +1,32 @@
 """Query-time top-k: BM25 scoring over the sharded compressed index
-(SURVEY.md §2.3 D18-D23, §3.3).
+(SURVEY.md §2.3 D18-D23, §3.3). Every BM25 score goes through the one
+scoring core, ``google_spark.bm25_idf``/``bm25_term``.
 
-Two engines, required to be rank-identical (tested):
+The serving tier runs on the driver: ``wand_topk_local`` and
+``local_topk_core`` read only the query terms' posting rows (pyarrow point
+reads on a disk-backed index), decode them once into the row cache and
+score in NumPy. ``SearchEngine`` builds its boolean, explain, near, PRF,
+fuzzy, wildcard and facet routes on that core.
 
-- ``exhaustive_topk``: decode matching posting lists -> score every posting
-  with JVM-side expressions -> groupBy(doc).sum -> TakeOrderedAndProject.
-  The declarative baseline (the analog of the reference's singleSearch full
-  scan, ref: src/cis5550/jobs/RankScore.java:147-185, minus its per-word KVS
-  RPCs).
-- ``wand_topk``: per-shard document-at-a-time WAND with term upper bounds and
-  block-max refinement in a NumPy ``applyInPandas`` kernel, then a global
-  top-k merge. Because shards partition the doc_id universe, per-shard WAND
-  is exact and embarrassingly parallel — the scale path.
+The distributed paths kept here, for work that does not fit one driver
+or that the serving tier does not cover:
+
+- ``exhaustive_topk``/``weighted_topk``: the declarative scan engine
+  (decode matching posting lists -> score -> groupBy(doc).sum ->
+  TakeOrderedAndProject), the analog of the reference's singleSearch full
+  scan (ref: src/cis5550/jobs/RankScore.java:147-185). ``scoring=
+  "ref_tfidf"`` is the only copy of the reference's own TF-IDF formula,
+  and it is the scorer behind ``spelling.fuzzy_topk`` and
+  ``fusion.hybrid_topk``.
+- ``prefix_topk``/``wildcard_topk``/``regexp_term_topk``: expand against
+  the whole term dictionary (the facade expands the top-df vocabulary).
+- ``facet_counts``: uncapped (the facade caps its candidates).
+- ``more_like_this``: ranks by BM25 (the facade's ``related`` ranks by the
+  priority blend).
+- ``wand_topk``: per-shard document-at-a-time block-max WAND in a NumPy
+  ``applyInPandas`` kernel, then a global top-k merge; shards partition
+  the doc_id universe, so per-shard WAND is exact.
+- ``batch_topk``: top-k for a whole query table in one plan.
 
 Ties break (score desc, doc_id asc) everywhere, including the oracle.
 """
@@ -26,10 +41,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from google_spark import BM25_B, BM25_K1
+from google_spark import bm25_idf, bm25_term
 from google_spark.functions.codec import decode_postings_arrays, not_deleted_mask
 from google_spark.functions.tokenizer import tokenize
-from google_spark.operators.index_build import IndexTables
+from google_spark.operators.index_build import IndexTables, term_stats
 
 
 def query_terms(query: str, mode: str = "simple", stem: bool = False) -> list[str]:
@@ -108,7 +123,7 @@ def weighted_topk(
     k: int = 10,
     scoring: str = "bm25",
 ) -> DataFrame:
-    """Top-k over an explicit {term: weight} map — the shared scoring core
+    """Top-k over an explicit {term: weight} map — the distributed scan
     behind :func:`exhaustive_topk` (multiplicity weights), :func:`prefix_topk`
     (dictionary-expanded terms) and the synonym path (decayed weights).
 
@@ -136,8 +151,7 @@ def weighted_topk(
         }
     else:
         widf = {
-            r["term"]: float(qf[r["term"]])
-            * math.log((n - int(r["df"]) + 0.5) / (int(r["df"]) + 0.5) + 1.0)
+            r["term"]: float(qf[r["term"]]) * bm25_idf(n, int(r["df"]))
             for r in df_rows
         }
     avgdl = index.avgdl
@@ -157,12 +171,7 @@ def weighted_topk(
                 if scoring == "ref_tfidf":
                     scores = w * tf / dl
                 else:
-                    scores = (
-                        w
-                        * tf
-                        * (BM25_K1 + 1.0)
-                        / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
-                    )
+                    scores = bm25_term(w, tf, dl, avgdl)
                 d_out.append(doc_ids)
                 s_out.append(scores)
             if d_out:
@@ -204,102 +213,6 @@ def parse_boolean_query(
             bucket, raw = must_not, raw[1:]
         bucket.extend(query_terms(raw, mode=mode, stem=stem))
     return must, should, must_not
-
-
-def boolean_topk(
-    index: IndexTables,
-    query: str | None = None,
-    k: int = 10,
-    must: list[str] | None = None,
-    should: list[str] | None = None,
-    must_not: list[str] | None = None,
-    mode: str = "simple",
-    stem: bool = False,
-) -> DataFrame:
-    """Boolean-filtered BM25 top-k: candidates must contain EVERY ``must``
-    term and NO ``must_not`` term; the score sums BM25 over must+should
-    terms present (multiplicity = weight, like plain queries).
-
-    Scale shape: ONE pruned index scan decodes must+should postings and
-    scores them in the kernel (idf/weight ride in as closures), emitting
-    (doc_id, score, is_must) rows; a hash aggregate per doc_id counts
-    distinct must terms (each (term, doc) posting appears exactly once
-    across shards, so ``sum(is_must) == |must|`` is the AND test). The
-    must_not exclusion is a second pruned scan reduced to a distinct doc_id
-    relation and applied as a left-anti join — cost proportional to the
-    excluded terms' posting lists, never the corpus. No collects."""
-    spark = index.postings.sparkSession
-    if query is not None:
-        must, should, must_not = parse_boolean_query(query, mode=mode, stem=stem)
-    must = list(must or [])
-    should = list(should or [])
-    must_not = list(must_not or [])
-    pos_terms = must + should
-    if not pos_terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    qf = Counter(pos_terms)
-    must_set = set(must)
-    matching = index.matching(list(qf))
-    df_rows = matching.groupBy("term").agg(F.sum("df").alias("df")).collect()
-    import math
-
-    n = index.n_docs
-    widf = {
-        r["term"]: float(qf[r["term"]])
-        * math.log((n - int(r["df"]) + 0.5) / (int(r["df"]) + 0.5) + 1.0)
-        for r in df_rows
-    }
-    avgdl = index.avgdl
-    deletes = index.deletes
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            d_out, s_out, m_out = [], [], []
-            for term, blob in zip(pdf["term"].values, pdf["postings"].values):
-                doc_ids, tfs, dls = decode_postings_arrays(bytes(blob))
-                if deletes is not None and len(deletes):
-                    keep = not_deleted_mask(doc_ids, deletes)
-                    doc_ids, tfs, dls = doc_ids[keep], tfs[keep], dls[keep]
-                w = widf[term]
-                tf = tfs.astype(np.float64)
-                dl = dls.astype(np.float64)
-                scores = (
-                    w
-                    * tf
-                    * (BM25_K1 + 1.0)
-                    / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
-                )
-                d_out.append(doc_ids)
-                s_out.append(scores)
-                m_out.append(
-                    np.full(len(doc_ids), 1 if term in must_set else 0, dtype=np.int32)
-                )
-            if d_out:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(np.concatenate(d_out), dtype="int64"),
-                        "score": pd.Series(np.concatenate(s_out), dtype="float64"),
-                        "is_must": pd.Series(np.concatenate(m_out), dtype="int32"),
-                    }
-                )
-
-    scored = matching.select("term", "postings").mapInPandas(
-        gen, schema="doc_id long, score double, is_must int"
-    )
-    agg = scored.groupBy("doc_id").agg(
-        F.sum("score").alias("score"), F.sum("is_must").alias("n_must")
-    )
-    cand = agg.filter(F.col("n_must") == len(must_set)) if must_set else agg
-    if must_not:
-        excl = _decode_matching(
-            index.matching(sorted(set(must_not))), sorted(set(must_not))
-        ).select("doc_id").distinct()
-        cand = cand.join(excl, "doc_id", "left_anti")
-    return (
-        cand.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
 
 
 def prefix_topk(
@@ -422,241 +335,6 @@ def regexp_term_topk(
     if not rows:
         return spark.createDataFrame([], "doc_id long, score double")
     return weighted_topk(index, {r["term"]: 1.0 for r in rows}, k=k)
-
-
-def explain_topk(
-    index: IndexTables,
-    query: str,
-    k: int = 10,
-    mode: str = "simple",
-) -> DataFrame:
-    """Score explanation for the query's top-k docs (the Lucene
-    ``explain()`` analog, the relevance-debugging surface): one row per
-    (doc, matched term) with every ingredient of the BM25 contribution —
-    (doc_id, term, weight, tf, dl, idf, contribution, score) — where
-    ``weight`` is the term's query multiplicity, ``contribution`` the
-    term's additive share, and ``score`` the doc total (= the exact score
-    exhaustive_topk/wand_topk assign). Ordered (score desc, doc_id asc,
-    term asc).
-
-    Scale shape: ONE pruned posting scan feeds both the top-k selection
-    and the breakdown — the decoded (term, doc_id, tf, dl) relation gets
-    the contribution as a JVM column (idf/weight ride in as a small
-    CASE map over the query's terms), the doc total is a window sum over
-    the doc grain, and the top-k cut is a semi-join against the k winning
-    ids. Cost follows the query terms' posting lists, never the corpus."""
-    from pyspark.sql import Window
-
-    spark = index.postings.sparkSession
-    out_schema = (
-        "doc_id long, term string, weight double, tf int, dl int, "
-        "idf double, contribution double, score double"
-    )
-    qf = Counter(query_terms(query, mode=mode))
-    if not qf:
-        return spark.createDataFrame([], out_schema)
-    import math
-
-    matching = index.matching(sorted(qf))
-    df_rows = matching.groupBy("term").agg(F.sum("df").alias("df")).collect()
-    n = index.n_docs
-    idf = {
-        r["term"]: math.log(
-            (n - int(r["df"]) + 0.5) / (int(r["df"]) + 0.5) + 1.0
-        )
-        for r in df_rows
-    }
-    if not idf:
-        return spark.createDataFrame([], out_schema)
-    decoded = _decode_matching(matching, sorted(qf))
-    deletes = index.deletes
-    if deletes is not None and len(deletes):
-        del_df = spark.createDataFrame(
-            [(int(x),) for x in deletes], "doc_id long"
-        )
-        decoded = decoded.join(F.broadcast(del_df), "doc_id", "left_anti")
-    idf_col = F.lit(None).cast("double")
-    w_col = F.lit(None).cast("double")
-    for t in sorted(idf):
-        idf_col = F.when(F.col("term") == t, F.lit(idf[t])).otherwise(idf_col)
-        w_col = F.when(F.col("term") == t, F.lit(float(qf[t]))).otherwise(w_col)
-    tf = F.col("tf").cast("double")
-    denom = tf + F.lit(BM25_K1) * (
-        F.lit(1.0 - BM25_B)
-        + F.lit(BM25_B) * F.col("dl") / F.lit(index.avgdl)
-    )
-    rows = decoded.select(
-        "doc_id",
-        "term",
-        w_col.alias("weight"),
-        "tf",
-        "dl",
-        idf_col.alias("idf"),
-        (w_col * idf_col * tf * F.lit(BM25_K1 + 1.0) / denom).alias(
-            "contribution"
-        ),
-    ).withColumn(
-        "score", F.sum("contribution").over(Window.partitionBy("doc_id"))
-    )
-    top = (
-        rows.select("doc_id", "score")
-        .distinct()
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id")
-    )
-    return rows.join(F.broadcast(top), "doc_id").orderBy(
-        F.desc("score"), F.asc("doc_id"), F.asc("term")
-    )
-
-
-def positional_postings(index: IndexTables, terms: list[str]) -> DataFrame:
-    """(term, doc_id, tf, dl, positions) decoded from the pruned posting
-    scan — the positional twin of the scoring decode: the term filter is
-    pushed to the parquet scan (+ bucket partition pruning on disk), the
-    Arrow kernel emits one row per (term, doc) with the full position
-    list, and merge-on-read deletes are masked inside the kernel. Doc
-    shards partition the doc_id universe, so each (term, doc_id) appears
-    exactly once. Cost follows the queried terms' posting lists, never
-    the corpus."""
-    from google_spark.functions.codec import decode_postings_full_np
-
-    deletes = index.deletes
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            t_out, d_out, tf_out, dl_out, p_out = [], [], [], [], []
-            for term, blob in zip(pdf["term"].values, pdf["postings"].values):
-                doc_ids, tfs, dls, pos = decode_postings_full_np(bytes(blob))
-                if deletes is not None and len(deletes):
-                    keep = not_deleted_mask(doc_ids, deletes)
-                    doc_ids, tfs, dls = doc_ids[keep], tfs[keep], dls[keep]
-                    pos = [p for p, kp in zip(pos, keep) if kp]
-                t_out.extend([term] * len(doc_ids))
-                d_out.extend(doc_ids)
-                tf_out.extend(tfs)
-                dl_out.extend(dls)
-                p_out.extend(list(p) for p in pos)
-            yield pd.DataFrame(
-                {
-                    "term": pd.Series(t_out, dtype="object"),
-                    "doc_id": pd.Series(d_out, dtype="int64"),
-                    "tf": pd.Series(tf_out, dtype="int32"),
-                    "dl": pd.Series(dl_out, dtype="int32"),
-                    "positions": pd.Series(p_out, dtype="object"),
-                }
-            )
-
-    return index.matching(terms).select("term", "postings").mapInPandas(
-        gen, schema="term string, doc_id long, tf int, dl int, positions array<int>"
-    )
-
-
-def near_topk(
-    index: IndexTables,
-    term_a: str,
-    term_b: str,
-    max_gap: int,
-    k: int = 10,
-    ordered: bool = False,
-) -> DataFrame:
-    """Proximity query ``term_a NEAR/max_gap term_b`` (the Lucene
-    SpanNearQuery analog): top-k (doc_id, min_gap, score) over docs where
-    the two DISTINCT terms occur within ``max_gap`` token positions —
-    ``ordered=True`` additionally requires ``term_a`` BEFORE ``term_b``
-    (min_gap is then the minimal forward distance). Survivors rank by
-    BM25 over the two terms (score desc, doc_id asc).
-
-    Scale shape: positions come from :func:`positional_postings` — a scan
-    of the TWO terms' posting lists only (term filter + bucket pruning
-    pushed down), never the corpus; the doc-grain equi-join is between
-    those two decoded lists; the pairwise min-gap is a nested JVM
-    higher-order function over the position arrays (cost tf_a * tf_b per
-    co-occurring doc, no explode); scoring needs no second scan — tf/dl
-    ride along the decode, idf is a 2-row query-side constant."""
-    if term_a == term_b:
-        raise ValueError("near_topk needs two distinct terms")
-    if max_gap < 1:
-        raise ValueError("max_gap must be >= 1")
-    import math
-
-    spark = index.postings.sparkSession
-    out_schema = "doc_id long, min_gap int, score double"
-    rel = positional_postings(index, sorted({term_a, term_b}))
-    df_rows = (
-        index.matching([term_a, term_b])
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-        .collect()
-    )
-    dfm = {r["term"]: int(r["df"]) for r in df_rows}
-    if term_a not in dfm or term_b not in dfm:
-        return spark.createDataFrame([], out_schema)
-    n = index.n_docs
-    idf = {
-        t: math.log((n - d + 0.5) / (d + 0.5) + 1.0) for t, d in dfm.items()
-    }
-    avgdl = index.avgdl
-
-    def bm25(tf_col: str, w: float) -> F.Column:
-        tf = F.col(tf_col).cast("double")
-        return (
-            F.lit(w)
-            * tf
-            * (BM25_K1 + 1.0)
-            / (
-                tf
-                + BM25_K1
-                * (1.0 - BM25_B + BM25_B * F.col("dl") / F.lit(avgdl))
-            )
-        )
-
-    a = rel.filter(F.col("term") == term_a).select(
-        "doc_id",
-        F.col("tf").alias("tf_a"),
-        "dl",
-        F.col("positions").alias("pa"),
-    )
-    b = rel.filter(F.col("term") == term_b).select(
-        "doc_id",
-        F.col("tf").alias("tf_b"),
-        F.col("positions").alias("pb"),
-    )
-    if ordered:
-        # minimal forward distance y - x over pairs with y AFTER x;
-        # array_min ignores the nulls the when() leaves for y <= x
-        gap = F.array_min(
-            F.flatten(
-                F.transform(
-                    "pa",
-                    lambda x: F.transform(
-                        "pb", lambda y: F.when(y > x, y - x)
-                    ),
-                )
-            )
-        )
-    else:
-        gap = F.array_min(
-            F.flatten(
-                F.transform(
-                    "pa",
-                    lambda x: F.transform("pb", lambda y: F.abs(y - x)),
-                )
-            )
-        )
-    return (
-        a.join(b, "doc_id")
-        .select(
-            "doc_id",
-            gap.alias("min_gap"),
-            (bm25("tf_a", idf[term_a]) + bm25("tf_b", idf[term_b])).alias(
-                "score"
-            ),
-        )
-        .filter(F.col("min_gap").isNotNull() & (F.col("min_gap") <= max_gap))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
 
 
 def facet_counts(
@@ -871,12 +549,8 @@ def _kernel_decoded(
     cols: list[tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = []
     for e in entries:
         w = weights[e["term"]] * idf[e["term"]]
-        tf, dl = e["tf"], e["dl"]
-        scores = w * tf * (BM25_K1 + 1.0) / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
-        bmax, bmin = e["bmax"], e["bmin"]
-        ub_blocks = w * bmax * (BM25_K1 + 1.0) / (
-            bmax + BM25_K1 * (1.0 - BM25_B + BM25_B * bmin / avgdl)
-        )
+        scores = bm25_term(w, e["tf"], e["dl"], avgdl)
+        ub_blocks = bm25_term(w, e["bmax"], e["bmin"], avgdl)
         cols.append((e["docs"], scores, ub_blocks, e["bl"]))
     cols = [c for c in cols if len(c[0])]
     if not cols:
@@ -1046,11 +720,7 @@ def batch_topk(
     )
     # global df per matched term (sum over shards of the stored column) ->
     # idf; a metadata-sized aggregate, no posting blobs touched
-    idf = matched.groupBy("term").agg(
-        F.log(
-            (F.lit(float(n)) - F.sum("df") + 0.5) / (F.sum("df") + 0.5) + 1.0
-        ).alias("idf")
-    )
+    idf = term_stats(matched, n)
     qtw = qt.join(idf, "term").withColumn("weight", F.col("w") * F.col("idf"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1078,16 +748,8 @@ def batch_topk(
     decoded = matched.select("term", "postings").mapInPandas(
         gen, schema=DECODED_SCHEMA
     )
-    tf = F.col("tf").cast("double")
-    term_score = (
-        F.col("weight")
-        * tf
-        * F.lit(BM25_K1 + 1.0)
-        / (
-            tf
-            + F.lit(BM25_K1)
-            * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.lit(avgdl))
-        )
+    term_score = bm25_term(
+        F.col("weight"), F.col("tf").cast("double"), F.col("dl"), avgdl
     )
     scored = (
         decoded.join(hint(qtw.select("term", "query_id", "weight")), "term")
@@ -1120,9 +782,8 @@ def positions_for(
     On a disk-backed index the rows come through the same pyarrow point
     read the scoring path uses and are decoded in the driver — no Spark
     job. That is safe under the same assumption wand_topk_local already
-    makes (the query terms' posting rows fit one machine); a serving
-    deployment that can't assume it should use the distributed
-    wand_topk/positions path."""
+    makes (the query terms' posting rows fit one machine); a deployment
+    that can't assume it should score with the distributed wand_topk."""
     from google_spark.functions.codec import decode_postings_full_np
 
     out: dict[str, dict[int, list[int]]] = {t: {} for t in terms}
@@ -1228,6 +889,16 @@ def _entries_for(
     return [e for t in terms for e in row_cache.get(t, [])]
 
 
+def entries_idf(entries: list[dict], n_docs: int) -> dict[str, float]:
+    """term -> BM25 idf for fetched posting entries. Global df is the sum
+    of the per-shard df of the rows just fetched, so no terms-table lookup
+    is needed."""
+    df_total: dict[str, int] = {}
+    for e in entries:
+        df_total[e["term"]] = df_total.get(e["term"], 0) + e["df"]
+    return {t: bm25_idf(n_docs, d) for t, d in df_total.items()}
+
+
 def docs_containing(
     index: IndexTables, terms: list[str], row_cache: dict | None = None
 ) -> np.ndarray:
@@ -1253,23 +924,13 @@ def local_topk_core(
     query multiplicity; synonym expansion uses decayed weights): fetch the
     pruned posting rows, reconstruct idf from their per-shard df, run the
     shard kernel. ONE Spark action per call (zero when fully cached)."""
-    import math
-
     terms = [t for t, w in weights.items() if w > 0]
     if not terms:
         return []
     entries = _entries_for(index, terms, row_cache)
     if not entries:
         return []
-    # Global df (hence idf) is recovered by summing the per-shard df of the
-    # rows just fetched — no separate terms-table lookup job.
-    df_total: dict[str, int] = {}
-    for e in entries:
-        df_total[e["term"]] = df_total.get(e["term"], 0) + e["df"]
-    n = index.n_docs
-    idf = {
-        t: math.log((n - d + 0.5) / (d + 0.5) + 1.0) for t, d in df_total.items()
-    }
+    idf = entries_idf(entries, index.n_docs)
     out = _kernel_decoded(entries, weights, idf, index.avgdl, k)
     return list(zip(out["doc_id"].tolist(), out["score"].tolist()))
 
@@ -1331,101 +992,15 @@ def more_like_this(
 
 
 def round6_half_up(x: float) -> float:
-    """HALF-UP decimal rounding at 6 dp, exactly what Spark's F.round does
+    """HALF-UP decimal rounding at 6 dp, the rounding Spark's F.round does
     (BigDecimal.valueOf(double).setScale(6, HALF_UP); repr() is the
-    shortest-round-trip string, Double.toString's analog) — Python's
-    built-in round() is banker's and would diverge from F.round/DuckDB on
-    5e-7 midpoints. Shared by the distributed PRF operator and the
-    serving facade so their mined weights cannot drift."""
+    shortest-round-trip string, Double.toString's analog); Python's
+    built-in round() is banker's. ``SearchEngine.prf`` puts its feedback
+    scores and mined expansion weights on this grid, so ulp-level
+    differences in summation order cannot change which terms expand or
+    their weights."""
     from decimal import ROUND_HALF_UP, Decimal
 
     return float(
         Decimal(repr(x)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP)
     )
-
-
-def prf_topk(
-    index: IndexTables,
-    docs: DataFrame,
-    query: str,
-    k: int = 10,
-    fb_docs: int = 5,
-    fb_terms: int = 5,
-    alpha: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    mode: str = "simple",
-    stem: bool = False,
-) -> DataFrame:
-    """DataFrame[doc_id, score] — RM3-style pseudo-relevance feedback
-    (Abdul-Jaleel et al., TREC 2004 — public): retrieve top ``fb_docs``
-    for the seed query, mine ``fb_terms`` expansion terms from them
-    weighted by relevance mass ``w(t) = Σ_d score(d) · tf(t,d)/dl(d)``,
-    then re-query with the seed terms at their multiplicity weights plus
-    the expansion terms at ``alpha · w(t)/max w`` (the original query is
-    kept at unit weight; ``alpha`` is the feedback interpolation knob).
-
-    The reference engine stops at synonym expansion from a static
-    embedding table (ref: src/cis5550/jobs/SearchApi.java:147-169); PRF is
-    the retrieval-driven counterpart — expansion comes from the corpus
-    itself, so it adapts to the indexed vocabulary with no side model.
-
-    Determinism across engines: first-pass scores and the mined weights
-    are rounded to 6 dp BEFORE use (sum order differs between engines at
-    the ulp level; the 1e-6 grid absorbs it — same trick as the keyword
-    ranking), expansion ties break (weight desc, term asc), and seed
-    terms are excluded from expansion.
-
-    Scale shape: pass 1 is the ordinary pruned weighted scoring path; the
-    feedback mining touches ONLY the ``fb_docs`` documents via an
-    ``isin`` point filter (partition-prunable under a docstore layout)
-    and one tokenize pass over those few rows; the driver collects just
-    ``fb_docs`` (doc_id, score) rows and ``fb_terms`` (term, weight)
-    rows — both O(constants), never O(corpus). Pass 2 is again the
-    pruned scoring path with a slightly wider term set.
-    """
-    from google_spark.operators.index_build import tokenize_docs
-
-    spark = index.postings.sparkSession
-    seed = dict(Counter(query_terms(query, mode=mode, stem=stem)))
-    if not seed:
-        return spark.createDataFrame([], "doc_id long, score double")
-    fb = weighted_topk(index, seed, k=fb_docs).collect()
-    if not fb:
-        return spark.createDataFrame([], "doc_id long, score double")
-    _round6 = round6_half_up
-    fb_scores = spark.createDataFrame(
-        [(int(r["doc_id"]), _round6(float(r["score"]))) for r in fb],
-        "doc_id long, fb_score double",
-    )
-    fb_ids = [int(r["doc_id"]) for r in fb]
-    fbtf = tokenize_docs(
-        docs.filter(F.col(id_col).isin(fb_ids)),
-        id_col=id_col,
-        text_col=text_col,
-        mode=mode,
-        stem=stem,
-    ).withColumnRenamed(id_col, "doc_id")
-    mined = (
-        fbtf.join(F.broadcast(fb_scores), "doc_id")
-        .filter(~F.col("term").isin(list(seed)))
-        .groupBy("term")
-        .agg(
-            F.round(
-                F.sum(F.col("fb_score") * F.col("tf") / F.col("dl")), 6
-            ).alias("w")
-        )
-        .orderBy(F.desc("w"), F.asc("term"))
-        .limit(fb_terms)
-        .collect()
-    )
-    weights = {t: float(w) for t, w in seed.items()}
-    # max_w == 0.0 (every mined weight rounded to zero) degrades to the
-    # seed-only query instead of dividing by zero; the oracle applies the
-    # same w > 0 guard. weighted_topk drops zero weights either way, so
-    # sub-grid expansion terms contribute nothing in both engines.
-    if mined and float(mined[0]["w"]) > 0.0:
-        max_w = float(mined[0]["w"])
-        for r in mined:
-            weights[r["term"]] = _round6(alpha * float(r["w"]) / max_w)
-    return weighted_topk(index, weights, k=k)

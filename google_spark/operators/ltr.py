@@ -14,11 +14,12 @@ into the next iteration as literal constants folded into the plan. At
 feature projection); there is no parameter server, no per-row Python,
 and nothing driver-side beyond d+1 numbers per iteration.
 
-Determinism across engines (the oracle unrolls the same iterations in
-SQL): each avg-gradient is rounded to 9 dp before the weight update, so
-partial-sum ORDER differences between Spark and DuckDB (ulp-level)
-vanish on the 1e-9 grid and the learned weights are bit-identical —
-the same trick the PRF/keyword rankings use at 6 dp.
+Determinism across engines: each avg-gradient is rounded to 9 dp before
+the weight update, so partial-sum ORDER differences between engines
+(ulp-level) vanish on the 1e-9 grid and the learned weights are
+bit-identical (checked against a NumPy replica of the same iterations by
+tests/test_ltr_prf_coclick_novelty.py::TestLtr::test_gd_matches_numpy_replica)
+— the same trick the PRF/keyword rankings use at 6 dp.
 """
 
 from __future__ import annotations

@@ -7,12 +7,14 @@ pipeline needs to assemble a data mix: exact per-stratum quotas
 engines and cluster sizes.
 
 Determinism comes from ordering within each stratum by ``md5(id)`` — a
-stable pseudo-random permutation any engine can replay (the DuckDB oracle
-computes the identical sample), unlike ``df.sample`` whose output depends
-on partitioning. Spark rewrites the rank filter into WindowGroupLimit
-(rank pushdown): every task keeps at most n rows per stratum BEFORE the
-stratum exchange, so a hot stratum (90% English at 100 TB) ships
-n * n_tasks rows, never its full population.
+stable pseudo-random permutation any engine can replay, unlike
+``df.sample`` whose output depends on partitioning (checked by
+tests/test_sampling.py::test_exact_quota_per_stratum and
+tests/test_sampling.py::test_sample_is_partitioning_invariant). Spark
+rewrites the rank filter into WindowGroupLimit (rank pushdown): every
+task keeps at most n rows per stratum BEFORE the stratum exchange, so a
+hot stratum (90% English at 100 TB) ships n * n_tasks rows, never its
+full population.
 """
 
 from __future__ import annotations
@@ -260,7 +262,8 @@ def pack_sequences(
     This is the deterministic sequence-packing contract an LLM
     pretraining pipeline needs (fill 4k/8k-token contexts from documents):
     ``pack_id = floor(tokens_before_me / budget)`` over a stable order, so
-    any engine replays the identical assignment (the DuckDB oracle does).
+    any engine replays the identical assignment (checked by
+    tests/test_pipeline.py::test_pack_sequences_boundaries_and_determinism).
     Token counts use the engine-wide token contract unless the caller
     passes a precomputed ``n_tokens_col``.
 
@@ -355,7 +358,9 @@ DSIR_N_BUCKETS = 4096
 
 def _dsir_bucket(gram: Column) -> Column:
     # 48-bit md5 prefix, the engine-wide portable hash (dedup.py uses the
-    # same construction; the DuckDB oracle replays it exactly)
+    # same construction; any engine with md5 replays it exactly, and
+    # tests/test_sampling.py::test_dsir_resample_deterministic_and_biased
+    # checks the resample it drives is deterministic)
     return F.conv(F.substring(F.md5(gram), 1, 12), 16, 10).cast("long")
 
 
@@ -457,7 +462,9 @@ def dsir_resample(
     """Gumbel-top-k importance resample: (id, dsir_logweight, dsir_key)
     for the ``k`` selected documents, where ``dsir_key = logweight +
     Gumbel(md5(seed|id))`` — deterministic across engines and cluster
-    sizes (the DuckDB oracle replays the identical draw), equivalent in
+    sizes (checked by
+    tests/test_sampling.py::test_dsir_resample_deterministic_and_biased),
+    equivalent in
     distribution to sampling k docs without replacement with probability
     proportional to exp(logweight). Top-k is a TakeOrderedAndProject —
     no global sort materializes."""

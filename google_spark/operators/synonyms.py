@@ -110,9 +110,10 @@ def synthetic_vectors(
 ) -> dict[str, np.ndarray]:
     """Deterministic word vectors (pure NumPy, no Spark): random unit-ish
     vectors, with optional clusters whose members share a base vector
-    (making them mutual nearest neighbours). Shared by the Spark table
-    builder AND the DuckDB oracle (which inlines these as literals), so the
-    two sides cannot drift."""
+    (making them mutual nearest neighbours). Seeded, so the Spark table
+    builder ``synthetic_word_vectors`` gives the same vectors in every run
+    (tests/test_synonyms.py::test_synonym_topk_boosts_synonym_docs relies
+    on its clusters)."""
     rng = np.random.default_rng(seed)
     vecs: dict[str, np.ndarray] = {
         w: rng.standard_normal(dim) for w in vocab

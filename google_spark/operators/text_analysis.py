@@ -491,10 +491,11 @@ def doc_fingerprint(
     )
 
 
-# PII / secret patterns, shared verbatim by the Spark expressions and the
-# DuckDB oracle. Deliberately restricted to syntax both Java regex and RE2
-# accept identically (character classes, bounded quantifiers, \b, (?:...)):
-# no backreferences, no lookaround.
+# PII / secret patterns. Deliberately restricted to syntax both Java regex
+# and RE2 accept identically (character classes, bounded quantifiers, \b,
+# (?:...)): no backreferences, no lookaround, so the list ports verbatim to
+# another engine. The chain's output is pinned by
+# tests/test_pipeline.py::test_scrub_pii_patterns_and_chain_order.
 PII_PATTERNS = (
     # (name, pattern, replacement) — applied in this order
     ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
@@ -512,7 +513,7 @@ def scrub_pii(
     anything ships (emails, AWS-style access-key ids, >=32-hex-char
     secrets, IPv4 addresses -> typed sentinels). Pure JVM regexp
     expressions (whole-stage codegen, no Python); the pattern list is
-    shared with the DuckDB oracle so both engines scrub byte-identically.
+    portable across regex engines (see PII_PATTERNS).
     Each count equals the number of substitutions that pattern MADE, i.e.
     it is measured on the text as already rewritten by the previous
     patterns in the chain — an email's host is inside <EMAIL> by the time

@@ -17,6 +17,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from google_spark import bm25_term
 from google_spark.operators.index_build import IndexTables, build_index, read_index
 from google_spark.operators.index_query import wand_topk_local
 from google_spark.operators.pagerank import extract_import_edges, pagerank
@@ -832,11 +833,15 @@ class SearchEngine:
         fb_terms: int = 5,
         alpha: float = 0.5,
     ) -> list[tuple[int, float]]:
-        """RM3 pseudo-relevance feedback through the serving tier — the
-        facade twin of index_query.prf_topk (same mining arithmetic and
-        6-dp HALF-UP weight grid via the shared round6_half_up, so the
-        two cannot drift; parity pinned by test). Returns [(doc_id,
-        score)] like :meth:`boolean`.
+        """RM3 pseudo-relevance feedback (Abdul-Jaleel et al., TREC 2004)
+        through the serving tier: retrieve the top ``fb_docs`` for the
+        seed query, mine ``fb_terms`` expansion terms from them weighted
+        by relevance mass ``w(t) = Σ_d score(d) · tf(t,d)/dl(d)``, then
+        re-query with the seed terms at their multiplicity weights plus
+        the expansion terms at ``alpha · w(t)/max w``. Feedback scores and
+        mined weights sit on a 6-dp HALF-UP grid (round6_half_up);
+        expansion ties break (weight desc, term asc) and seed terms never
+        expand. Returns [(doc_id, score)] like :meth:`boolean`.
 
         Zero corpus-sized Spark work: both scoring passes run the
         decoded-posting cache core (pruned point reads, cached terms
@@ -874,9 +879,8 @@ class SearchEngine:
                 for r in self.docs.filter(F.col("doc_id").isin(ids)).collect()
             ]
         texts = {int(r["doc_id"]): r.get("content") or "" for r in rows}
-        # mine expansion weights exactly like the operator: w(t) =
-        # round6(Σ_d round6(score_d) · tf/dl), summed in doc_id order so
-        # the float sum is deterministic
+        # w(t) = round6(Σ_d round6(score_d) · tf/dl), summed in doc_id
+        # order so the float sum is deterministic
         mined: dict[str, float] = {}
         for doc_id, score in sorted(fb, key=lambda p: p[0]):
             toks = [t for t, _ in tokenize(texts.get(int(doc_id), ""), mode=self.mode)]
@@ -909,24 +913,21 @@ class SearchEngine:
         must_not: list[str] | None = None,
     ) -> list[tuple[int, float]]:
         """Boolean-filtered BM25 top-k [(doc_id, score)] through the
-        serving point-read tier — the facade twin of
-        index_query.boolean_topk (same +must / -must_not / bare-should
-        query syntax, same scoring: BM25 over must+should with query
-        multiplicity, AND = every must term present, must_not as an
-        exclusion set). All work is driver-side NumPy over the decoded
-        posting cache; zero Spark jobs on a published bundle once the
-        terms are hot."""
+        serving point-read tier (Lucene BooleanQuery semantics): ``+term``
+        is required, ``-term`` excluded, a bare term an optional scorer.
+        The score is BM25 over must+should terms with query multiplicity,
+        AND = every must term present, must_not an exclusion set. All
+        work is driver-side NumPy over the decoded posting cache; zero
+        Spark jobs on a published bundle once the terms are hot."""
         self._maybe_refresh()
-        import math
         from collections import Counter
 
         import numpy as np
 
         from google_spark.functions.codec import not_deleted_mask
         from google_spark.operators.index_query import (
-            BM25_B,
-            BM25_K1,
             _entries_for,
+            entries_idf,
             parse_boolean_query,
         )
 
@@ -945,25 +946,13 @@ class SearchEngine:
         )
         if not entries:
             return []
-        df_total: dict[str, int] = {}
-        for e in entries:
-            df_total[e["term"]] = df_total.get(e["term"], 0) + e["df"]
-        n = self.index.n_docs
+        idf = entries_idf(entries, self.index.n_docs)
         avgdl = self.index.avgdl
         d_parts, s_parts, m_parts = [], [], []
         for e in entries:
-            d = df_total[e["term"]]
-            w = float(qf[e["term"]]) * math.log((n - d + 0.5) / (d + 0.5) + 1.0)
-            tf = e["tf"].astype(np.float64)
-            dl = e["dl"].astype(np.float64)
-            s = (
-                w
-                * tf
-                * (BM25_K1 + 1.0)
-                / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
-            )
+            w = float(qf[e["term"]]) * idf[e["term"]]
             d_parts.append(e["docs"])
-            s_parts.append(s)
+            s_parts.append(bm25_term(w, e["tf"], e["dl"], avgdl))
             m_parts.append(
                 np.full(
                     len(e["docs"]),
@@ -1036,22 +1025,24 @@ class SearchEngine:
         return local_topk_core(self.index, weights, k, self._postings_cache)
 
     def explain(self, query: str, k: int = 10) -> list[dict]:
-        """Score explanation through the serving tier (the facade twin of
-        index_query.explain_topk, Lucene ``explain()`` semantics): for the
-        query's top-``k`` docs, one dict per (doc, matched term) with the
-        full BM25 breakdown — doc_id, term, weight (query multiplicity),
-        tf, dl, idf, contribution, score (the doc total, exactly what
-        search/wand assign the text leg). Ordered (score desc, doc_id asc,
-        term asc). Driver-side NumPy over the decoded posting cache —
-        zero Spark jobs on a published bundle once the terms are hot."""
+        """Score explanation through the serving tier (Lucene ``explain()``
+        semantics): for the query's top-``k`` docs, one dict per (doc,
+        matched term) with the full BM25 breakdown — doc_id, term, weight
+        (query multiplicity), tf, dl, idf, contribution, score (the doc
+        total, exactly what search/wand assign the text leg). Ordered
+        (score desc, doc_id asc, term asc). Driver-side NumPy over the
+        decoded posting cache — zero Spark jobs on a published bundle once
+        the terms are hot."""
         self._maybe_refresh()
-        import math
         from collections import Counter
 
         import numpy as np
 
         from google_spark.functions.tokenizer import tokenize
-        from google_spark.operators.index_query import _entries_for
+        from google_spark.operators.index_query import (
+            _entries_for,
+            entries_idf,
+        )
 
         qf = Counter(t for t, _ in tokenize(query, mode=self.mode))
         if not qf:
@@ -1061,33 +1052,19 @@ class SearchEngine:
         )
         if not entries:
             return []
-        df_total: dict[str, int] = {}
-        for e in entries:
-            df_total[e["term"]] = df_total.get(e["term"], 0) + e["df"]
-        n = self.index.n_docs
+        idf = entries_idf(entries, self.index.n_docs)
         avgdl = self.index.avgdl
-        idf = {
-            t: math.log((n - d + 0.5) / (d + 0.5) + 1.0)
-            for t, d in df_total.items()
-        }
-        from google_spark.operators.index_query import BM25_B, BM25_K1
-
         # two vectorized passes: (1) per-doc totals over ALL postings via
         # unique+bincount, (2) breakdown rows materialized ONLY for
         # postings whose doc made the top-k cut — a hot term with ~1M
         # postings costs two NumPy passes, not ~1M Python tuples (this
         # runs under the server's shared engine lock)
-        contribs: list[np.ndarray] = []
-        for e in entries:
-            tf = e["tf"].astype(np.float64)
-            dl = e["dl"].astype(np.float64)
-            contribs.append(
-                float(qf[e["term"]])
-                * idf[e["term"]]
-                * tf
-                * (BM25_K1 + 1.0)
-                / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
+        contribs = [
+            bm25_term(
+                float(qf[e["term"]]) * idf[e["term"]], e["tf"], e["dl"], avgdl
             )
+            for e in entries
+        ]
         all_docs = np.concatenate([e["docs"] for e in entries])
         if not len(all_docs):
             return []
@@ -1129,14 +1106,13 @@ class SearchEngine:
         self, pattern: str, k: int = 10, max_expand: int = 32
     ) -> list[tuple[int, float]]:
         """Wildcard top-k [(doc_id, score)] through the serving tier
-        (``*`` any run, ``?`` one char — the facade twin of
-        index_query.wildcard_topk): the pattern expands against the CAPPED
-        serving vocabulary (shared with autocomplete/fuzzy — one small
-        Spark job ever), keeping the ``max_expand`` highest-df matches
-        (ties term asc), scored weight-1.0 by the same decoded-postings
-        core as plain queries. A term outside the df-capped vocabulary is
-        invisible here; wildcard_topk against the full dictionary is the
-        exhaustive distributed twin."""
+        (``*`` any run, ``?`` one char): the pattern expands against the
+        CAPPED serving vocabulary (shared with autocomplete/fuzzy — one
+        small Spark job ever), keeping the ``max_expand`` highest-df
+        matches (ties term asc), scored weight-1.0 by the same
+        decoded-postings core as plain queries. A term outside the
+        df-capped vocabulary is invisible here; wildcard_topk against the
+        full dictionary is the exhaustive distributed twin."""
         self._maybe_refresh()
         import re
 
@@ -1156,14 +1132,15 @@ class SearchEngine:
     def regexp_term(
         self, regex: str, k: int = 10, max_expand: int = 32
     ) -> list[tuple[int, float]]:
-        """Regex TERM query through the serving tier (the facade twin of
-        index_query.regexp_term_topk, Lucene RegexpQuery semantics): the
-        pattern — anchored both ends, wrapped in a non-capturing group so
-        top-level alternation can't escape the anchors — matches against
-        the CAPPED serving vocabulary (shared with wildcard/fuzzy; zero
-        Spark jobs once primed), keeping the ``max_expand`` highest-df
-        matches (ties term asc), OR-scored weight 1.0 by the decoded-
-        postings core. Content regex is the trigram path (``grep``)."""
+        """Regex TERM query through the serving tier (Lucene RegexpQuery
+        semantics): the pattern — anchored both ends, wrapped in a
+        non-capturing group so top-level alternation can't escape the
+        anchors — matches against the CAPPED serving vocabulary (shared
+        with wildcard/fuzzy; zero Spark jobs once primed), keeping the
+        ``max_expand`` highest-df matches (ties term asc), OR-scored
+        weight 1.0 by the decoded-postings core; index_query.
+        regexp_term_topk expands against the full dictionary. Content
+        regex is the trigram path (``grep``)."""
         self._maybe_refresh()
         import re
 
@@ -1185,31 +1162,26 @@ class SearchEngine:
         k: int = 10,
         ordered: bool = False,
     ) -> list[dict]:
-        """Proximity NEAR/k through the serving tier (the facade twin of
-        index_query.near_topk, Lucene SpanNearQuery semantics): docs
-        where the two terms — each normalized through the engine
-        tokenizer — co-occur within ``max_gap`` token positions
+        """Proximity NEAR/k through the serving tier (Lucene SpanNearQuery
+        semantics): docs where the two terms — each normalized through the
+        engine tokenizer — co-occur within ``max_gap`` token positions
         (``ordered=True`` requires ``term_a`` before ``term_b``), ranked
         by BM25 over the pair. Returns dicts (doc_id, min_gap, score),
-        (score desc, doc_id asc), score-identical to the distributed
-        operator by the shared formula.
+        (score desc, doc_id asc).
 
         Serving shape: the two terms' posting rows come through the same
         point-read/decode cache as plain queries; candidates are the
         NumPy intersection of their doc arrays; positions are fetched
         ONLY for the co-occurring docs (positions_for filters
         executor-side). Same one-machine assumption as the rest of the
-        serving tier — the distributed near_topk is the scale path."""
+        serving tier: the two terms' posting rows fit the driver."""
         self._maybe_refresh()
-        import math
-
         import numpy as np
 
         from google_spark.functions.tokenizer import tokenize
         from google_spark.operators.index_query import (
-            BM25_B,
-            BM25_K1,
             _entries_for,
+            entries_idf,
             positions_for,
         )
 
@@ -1228,10 +1200,8 @@ class SearchEngine:
             raise ValueError("max_gap must be >= 1")
         entries = _entries_for(self.index, [a, b], self._postings_cache)
         by_term: dict[str, list] = {a: [], b: []}
-        df_total: dict[str, int] = {a: 0, b: 0}
         for e in entries:
             by_term[e["term"]].append(e)
-            df_total[e["term"]] += e["df"]
         if not by_term[a] or not by_term[b]:
             return []
         docs_a = np.concatenate([e["docs"] for e in by_term[a]])
@@ -1240,11 +1210,7 @@ class SearchEngine:
         if not len(cand):
             return []
         pos = positions_for(self.index, [a, b], set(int(x) for x in cand))
-        n = self.index.n_docs
-        idf = {
-            t: math.log((n - d + 0.5) / (d + 0.5) + 1.0)
-            for t, d in df_total.items()
-        }
+        idf = entries_idf(entries, self.index.n_docs)
         avgdl = self.index.avgdl
         # per-doc tf/dl via searchsorted over each term's decoded arrays
         tfdl: dict[str, dict[int, tuple[float, float]]] = {a: {}, b: {}}
@@ -1284,12 +1250,7 @@ class SearchEngine:
             score = 0.0
             for t in (a, b):
                 tf, dl = tfdl[t][d]
-                score += (
-                    idf[t]
-                    * tf
-                    * (BM25_K1 + 1.0)
-                    / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
-                )
+                score += bm25_term(idf[t], tf, dl, avgdl)
             out.append({"doc_id": d, "min_gap": gap, "score": score})
         out.sort(key=lambda r: (-r["score"], r["doc_id"]))
         return out[:k]
@@ -1301,8 +1262,8 @@ class SearchEngine:
         max_candidates: int = 100_000,
     ) -> dict[str, list[tuple[str | None, int]]]:
         """Facet sidebar counts {facet -> [(value, n_docs)]} over the docs
-        matching ANY query term — the facade twin of
-        index_query.facet_counts. Candidate ids come from the decoded
+        matching ANY query term (index_query.facet_counts is the uncapped
+        distributed count). Candidate ids come from the decoded
         posting cache (merge-on-read deletes already masked); their meta
         rows are pyarrow point reads on a published bundle. Bounded by the
         query terms' posting sizes and capped at ``max_candidates`` ids

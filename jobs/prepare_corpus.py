@@ -120,6 +120,16 @@ def prepare_corpus(
 
     acct = {"input": docs.count()}
 
+    def gate(kept, name: str):
+        """Cut ``kept``'s lineage and count it into ``acct[name]``. Each
+        gate joins docs with an operator computed over docs, so without a
+        cut the plan doubles at every stage (and every later count replays
+        the whole prefix). localCheckpoint keeps the rows on the executors;
+        the count materializes them."""
+        kept = kept.localCheckpoint(eager=False)
+        acct[name] = kept.count()
+        return kept
+
     if scrub:
         from google_spark.operators.text_analysis import scrub_pii
 
@@ -149,8 +159,7 @@ def prepare_corpus(
         else:
             lic = lic.filter(F.col("is_permissive"))
         # carry the license provenance onto the survivors
-        docs = docs.join(lic, id_col)
-        acct["after_license_filter"] = docs.count()
+        docs = gate(docs.join(lic, id_col), "after_license_filter")
 
     if code_gate:
         from google_spark.operators.text_analysis import code_rules
@@ -158,8 +167,9 @@ def prepare_corpus(
         keep_code = code_rules(docs, id_col=id_col, text_col=text_col).filter(
             "keep"
         ).select(id_col)
-        docs = docs.join(keep_code, id_col, "left_semi")
-        acct["after_code_gate"] = docs.count()
+        docs = gate(
+            docs.join(keep_code, id_col, "left_semi"), "after_code_gate"
+        )
 
     if min_entropy is not None:
         from google_spark.operators.text_analysis import char_entropy
@@ -167,12 +177,14 @@ def prepare_corpus(
         keep_ent = char_entropy(docs, id_col=id_col, text_col=text_col).filter(
             F.col("char_entropy") >= float(min_entropy)
         ).select(id_col)
-        docs = docs.join(keep_ent, id_col, "left_semi")
-        acct["after_entropy_filter"] = docs.count()
+        docs = gate(
+            docs.join(keep_ent, id_col, "left_semi"), "after_entropy_filter"
+        )
 
     keep_exact = exact_dedup(docs, id_col=id_col, text_col=text_col)
-    docs = docs.join(keep_exact, id_col, "left_semi")
-    acct["after_exact_dedup"] = docs.count()
+    docs = gate(
+        docs.join(keep_exact, id_col, "left_semi"), "after_exact_dedup"
+    )
 
     if min_novelty is not None:
         # corpus-relative recycled-text gate: runs AFTER exact dedup (so
@@ -185,8 +197,9 @@ def prepare_corpus(
         keep_nov = ngram_novelty(docs, id_col=id_col, text_col=text_col).filter(
             F.col("novelty") >= float(min_novelty)
         ).select(id_col)
-        docs = docs.join(keep_nov, id_col, "left_semi")
-        acct["after_novelty_filter"] = docs.count()
+        docs = gate(
+            docs.join(keep_nov, id_col, "left_semi"), "after_novelty_filter"
+        )
 
     if cluster_dedup:
         # transitive-closure-correct: one canonical doc per connected
@@ -204,13 +217,7 @@ def prepare_corpus(
         )
         losers = pairs.select(F.col("b").alias(id_col)).distinct()
         docs = docs.join(losers, id_col, "left_anti")
-    # barrier: the dedup lineage (sha256 aggregate + MinHash signatures +
-    # Jaccard verification) is by far the most expensive prefix, and every
-    # later stage's accounting count plus the final write would re-execute
-    # it from scratch — O(stages) repetitions of the dedup pipeline
-    docs = docs.persist()
-    acct["after_near_dedup"] = docs.count()
-    _dedup_barrier = docs
+    docs = gate(docs, "after_near_dedup")
 
     if max_dup_span_frac is not None:
         # ExactSubstr-style gate: a doc dominated by token runs that
@@ -231,19 +238,16 @@ def prepare_corpus(
                 <= F.lit(float(max_dup_span_frac))
             )
         ).select(id_col)
-        docs = docs.join(keep_ids, id_col, "left_semi").persist()
-        acct["after_span_filter"] = docs.count()
-        # the span-filtered cache supersedes the dedup barrier: release
-        # the old one now and let the shared unpersist below release this
-        _dedup_barrier.unpersist()
-        _dedup_barrier = docs
+        docs = gate(
+            docs.join(keep_ids, id_col, "left_semi"), "after_span_filter"
+        )
 
     # metric operators emit (doc_id, metrics...) projections; join them on
     # so the prepared corpus carries its provenance columns
     docs = docs.join(language_id(docs, id_col=id_col, text_col=text_col), id_col)
     if langs:
         docs = docs.filter(F.col("lang_pred").isin(langs))
-    acct["after_lang_filter"] = docs.count()
+    docs = gate(docs, "after_lang_filter")
 
     qual = quality_scores(docs, id_col=id_col, text_col=text_col)
     # q_ prefix: the raw corpus may already carry columns like n_chars
@@ -253,8 +257,10 @@ def prepare_corpus(
     docs = docs.join(qual, id_col)
     # alpha_ratio is the pipeline's quality gate (the cheap pretraining
     # filter: mostly-symbol/binary-ish docs score low)
-    docs = docs.filter(F.col("q_alpha_ratio") >= min_quality)
-    acct["after_quality_filter"] = docs.count()
+    docs = gate(
+        docs.filter(F.col("q_alpha_ratio") >= min_quality),
+        "after_quality_filter",
+    )
 
     if (
         max_dup_line_frac is not None
@@ -271,7 +277,7 @@ def prepare_corpus(
             docs = docs.filter(F.col("top_bigram_frac") <= max_top_bigram_frac)
         if drop_char_runs:
             docs = docs.filter(~F.col("has_char_run"))
-        acct["after_repetition_filter"] = docs.count()
+        docs = gate(docs, "after_repetition_filter")
 
     if min_logprob is not None:
         from google_spark.operators.text_analysis import unigram_logprob
@@ -286,15 +292,15 @@ def prepare_corpus(
             F.col("mean_logprob"),
             F.col("n_tokens").alias("_lm_n_tokens"),
         )
-        docs = (
+        docs = gate(
             docs.join(lp, id_col)
             .filter(
                 (F.col("mean_logprob") >= min_logprob)
                 & (F.col("_lm_n_tokens") > 0)
             )
-            .drop("_lm_n_tokens")
+            .drop("_lm_n_tokens"),
+            "after_logprob_filter",
         )
-        acct["after_logprob_filter"] = docs.count()
 
     if decontaminate is not None:
         from google_spark.operators.dedup import contamination_flags
@@ -303,22 +309,26 @@ def prepare_corpus(
             docs, decontaminate, id_col=id_col, text_col=text_col,
             eval_id_col=id_col, eval_text_col=text_col,
         )
-        docs = docs.join(
-            flags.filter(~F.col("contaminated")).select(id_col),
-            id_col,
-            "left_semi",
+        docs = gate(
+            docs.join(
+                flags.filter(~F.col("contaminated")).select(id_col),
+                id_col,
+                "left_semi",
+            ),
+            "after_decontamination",
         )
-        acct["after_decontamination"] = docs.count()
 
     if mix:
         from google_spark.operators.sampling import sample_stratified
 
-        docs = sample_stratified(docs, "lang_pred", mix, id_col=id_col)
-        acct["after_mix"] = docs.count()
+        docs = gate(
+            sample_stratified(docs, "lang_pred", mix, id_col=id_col),
+            "after_mix",
+        )
 
-    # second barrier: all gates are applied; the token accounting, the
-    # optional packing window, and the caller's write reuse this state
-    # instead of replaying the filter stack off the dedup barrier
+    # all gates are applied; the token accounting, the optional packing
+    # window, and the caller's write reuse the cut below instead of
+    # replaying the filter stack
     if bpe_merges:
         # train on the SURVIVORS (post-gates), so the learned subwords
         # reflect what the mix will actually feed the model
@@ -357,14 +367,13 @@ def prepare_corpus(
         counts = bpe_token_count(
             docs, merges, id_col=id_col, text_col=text_col
         )
-        docs = docs.join(counts, id_col).persist()
+        docs = docs.join(counts, id_col).localCheckpoint(eager=False)
     else:
         docs = docs.join(
             token_count(docs, id_col=id_col, text_col=text_col), id_col
-        ).persist()
+        ).localCheckpoint(eager=False)
     total = docs.agg(F.sum("n_tokens").alias("t")).collect()[0]["t"] or 0
     acct["total_tokens"] = int(total)
-    _dedup_barrier.unpersist()
 
     if pack_budget:
         from google_spark.operators.sampling import pack_sequences

@@ -1,9 +1,10 @@
 """spark-submit entry: BM25 top-k queries against a built index.
 
     spark-submit --py-files google_spark.zip jobs/query_topk.py \
-        --index /data/index_build/index --query "hash join" -k 10 [--exhaustive]
+        --index /data/index_build/index --query "hash join" -k 10
 
-Prints one JSON line per query with ranked (doc_id, score) and latency.
+Runs the distributed block-max WAND top-k (``index_query.wand_topk``) and
+prints one JSON line per query with ranked (doc_id, score) and latency.
 """
 
 from __future__ import annotations
@@ -23,7 +24,6 @@ def main() -> None:
     ap.add_argument("--query", action="append", required=True)
     ap.add_argument("-k", type=int, default=10)
     ap.add_argument("--mode", default="simple", choices=["simple", "code"])
-    ap.add_argument("--exhaustive", action="store_true")
     ap.add_argument("--cores", default=None)
     args = ap.parse_args()
 
@@ -31,19 +31,18 @@ def main() -> None:
 
     spark = get_spark(app="query_topk", cores=args.cores)
     from google_spark.operators.index_build import read_index
-    from google_spark.operators.index_query import exhaustive_topk, wand_topk
+    from google_spark.operators.index_query import wand_topk
 
     index = read_index(spark, args.index)
-    engine = exhaustive_topk if args.exhaustive else wand_topk
     for q in args.query:
         t0 = time.perf_counter()
-        rows = engine(index, q, k=args.k, mode=args.mode).collect()
+        rows = wand_topk(index, q, k=args.k, mode=args.mode).collect()
         print(
             json.dumps(
                 {
                     "query": q,
                     "k": args.k,
-                    "engine": "exhaustive" if args.exhaustive else "wand",
+                    "engine": "wand",
                     "latency_ms": round((time.perf_counter() - t0) * 1000, 1),
                     "results": [
                         {"doc_id": r["doc_id"], "score": round(r["score"], 6)}

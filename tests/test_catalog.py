@@ -27,6 +27,7 @@ from google_spark.operators.index_query import (
     wand_topk,
     wand_topk_local,
 )
+from google_spark.search import SearchEngine
 from google_spark.sources.tables import with_doc_identity
 
 QUERY = "def hash index"
@@ -103,6 +104,21 @@ def test_delete_merge_on_read_all_paths(spark, identified, tmp_path):
         _local_ids(idx),
     ):
         assert not set(ids) & set(victims)
+
+    # the facade's boolean / explain / near routes (pyarrow point reads
+    # over the segments) drop them too; before the delete they return them
+    def facade_ids(index):
+        eng = SearchEngine(index)
+        near = eng.near("def", "index", max_gap=10**6, k=10**6)
+        return (
+            {d for d, _ in eng.boolean(QUERY, k=10)},
+            {r["doc_id"] for r in eng.explain(QUERY, k=10)},
+            {r["doc_id"] for r in near},
+        )
+
+    for before_ids, after_ids in zip(facade_ids(idx0), facade_ids(idx)):
+        assert before_ids & set(victims)
+        assert not after_ids & set(victims)
 
     # surviving docs keep their exact scores (df/avgdl frozen until compact)
     before_scores = {r["doc_id"]: r["score"] for r in before}

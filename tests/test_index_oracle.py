@@ -43,6 +43,46 @@ def test_corpus_stats_match(built):
         assert idf == pytest.approx(oracle.idf(term), abs=1e-9), term
 
 
+def test_bm25_core_numpy_spark_oracle_agree(spark):
+    """The one scoring core: over a tf/dl grid, ``bm25_term`` gives
+    bit-identical scores on NumPy arrays and on a Spark Column, and both
+    equal ``OracleIndex.bm25`` (and ``bm25_idf`` its idf) within 1e-12."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from google_spark import bm25_idf, bm25_term
+
+    grid = [
+        (tf, dl)
+        for tf in (1, 2, 3, 5, 8, 13)
+        for dl in (tf, tf + 1, 17, 40, 333)
+    ]
+    # doc i holds 'aa' tf times among dl tokens; two docs without 'aa'
+    # keep df below n_docs
+    docs = [
+        (i, "aa " * tf + "zz " * (dl - tf)) for i, (tf, dl) in enumerate(grid)
+    ]
+    docs += [(len(grid), "zz yy"), (len(grid) + 1, "yy")]
+    oracle = OracleIndex(docs)
+    df = len(oracle.postings["aa"])
+    idf = bm25_idf(oracle.n_docs, df)
+    assert idf == pytest.approx(oracle.idf("aa"), abs=1e-12)
+
+    tf = np.array([t for t, _ in grid], dtype=np.float64)
+    dl = np.array([d for _, d in grid], dtype=np.float64)
+    got_np = bm25_term(idf, tf, dl, oracle.avgdl)
+    rows = spark.createDataFrame(
+        [(i, t, d) for i, (t, d) in enumerate(grid)], "i int, tf int, dl int"
+    )
+    col = bm25_term(idf, F.col("tf").cast("double"), F.col("dl"), oracle.avgdl)
+    got_spark = [
+        r["s"] for r in rows.select("i", col.alias("s")).orderBy("i").collect()
+    ]
+    assert got_spark == got_np.tolist()  # bit-identical, not approx
+    for i, s in enumerate(got_np.tolist()):
+        assert s == pytest.approx(oracle.bm25("aa", i), abs=1e-12), grid[i]
+
+
 def _rows(df):
     return [(r["doc_id"], r["score"]) for r in df.collect()]
 

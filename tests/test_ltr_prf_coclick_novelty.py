@@ -1,9 +1,10 @@
-"""Round-5 additions: RM3 pseudo-relevance feedback, the GD-trained CTR
-ranker, co-click item similarity, and n-gram novelty scoring. These
-tests pin the operator-level semantics: PRF widens the query with
-corpus-mined terms and stays rank-sane, GD matches a NumPy replica
-bit-for-bit under the 9-dp gradient grid, the co-click cap bounds the
-quadratic blowup, and novelty detects planted recycled text.
+"""Round-5 additions: RM3 pseudo-relevance feedback (through the
+serving facade, SearchEngine.prf), the GD-trained CTR ranker, co-click
+item similarity, and n-gram novelty scoring. These tests pin the
+operator-level semantics: PRF widens the query with corpus-mined terms
+and stays rank-sane, GD matches a NumPy replica bit-for-bit under the
+9-dp gradient grid, the co-click cap bounds the quadratic blowup, and
+novelty detects planted recycled text.
 """
 
 from __future__ import annotations
@@ -36,36 +37,38 @@ def toy_index(spark, toy_docs):
     return build_index(spark, toy_docs, id_col="doc_id", text_col="text")
 
 
+@pytest.fixture(scope="module")
+def toy_engine(toy_index, toy_docs):
+    """The serving facade over the toy index, with the docs as its
+    docstore (the PRF feedback source)."""
+    from google_spark.search import SearchEngine
+
+    content = toy_docs.select("doc_id", F.col("text").alias("content"))
+    return SearchEngine(toy_index, docs=content)
+
+
 class TestPrf:
-    def test_expands_and_ranks(self, toy_docs, toy_index):
-        from google_spark.operators.index_query import exhaustive_topk, prf_topk
+    def test_expands_and_ranks(self, toy_index, toy_engine):
+        from google_spark.operators.index_query import exhaustive_topk
 
         base = exhaustive_topk(toy_index, "hash join", k=7).collect()
-        out = prf_topk(
-            toy_index, toy_docs, "hash join", k=7, fb_docs=3, fb_terms=3
-        ).collect()
+        out = toy_engine.prf("hash join", k=7, fb_docs=3, fb_terms=3)
         assert out, "PRF returned nothing"
         # every scored doc contains a seed or an expansion term, and the
         # expansion can only ADD mass for seed-matching docs: the top-1
         # stays a hash-join doc
-        assert out[0]["doc_id"] in {r["doc_id"] for r in base[:3]}
+        assert out[0][0] in {r["doc_id"] for r in base[:3]}
         # expansion terms come from the feedback docs (e.g. 'build',
         # 'probe', 'partition'), so doc 4 (hash partition, no 'join')
         # must score ABOVE its plain-BM25 relative position or at least
         # still appear — and the totally unrelated doc 7 must not appear
-        assert 7 not in {r["doc_id"] for r in out}
+        assert 7 not in {d for d, _ in out}
 
-    def test_empty_query(self, toy_docs, toy_index, spark):
-        from google_spark.operators.index_query import prf_topk
+    def test_empty_query(self, toy_engine):
+        assert toy_engine.prf("!!") == []
 
-        assert prf_topk(toy_index, toy_docs, "!!") .count() == 0
-
-    def test_no_hits_falls_back_empty(self, toy_docs, toy_index):
-        from google_spark.operators.index_query import prf_topk
-
-        assert (
-            prf_topk(toy_index, toy_docs, "zzzznotaterm").count() == 0
-        )
+    def test_no_hits_falls_back_empty(self, toy_engine):
+        assert toy_engine.prf("zzzznotaterm") == []
 
 
 class TestLtr:

@@ -57,6 +57,11 @@ def test_prepare_corpus_quality_and_mix_stages(spark):
         min_logprob=-10.0,
         mix={"en": 5, "de": 3},
     )
+    # each gate cuts the lineage it just counted, so the returned plan
+    # holds only what follows the last cut — not a copy of docs per join
+    # per stage (2^stages plans grew the test JVM past 15 GB)
+    plan = prepared._jdf.queryExecution().logical().toString()
+    assert plan.count("Join ") <= 2, plan
     seq = [
         acct["after_quality_filter"],
         acct["after_repetition_filter"],

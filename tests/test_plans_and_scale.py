@@ -520,19 +520,65 @@ def test_ltr_scoring_is_codegen_expressions(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_prf_pass2_prunes_to_query_terms(spark):
-    """prf_topk pass 2 reads only the widened term set from the postings
-    relation: the In(term, ...) filter must list MORE than the two seed
-    terms (expansion happened) and no CartesianProduct appears."""
-    import re as _re
+def test_prf_pass2_prunes_to_query_terms(spark, monkeypatch):
+    """SearchEngine.prf's second pass reads the posting rows of exactly the
+    seed terms plus the mined expansion terms (replayed here from the
+    feedback docs' text), and that set is wider than the two seed terms."""
+    from collections import Counter
 
+    import google_spark.operators.index_query as iq
+    from google_spark.functions.tokenizer import tokenize
     from google_spark.operators.index_build import build_index
-    from google_spark.operators.index_query import prf_topk
+    from google_spark.search import SearchEngine
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     idx = build_index(spark, docs, id_col="doc_id", text_col="text")
-    plan = _plan(prf_topk(idx, docs, "hash join", k=10))
-    m = _re.search(r"term#\d+ IN \(([^)]*)\)", plan)
-    assert m is not None, plan
-    assert len(m.group(1).split(",")) > 2, m.group(0)
-    assert "CartesianProduct" not in plan
+    eng = SearchEngine(
+        idx, docs=docs.select("doc_id", F.col("text").alias("content"))
+    )
+    seed = {"hash", "join"}
+    fb = iq.local_topk_core(idx, {"hash": 1.0, "join": 1.0}, 5)
+    passes: list[list[str]] = []
+    core = iq.local_topk_core
+
+    def traced(index, weights, k, row_cache=None):
+        passes.append(sorted(t for t, w in weights.items() if w > 0))
+        return core(index, weights, k, row_cache=row_cache)
+
+    monkeypatch.setattr(iq, "local_topk_core", traced)
+    fetched: list[list[str]] = []
+    fetch = iq._fetch_posting_rows
+
+    def traced_fetch(index, terms):
+        fetched.append(sorted(terms))
+        return fetch(index, terms)
+
+    monkeypatch.setattr(iq, "_fetch_posting_rows", traced_fetch)
+    eng.prf("hash join", k=10)
+    assert len(passes) == 2, passes
+
+    fb_rows = docs.filter(F.col("doc_id").isin([d for d, _ in fb])).collect()
+    texts = {r["doc_id"]: r["text"] for r in fb_rows}
+    mined: dict[str, float] = {}
+    for d, score in sorted(fb):
+        toks = [t for t, _ in tokenize(texts[d] or "")]
+        if not toks:
+            continue
+        s6 = iq.round6_half_up(score)
+        for t, c in Counter(toks).items():
+            if t not in seed:
+                mined[t] = mined.get(t, 0.0) + s6 * c / len(toks)
+    picked = sorted(
+        ((iq.round6_half_up(w), t) for t, w in mined.items()),
+        key=lambda p: (-p[0], p[1]),
+    )[:5]
+    expansion = set()
+    if picked and picked[0][0] > 0:
+        top = picked[0][0]
+        expansion = {
+            t for w, t in picked if iq.round6_half_up(0.5 * w / top) > 0
+        }
+    assert passes[1] == sorted(seed | expansion)
+    assert len(passes[1]) > 2
+    # pass 1 fetched the seed rows; pass 2 fetches only what is not cached
+    assert fetched == [sorted(seed), sorted(expansion)]

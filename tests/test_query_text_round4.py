@@ -1,4 +1,5 @@
-"""Round-4 second-wave operators: boolean retrieval, prefix/wildcard
+"""Round-4 second-wave operators: boolean retrieval, explain and NEAR
+through the serving facade (checked against OracleIndex), prefix/wildcard
 expansion, per-doc keyword extraction, PMI collocations, interpolated
 bigram-LM scoring, SemDeDup-style semantic dedup."""
 
@@ -31,6 +32,22 @@ def index(spark, docs):
     return build_index(spark, docs, id_col="doc_id", text_col="text")
 
 
+@pytest.fixture(scope="module")
+def engine(index):
+    """The serving facade over the in-memory index: the boolean, explain
+    and near routes."""
+    from google_spark.search import SearchEngine
+
+    return SearchEngine(index)
+
+
+@pytest.fixture(scope="module")
+def oracle():
+    from google_spark.oracle import OracleIndex
+
+    return OracleIndex(DOCS)
+
+
 # ---------------------------------------------------------------- boolean
 
 
@@ -43,36 +60,35 @@ def test_parse_boolean_query():
     assert must_not == ["merge"]
 
 
-def test_boolean_must_and_must_not(index):
-    from google_spark.operators.index_query import boolean_topk
-
-    rows = boolean_topk(index, query="+hash join -merge", k=10).collect()
-    got = {r["doc_id"] for r in rows}
+def test_boolean_must_and_must_not(engine, oracle):
+    got = {d for d, _ in engine.boolean(query="+hash join -merge", k=10)}
     # docs with 'hash': 1, 2, 5; with 'merge': 2, 5 -> only doc 1 survives
-    assert got == {1}
+    want = set(oracle.postings["hash"]) - set(oracle.postings["merge"])
+    assert got == want == {1}
 
 
-def test_boolean_no_must_equals_exhaustive(index):
-    from google_spark.operators.index_query import boolean_topk, exhaustive_topk
+def test_boolean_no_must_equals_exhaustive(engine, index):
+    from google_spark.operators.index_query import exhaustive_topk
 
-    a = [(r["doc_id"], round(r["score"], 9)) for r in
-         boolean_topk(index, should=["hash", "join"], k=10).collect()]
+    got = engine.boolean(should=["hash", "join"], k=10)
+    a = [(d, round(s, 9)) for d, s in got]
     b = [(r["doc_id"], round(r["score"], 9)) for r in
          exhaustive_topk(index, "hash join", k=10).collect()]
     assert a == b
 
 
-def test_boolean_all_must(index):
-    from google_spark.operators.index_query import boolean_topk
+def test_boolean_all_must(engine, oracle):
+    got = engine.boolean(must=["hash", "join"], k=10)
+    want = set(oracle.postings["hash"]) & set(oracle.postings["join"])
+    assert {d for d, _ in got} == want == {1, 5}
+    for d, s in got:
+        assert s == pytest.approx(
+            oracle.bm25("hash", d) + oracle.bm25("join", d), abs=1e-6
+        )
 
-    rows = boolean_topk(index, must=["hash", "join"], k=10).collect()
-    assert {r["doc_id"] for r in rows} == {1, 5}
 
-
-def test_boolean_empty_positive_terms(index):
-    from google_spark.operators.index_query import boolean_topk
-
-    assert boolean_topk(index, must_not=["hash"], k=10).count() == 0
+def test_boolean_empty_positive_terms(engine):
+    assert engine.boolean(must_not=["hash"], k=10) == []
 
 
 # ----------------------------------------------------------------- prefix
@@ -205,10 +221,10 @@ def test_regexp_term_cap_keeps_highest_df(index):
 # ---------------------------------------------------------------- explain
 
 
-def test_explain_totals_match_exhaustive(index):
-    from google_spark.operators.index_query import exhaustive_topk, explain_topk
+def test_explain_totals_match_exhaustive(engine, index, oracle):
+    from google_spark.operators.index_query import exhaustive_topk
 
-    exp = explain_topk(index, "hash join", k=10).collect()
+    exp = engine.explain("hash join", k=10)
     want = [
         (r["doc_id"], r["score"])
         for r in exhaustive_topk(index, "hash join", k=10).collect()
@@ -226,53 +242,69 @@ def test_explain_totals_match_exhaustive(index):
     by_doc = defaultdict(float)
     for r in exp:
         by_doc[r["doc_id"]] += r["contribution"]
+        assert r["contribution"] == pytest.approx(
+            r["weight"] * oracle.bm25(r["term"], r["doc_id"]), abs=1e-6
+        )
     for d, s in want:
         assert by_doc[d] == pytest.approx(s, rel=1e-9)
 
 
-def test_explain_weight_is_query_multiplicity(index):
-    from google_spark.operators.index_query import explain_topk
-
-    rows = explain_topk(index, "hash hash join", k=10).collect()
+def test_explain_weight_is_query_multiplicity(engine, oracle):
+    rows = engine.explain("hash hash join", k=10)
     weights = {r["term"]: r["weight"] for r in rows}
     assert weights == {"hash": 2.0, "join": 1.0}
     # doubling a term's weight doubles exactly its contributions
     single = {
         (r["doc_id"], r["term"]): r["contribution"]
-        for r in explain_topk(index, "hash join", k=10).collect()
+        for r in engine.explain("hash join", k=10)
     }
     for r in rows:
         factor = 2.0 if r["term"] == "hash" else 1.0
         assert r["contribution"] == pytest.approx(
             factor * single[(r["doc_id"], r["term"])], rel=1e-12
         )
+        assert r["contribution"] == pytest.approx(
+            factor * oracle.bm25(r["term"], r["doc_id"]), abs=1e-6
+        )
 
 
-def test_explain_empty_and_absent(index):
-    from google_spark.operators.index_query import explain_topk
-
-    assert explain_topk(index, "", k=5).count() == 0
-    assert explain_topk(index, "zzzzqq", k=5).count() == 0
+def test_explain_empty_and_absent(engine):
+    assert engine.explain("", k=5) == []
+    assert engine.explain("zzzzqq", k=5) == []
 
 
 # ------------------------------------------------------------------- near
 
 
-def test_near_gap_and_candidates(index):
-    from google_spark.operators.index_query import near_topk
+def _oracle_near(oracle, a, b, max_gap, ordered=False):
+    """{doc_id: min_gap} from the oracle's positions."""
+    out = {}
+    for d, pa in oracle.postings.get(a, {}).items():
+        pb = oracle.postings.get(b, {}).get(d)
+        if not pb:
+            continue
+        gaps = [y - x for x in pa for y in pb if y > x or not ordered]
+        gaps = [abs(g) for g in gaps]
+        if gaps and min(gaps) <= max_gap:
+            out[d] = min(gaps)
+    return out
 
+
+def test_near_gap_and_candidates(engine, oracle):
     # doc 1: hash@1,3 join@2,4 (gap 1); doc 5: hash@1 join@2 (gap 1);
     # doc 2 has hash but no join; doc 3 has join but no hash
-    rows = near_topk(index, "hash", "join", max_gap=1, k=10).collect()
-    assert {(r["doc_id"], r["min_gap"]) for r in rows} == {(1, 1), (5, 1)}
+    rows = engine.near("hash", "join", max_gap=1, k=10)
+    got = {(r["doc_id"], r["min_gap"]) for r in rows}
+    assert got == set(_oracle_near(oracle, "hash", "join", 1).items())
+    assert got == {(1, 1), (5, 1)}
 
 
-def test_near_scores_match_weighted_or(index):
-    from google_spark.operators.index_query import near_topk, weighted_topk
+def test_near_scores_match_weighted_or(engine, index, oracle):
+    from google_spark.operators.index_query import weighted_topk
 
     near = {
         r["doc_id"]: round(r["score"], 9)
-        for r in near_topk(index, "hash", "join", max_gap=10, k=10).collect()
+        for r in engine.near("hash", "join", max_gap=10, k=10)
     }
     full = {
         r["doc_id"]: round(r["score"], 9)
@@ -280,35 +312,36 @@ def test_near_scores_match_weighted_or(index):
     }
     # every near candidate scores exactly its two-term BM25
     assert near and all(full[d] == s for d, s in near.items())
+    for d, s in near.items():
+        assert s == pytest.approx(
+            oracle.bm25("hash", d) + oracle.bm25("join", d), abs=1e-6
+        )
     # wide gap -> exactly the docs containing BOTH terms
-    assert set(near) == {1, 5}
+    assert set(near) == set(_oracle_near(oracle, "hash", "join", 10)) == {1, 5}
 
 
-def test_near_ordered_direction(index):
-    from google_spark.operators.index_query import near_topk
-
+def test_near_ordered_direction(engine, oracle):
     # 'join ... hash': doc 1 has join@2 before hash@3; doc 5 has join@2
     # but no hash after it
-    rows = near_topk(index, "join", "hash", max_gap=1, k=10, ordered=True).collect()
-    assert {(r["doc_id"], r["min_gap"]) for r in rows} == {(1, 1)}
+    rows = engine.near("join", "hash", max_gap=1, k=10, ordered=True)
+    got = {(r["doc_id"], r["min_gap"]) for r in rows}
+    want = _oracle_near(oracle, "join", "hash", 1, ordered=True)
+    assert got == set(want.items())
+    assert got == {(1, 1)}
     # unordered sees both docs
-    rows = near_topk(index, "join", "hash", max_gap=1, k=10).collect()
+    rows = engine.near("join", "hash", max_gap=1, k=10)
     assert {r["doc_id"] for r in rows} == {1, 5}
 
 
-def test_near_rejects_bad_args(index):
-    from google_spark.operators.index_query import near_topk
-
+def test_near_rejects_bad_args(engine):
     with pytest.raises(ValueError):
-        near_topk(index, "hash", "hash", max_gap=1)
+        engine.near("hash", "hash", max_gap=1)
     with pytest.raises(ValueError):
-        near_topk(index, "hash", "join", max_gap=0)
+        engine.near("hash", "join", max_gap=0)
 
 
-def test_near_absent_term_is_empty(index):
-    from google_spark.operators.index_query import near_topk
-
-    assert near_topk(index, "hash", "zzzz", max_gap=5, k=10).count() == 0
+def test_near_absent_term_is_empty(engine):
+    assert engine.near("hash", "zzzz", max_gap=5, k=10) == []
 
 
 # --------------------------------------------------------------- keywords

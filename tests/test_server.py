@@ -33,6 +33,16 @@ def served(spark, bundle):
     srv.shutdown()
 
 
+@pytest.fixture(scope="module")
+def oracle(served):
+    """OracleIndex over the served bundle's docstore content."""
+    from google_spark.oracle import OracleIndex
+
+    eng, _ = served
+    rows = eng.docs.select("doc_id", "content").collect()
+    return OracleIndex([(r["doc_id"], r["content"]) for r in rows])
+
+
 def _get(base: str, path: str):
     with urllib.request.urlopen(base + path, timeout=30) as resp:
         return resp.status, json.loads(resp.read())
@@ -168,10 +178,10 @@ def test_grep_route(served):
     assert ei.value.code == 400
 
 
-def test_boolean_route_matches_engine_and_operator(served):
-    """/boolean mirrors engine.boolean, which must match the distributed
-    boolean_topk operator on the same bundle (same +/- query syntax)."""
-    from google_spark.operators.index_query import boolean_topk
+def test_boolean_route_matches_engine_and_operator(served, oracle):
+    """/boolean mirrors engine.boolean, whose answer must match the
+    boolean query replayed over OracleIndex postings (same +/- syntax)."""
+    from google_spark.operators.index_query import parse_boolean_query
 
     eng, base = served
     q = "+data partition -merge"
@@ -181,13 +191,17 @@ def test_boolean_route_matches_engine_and_operator(served):
     assert [(r["doc_id"], pytest.approx(r["score"])) for r in body["results"]] == [
         (d, pytest.approx(s)) for d, s in direct
     ]
-    op = [
-        (r["doc_id"], r["score"])
-        for r in boolean_topk(eng.index, q, k=5).collect()
-    ]
-    assert [d for d, _ in direct] == [d for d, _ in op]
-    for (_, a), (_, b) in zip(direct, op):
-        assert a == pytest.approx(b, rel=1e-9)
+    must, should, must_not = parse_boolean_query(q)
+    cand = set.intersection(*(set(oracle.postings[t]) for t in must))
+    for t in must_not:
+        cand -= set(oracle.postings.get(t, {}))
+    want = sorted(
+        ((d, sum(oracle.bm25(t, d) for t in must + should)) for d in cand),
+        key=lambda p: (-p[1], p[0]),
+    )[:5]
+    assert direct and [d for d, _ in direct] == [d for d, _ in want]
+    for (_, a), (_, b) in zip(direct, want):
+        assert a == pytest.approx(b, abs=1e-6)
 
 
 def test_fuzzy_route_finds_typo_matches(served):
@@ -207,11 +221,9 @@ def test_fuzzy_route_finds_typo_matches(served):
     assert status == 200 and body["results"]
 
 
-def test_explain_route_matches_engine_and_operator(served):
+def test_explain_route_matches_engine_and_operator(served, oracle):
     """/explain mirrors engine.explain, whose breakdowns must equal the
-    distributed explain_topk rows on the same bundle."""
-    from google_spark.operators.index_query import explain_topk
-
+    OracleIndex BM25 of every (doc, term) of the oracle's top-k."""
     eng, base = served
     status, body = _get(base, "/explain?query=data+partition&limit=5")
     assert status == 200
@@ -222,13 +234,25 @@ def test_explain_route_matches_engine_and_operator(served):
          "idf": pytest.approx(r["idf"])}
         for r in direct
     ]
-    op = explain_topk(eng.index, "data partition", k=5).collect()
-    assert [(r["doc_id"], r["term"], r["tf"], r["dl"]) for r in op] == [
-        (r["doc_id"], r["term"], r["tf"], r["dl"]) for r in direct
-    ]
-    for a, b in zip(op, direct):
-        assert a["contribution"] == pytest.approx(b["contribution"], rel=1e-9)
-        assert a["score"] == pytest.approx(b["score"], rel=1e-9)
+    top = oracle.topk("data partition", k=5)
+    direct_docs = list(dict.fromkeys(r["doc_id"] for r in direct))
+    assert [d for d, _ in top] == direct_docs
+    want = sorted(
+        (d, t)
+        for d, _ in top
+        for t in ("data", "partition")
+        if d in oracle.postings.get(t, {})
+    )
+    assert sorted((r["doc_id"], r["term"]) for r in direct) == want
+    totals = dict(top)
+    for r in direct:
+        assert r["tf"] == len(oracle.postings[r["term"]][r["doc_id"]])
+        assert r["dl"] == oracle.dl[r["doc_id"]]
+        assert r["idf"] == pytest.approx(oracle.idf(r["term"]), abs=1e-6)
+        assert r["contribution"] == pytest.approx(
+            r["weight"] * oracle.bm25(r["term"], r["doc_id"]), abs=1e-6
+        )
+        assert r["score"] == pytest.approx(totals[r["doc_id"]], abs=1e-6)
 
 
 def test_wildcard_route_matches_engine_and_operator(served):
@@ -337,11 +361,9 @@ def test_regexpterm_route_matches_engine_and_operator(served):
     assert e400.value.code == 400
 
 
-def test_near_route_matches_engine_and_operator(served):
-    """/near mirrors engine.near, whose rows must equal the distributed
-    near_topk's (doc_id, min_gap, score) on the same index."""
-    from google_spark.operators.index_query import near_topk
-
+def test_near_route_matches_engine_and_operator(served, oracle):
+    """/near mirrors engine.near, whose (doc_id, min_gap, score) rows must
+    equal the NEAR query replayed over OracleIndex positions."""
     eng, base = served
     status, body = _get(base, "/near?a=data&b=partition&gap=8&limit=5")
     assert status == 200
@@ -354,12 +376,19 @@ def test_near_route_matches_engine_and_operator(served):
         for r in direct
     ]
     assert body["results"]
-    op = near_topk(eng.index, "data", "partition", max_gap=8, k=5).collect()
-    assert [(r["doc_id"], r["min_gap"]) for r in op] == [
-        (r["doc_id"], r["min_gap"]) for r in direct
+    pa, pb = oracle.postings["data"], oracle.postings["partition"]
+    want = []
+    for d in set(pa) & set(pb):
+        gap = min(abs(y - x) for x in pa[d] for y in pb[d])
+        if gap <= 8:
+            score = oracle.bm25("data", d) + oracle.bm25("partition", d)
+            want.append((d, gap, score))
+    want.sort(key=lambda r: (-r[2], r[0]))
+    assert [(r["doc_id"], r["min_gap"]) for r in direct] == [
+        (d, g) for d, g, _ in want[:5]
     ]
-    for a, b in zip(op, direct):
-        assert a["score"] == pytest.approx(b["score"], rel=1e-9)
+    for r, (_, _, score) in zip(direct, want):
+        assert r["score"] == pytest.approx(score, abs=1e-6)
     # ordered variant flows through; identical terms -> 400, not a 500
     status, body = _get(base, "/near?a=data&b=partition&gap=8&ordered=true")
     assert status == 200
@@ -368,12 +397,40 @@ def test_near_route_matches_engine_and_operator(served):
     assert e400.value.code == 400
 
 
-def test_prf_route_matches_engine_and_operator(served, spark):
-    """/prf mirrors engine.prf, which must match the distributed
-    prf_topk operator on the same corpus (shared round6_half_up grid)."""
-    from google_spark.operators.index_build import build_index
-    from google_spark.operators.index_query import prf_topk
+def _oracle_prf(oracle, query, k, fb_docs=5, fb_terms=5, alpha=0.5):
+    """RM3 replayed over OracleIndex: feedback docs from the oracle's top
+    ``fb_docs``, relevance-mass expansion weights on the 6-dp HALF-UP grid,
+    then the weighted query scored with the oracle's BM25."""
+    from collections import Counter, defaultdict
 
+    from google_spark.operators.index_query import round6_half_up
+
+    seed = Counter(oracle.query_terms(query))
+    fb = sorted(oracle.topk(query, k=fb_docs))
+    mined: dict[str, float] = defaultdict(float)
+    for d, score in fb:
+        s6 = round6_half_up(score)
+        for t, plist in sorted(oracle.postings.items()):
+            if d in plist and t not in seed:
+                mined[t] += s6 * len(plist[d]) / oracle.dl[d]
+    picked = sorted(
+        ((round6_half_up(w), t) for t, w in mined.items()),
+        key=lambda p: (-p[0], p[1]),
+    )[:fb_terms]
+    weights = {t: float(c) for t, c in seed.items()}
+    if picked and picked[0][0] > 0.0:
+        for w, t in picked:
+            weights[t] = round6_half_up(alpha * w / picked[0][0])
+    scores: dict[int, float] = defaultdict(float)
+    for t, w in weights.items():
+        for d in oracle.postings.get(t, {}):
+            scores[d] += w * oracle.bm25(t, d)
+    return sorted(scores.items(), key=lambda p: (-p[1], p[0]))[:k]
+
+
+def test_prf_route_matches_engine_and_operator(served, oracle):
+    """/prf mirrors engine.prf, whose ranking must match RM3 replayed over
+    OracleIndex on the same corpus (shared round6_half_up grid)."""
     eng, base = served
     status, body = _get(base, "/prf?query=data+partition&limit=5")
     assert status == 200
@@ -381,16 +438,10 @@ def test_prf_route_matches_engine_and_operator(served, spark):
     assert [(r["doc_id"], pytest.approx(r["score"])) for r in body["results"]] == [
         (d, pytest.approx(s)) for d, s in direct
     ]
-    # facade == operator: rebuild the distributed index over the same
-    # docstore content and run the operator PRF
-    docs = eng.docs.select(
-        "doc_id", F.col("content").alias("text")
-    )
-    idx = build_index(spark, docs, id_col="doc_id", text_col="text")
-    dist = prf_topk(idx, docs, "data partition", k=5).collect()
-    assert [(d, pytest.approx(s)) for d, s in direct] == [
-        (r["doc_id"], pytest.approx(r["score"])) for r in dist
-    ]
+    want = _oracle_prf(oracle, "data partition", k=5)
+    assert direct and [d for d, _ in direct] == [d for d, _ in want]
+    for (_, a), (_, b) in zip(direct, want):
+        assert a == pytest.approx(b, abs=1e-6)
 
 
 # -- session-free bundle serving ------------------------------------------
