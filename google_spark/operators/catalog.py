@@ -75,6 +75,7 @@ from google_spark.operators.index_build import (
     write_doc_id_file,
     write_index,
 )
+from google_spark.session import LazyParquet, SparkSource
 
 DELETES_SCHEMA = "doc_id long"
 
@@ -808,33 +809,27 @@ class SnapshotCatalog:
         )
         return added.unionByName(deleted).orderBy("change", "doc_id")
 
-    def read(self, spark: SparkSession, version: int | None = None) -> IndexTables:
-        """Resolve a snapshot into IndexTables. Postings are the union of
-        the snapshot's segment scans (tb partition pruning pushes into
-        every child); per-term idf is a lazy re-finalization over segment
-        dfs with the snapshot's n_docs; delete files ride along as a
-        sorted doc_id array the query kernels mask against."""
+    def read(self, spark: SparkSource, version: int | None = None) -> IndexTables:
+        """Resolve a snapshot into IndexTables with no Spark job and no
+        session: postings are a plain handle over the segments' postings
+        roots (served by pyarrow point reads; tb pruning applies to every
+        segment); per-term idf is a derived handle that re-finalizes the
+        segments' dfs with the snapshot's n_docs; delete files ride along
+        as a sorted doc_id array the query kernels mask against. Both
+        handles open through ``spark`` (session, opener, or None for
+        get_spark) only when a distributed path first touches them."""
         m = self.manifest(version)
-        seg_dirs = [os.path.join(self.root, s) for s in m.segments]
-        postings = reduce(
-            DataFrame.unionByName,
-            [spark.read.parquet(f"{d}/postings.parquet") for d in seg_dirs],
-        )
+        seg_dirs = self._seg_dirs(m)
         n_docs = int(m.summary["n_docs"])
-        seg_terms = reduce(
-            DataFrame.unionByName,
-            [
-                spark.read.parquet(f"{d}/terms.parquet").select("term", "df")
-                for d in seg_dirs
-            ],
-        )
         return IndexTables(
-            postings=postings,
-            terms=term_stats(seg_terms, n_docs),
+            postings=LazyParquet([f"{d}/postings.parquet" for d in seg_dirs], spark),
+            terms=LazyParquet(
+                [f"{d}/terms.parquet" for d in seg_dirs], spark,
+                build=lambda df: term_stats(df.select("term", "df"), n_docs),
+            ),
             n_docs=n_docs,
             avgdl=float(m.summary["avgdl"]),
             n_buckets=int(m.summary["n_buckets"]),
-            disk_path=(seg_dirs[0] if len(seg_dirs) == 1 else seg_dirs),
             deletes=self.load_deletes(version),
         )
 

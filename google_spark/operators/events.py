@@ -38,6 +38,9 @@ def funnel_counts(
     """
     if not steps:
         raise ValueError("steps must be non-empty")
+    dups = sorted({s for s in steps if steps.count(s) > 1})
+    if dups:
+        raise ValueError(f"duplicate step names: {dups}")
     spark = events.sparkSession
     step_idx = F.create_map(
         *[x for i, s in enumerate(steps) for x in (F.lit(s), F.lit(i))]

@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from google_spark.functions.tokenizer import tokenize
-from google_spark.session import PARQUET_CODEC, SparkSource
+from google_spark.session import PARQUET_CODEC, SparkSource, point_read
 
 DOC_TERMS_SCHEMA = (
     "doc_id long, dl int, term string, tf int, positions array<int>"
@@ -57,13 +57,11 @@ class IndexTables:
     n_docs: int
     avgdl: float
     n_buckets: int | None = None
-    # Set when the index was read from (or written to) a bucket-partitioned
-    # parquet layout: enables the serving tier's direct pyarrow point
-    # lookups (index_query._fetch_posting_rows) — the KVS `get` analog
-    # with no Spark job on the query path. A snapshot with multiple append
-    # segments (operators.catalog) carries a LIST of segment dirs; the
-    # point-read tier unions their pyarrow datasets.
-    disk_path: str | list[str] | None = None
+    # The bundle directory the index was read from (read_index); None for
+    # in-memory indexes and catalog snapshots. Informational only: the
+    # serving tier's reads dispatch on the tables themselves
+    # (session.point_read).
+    disk_path: str | None = None
     # Sorted int64 array of merge-on-read deleted doc_ids (operators.
     # catalog delete files). Query kernels mask decoded postings against
     # it, so deleted docs vanish from results immediately; df/idf/n_docs/
@@ -72,7 +70,7 @@ class IndexTables:
     deletes: object | None = None
 
     def idf_map(self, terms: list[str]) -> dict[str, float]:
-        rows = self.terms.filter(F.col("term").isin(terms)).collect()
+        rows = point_read(self.terms, "term", terms, ["term", "idf"])
         return {r["term"]: r["idf"] for r in rows}
 
     def matching(self, terms: list[str]) -> DataFrame:

@@ -3,8 +3,9 @@
 scoring core, ``google_spark.bm25_idf``/``bm25_term``.
 
 The serving tier runs on the driver: ``wand_topk_local`` and
-``local_topk_core`` read only the query terms' posting rows (pyarrow point
-reads on a disk-backed index), decode them once into the row cache and
+``local_topk_core`` read only the query terms' posting rows
+(``session.point_read``: pyarrow on a published bundle or catalog
+snapshot), decode them once into the row cache and
 score in NumPy. ``SearchEngine`` builds its boolean, explain, near, PRF,
 fuzzy, wildcard and facet routes on that core.
 
@@ -45,6 +46,7 @@ from google_spark import bm25_idf, bm25_term
 from google_spark.functions.codec import decode_postings_arrays, not_deleted_mask
 from google_spark.functions.tokenizer import tokenize
 from google_spark.operators.index_build import IndexTables, term_stats
+from google_spark.session import point_read
 
 
 def query_terms(query: str, mode: str = "simple", stem: bool = False) -> list[str]:
@@ -65,7 +67,7 @@ DECODED_SCHEMA = "term string, doc_id long, tf int, dl int"
 WAND_FASTPATH_MAX = 5_000_000
 
 
-def _decode_matching(matching: DataFrame, terms: list[str]) -> DataFrame:
+def _decode_matching(matching: DataFrame) -> DataFrame:
     """Decode the matching postings blobs into (term, doc_id, tf, dl) rows.
     ``matching`` comes from IndexTables.matching(): term filter pushed to
     the parquet scan plus bucket partition pruning on disk-backed indexes."""
@@ -368,7 +370,7 @@ def facet_counts(
     if not terms:
         return spark.createDataFrame([], out_schema)
     cand = (
-        _decode_matching(index.matching(terms), terms)
+        _decode_matching(index.matching(terms))
         .select(F.col("doc_id").alias(id_col))
         .distinct()
     )
@@ -428,47 +430,21 @@ _FETCH_COLS = [
 
 
 def _fetch_posting_rows(index: IndexTables, terms: list[str]) -> list:
-    """Posting rows for the given query terms.
+    """Posting rows (``_FETCH_COLS``) for the given query terms, through
+    :func:`~google_spark.session.point_read`: a published bundle or
+    catalog snapshot is read with pyarrow and no Spark job — the analog
+    of the reference's serve-time KVS ``get`` (ref:
+    src/cis5550/jobs/RankScore.java:112,152 does per-word point reads, not
+    a scan job); an in-memory index is one pruned Spark collect. On a
+    bucket-partitioned layout the Python XXH64 twin (functions/xxh.py)
+    computes the ``tb`` buckets the build wrote, so the read opens only
+    those directories."""
+    from google_spark.functions.xxh import term_bucket
 
-    Disk-backed indexes (read_index) are read DIRECTLY with pyarrow: the
-    Python XXH64 twin (functions/xxh.py) computes the same term buckets the
-    build wrote, pyarrow prunes to those ``tb=`` directories and pushes the
-    term predicate into the parquet scan — a point lookup with NO Spark
-    job on the query path. This is the faithful analog of the reference's
-    serve-time KVS ``get`` (ref: src/cis5550/jobs/RankScore.java:112,152
-    does per-word KVS point reads, not a scan job); scheduling a
-    distributed job per interactive query would pay ~100-200ms of fixed
-    overhead to read a few KB. In-memory (just-built) indexes fall back to
-    the pruned Spark collect. The pyarrow dataset handle is memoized on
-    the index so repeated queries skip file discovery."""
-    if index.disk_path:
-        import pyarrow.dataset as ds
-
-        from google_spark.functions.xxh import term_bucket
-
-        dset = getattr(index, "_pa_dataset", None)
-        if dset is None:
-            paths = (
-                index.disk_path
-                if isinstance(index.disk_path, list)
-                else [index.disk_path]
-            )
-            children = [
-                ds.dataset(
-                    f"{p}/postings.parquet", format="parquet", partitioning="hive"
-                )
-                for p in paths
-            ]
-            # multi-segment snapshots (catalog append) serve from a
-            # UnionDataset: the tb/term filters push into every child
-            dset = children[0] if len(children) == 1 else ds.dataset(children)
-            index._pa_dataset = dset
-        expr = ds.field("term").isin(terms)
-        if index.n_buckets:
-            tbs = sorted({term_bucket(t, index.n_buckets) for t in terms})
-            expr = ds.field("tb").isin(tbs) & expr
-        return dset.to_table(filter=expr, columns=_FETCH_COLS).to_pylist()
-    return index.matching(terms).select(*_FETCH_COLS).collect()
+    prune = None
+    if index.n_buckets and "tb" in index.postings.columns:
+        prune = {"tb": sorted({term_bucket(t, index.n_buckets) for t in terms})}
+    return point_read(index.postings, "term", terms, _FETCH_COLS, prune)
 
 
 def _decode_posting_row(row, deletes=None) -> dict:
@@ -773,15 +749,10 @@ def positions_for(
     index: IndexTables, terms: list[str], doc_ids: set[int]
 ) -> dict[str, dict[int, list[int]]]:
     """term -> {doc_id -> positions} for a small candidate set (the
-    proximity re-rank path). The candidate filter runs EXECUTOR-side inside
-    the decode kernel (the candidate set rides in as a closure — it is <=
-    one result page), so the driver receives only |candidates| x |terms|
-    position lists — never a hot term's full posting row, which at web
-    scale is the difference between KBs and GBs per query.
-
-    On a disk-backed index the rows come through the same pyarrow point
-    read the scoring path uses and are decoded in the driver — no Spark
-    job. That is safe under the same assumption wand_topk_local already
+    phrase, proximity and NEAR paths). The terms' posting rows come
+    through :func:`_fetch_posting_rows`, the same read the scoring path
+    makes, and are decoded on the driver; only the candidates' positions
+    are kept. That holds under the assumption wand_topk_local already
     makes (the query terms' posting rows fit one machine); a deployment
     that can't assume it should score with the distributed wand_topk."""
     from google_spark.functions.codec import decode_postings_full_np
@@ -796,42 +767,11 @@ def positions_for(
         cand = cand[not_deleted_mask(cand, index.deletes)]
         if not len(cand):
             return out
-
-    if index.disk_path:
-        for r in _fetch_posting_rows(index, terms):
-            docs, _tfs, _dls, pos = decode_postings_full_np(bytes(r["postings"]))
-            idx = np.minimum(np.searchsorted(cand, docs), len(cand) - 1)
-            for i in np.flatnonzero(cand[idx] == docs):
-                out[r["term"]][int(docs[i])] = pos[i].tolist()
-        return out
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            t_out, d_out, p_out = [], [], []
-            for term, blob in zip(pdf["term"].values, pdf["postings"].values):
-                docs, _tfs, _dls, pos = decode_postings_full_np(bytes(blob))
-                idx = np.minimum(np.searchsorted(cand, docs), len(cand) - 1)
-                hit = np.flatnonzero(cand[idx] == docs)
-                for i in hit:
-                    t_out.append(term)
-                    d_out.append(int(docs[i]))
-                    p_out.append(pos[i].tolist())
-            yield pd.DataFrame(
-                {
-                    "term": pd.Series(t_out, dtype="object"),
-                    "doc_id": pd.Series(d_out, dtype="int64"),
-                    "positions": pd.Series(p_out, dtype="object"),
-                }
-            )
-
-    rows = (
-        index.matching(terms)
-        .select("term", "postings")
-        .mapInPandas(gen, schema="term string, doc_id long, positions array<int>")
-        .collect()
-    )
-    for r in rows:
-        out[r["term"]][r["doc_id"]] = list(r["positions"])
+    for r in _fetch_posting_rows(index, terms):
+        docs, _tfs, _dls, pos = decode_postings_full_np(bytes(r["postings"]))
+        idx = np.minimum(np.searchsorted(cand, docs), len(cand) - 1)
+        for i in np.flatnonzero(cand[idx] == docs):
+            out[r["term"]][int(docs[i])] = pos[i].tolist()
     return out
 
 

@@ -54,6 +54,17 @@ def cosine_topk(
     )
 
 
+def _probe_vector(
+    emb: DataFrame, probe_vec_id: int, id_col: str, vec_col: str
+) -> np.ndarray:
+    """The stored vector of ``probe_vec_id`` as float64; ValueError when
+    no row carries that id."""
+    row = emb.filter(F.col(id_col) == probe_vec_id).select(vec_col).first()
+    if row is None:
+        raise ValueError(f"no vector with {id_col} = {probe_vec_id}")
+    return np.array(row[0], dtype=np.float64)
+
+
 def _planes(dim: int, n_tables: int, n_planes: int, seed: int) -> np.ndarray:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_tables, n_planes, dim))
@@ -116,9 +127,7 @@ def ann_lsh_topk(
     with the probe; exact cosine over candidates only. Recall is tested
     against :func:`cosine_topk` (the judge-visible contract is 'approximate
     but measured', not 'hopefully close')."""
-    dim = len(
-        emb.filter(F.col(id_col) == probe_vec_id).select(vec_col).first()[0]
-    )
+    dim = len(_probe_vector(emb, probe_vec_id, id_col, vec_col))
     buckets = lsh_buckets(
         emb, dim, n_tables=n_tables, n_planes=n_planes, seed=seed,
         id_col=id_col, vec_col=vec_col,
@@ -225,12 +234,9 @@ def ann_ivf_topk(
     lowest-id vectors) with no Lloyd refinement — the engine-portable
     configuration the SQL oracle reproduces bit-for-bit; recall with
     refined centroids is pytest-verified separately."""
+    probe_vec = _probe_vector(emb, probe_vec_id, id_col, vec_col)
     centroids, assigned = ivf_assignments(
         emb, n_centroids=n_centroids, n_iters=n_iters, id_col=id_col, vec_col=vec_col
-    )
-    probe_vec = np.array(
-        emb.filter(F.col(id_col) == probe_vec_id).select(vec_col).first()[0],
-        dtype=np.float64,
     )
     c_norm = centroids / np.maximum(
         np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
@@ -723,14 +729,11 @@ def pq_topk(
     the SQL oracle reproduces bit-for-bit; Lloyd-refined quantization
     error monotonicity is pytest-verified separately — the same
     split the IVF operator uses."""
+    probe = _probe_vector(emb, probe_vec_id, id_col, vec_col)
     books = pq_train(
         emb, m=m, ksub=ksub, n_iters=n_iters, id_col=id_col, vec_col=vec_col
     )
     codes = pq_encode(emb, books, id_col=id_col, vec_col=vec_col)
-    probe = np.array(
-        emb.filter(F.col(id_col) == probe_vec_id).select(vec_col).first()[0],
-        dtype=np.float64,
-    )
     return _adc_topk(codes, books, probe, probe_vec_id, k, id_col)
 
 
@@ -798,13 +801,10 @@ def ivfpq_topk(
     own residual against that list's centroid. ``n_iters`` drives BOTH
     quantizers' Lloyd rounds; 0 = the engine-portable seed
     configuration the SQL oracle reproduces exactly."""
+    probe = _probe_vector(emb, probe_vec_id, id_col, vec_col)
     centroids, assigned = ivf_assignments(
         emb, n_centroids=n_centroids, n_iters=n_iters,
         id_col=id_col, vec_col=vec_col,
-    )
-    probe = np.array(
-        emb.filter(F.col(id_col) == probe_vec_id).select(vec_col).first()[0],
-        dtype=np.float64,
     )
     c_norm = centroids / np.maximum(
         np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12

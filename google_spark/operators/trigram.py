@@ -510,20 +510,11 @@ def read_trigram_index(spark: SparkSource, out_dir: str) -> TrigramIndex:
         with open(os.path.join(seg_dir, "_COMMITTED")) as f:
             n_docs += int(json.load(f)["n_docs"])
 
-    def union(s: SparkSession, name: str) -> DataFrame:
-        parts = [s.read.parquet(f"{r}/{name}") for r in roots]
-        return reduce(lambda a, b: a.unionByName(b), parts)
-
     return TrigramIndex(
-        postings=LazyParquet(
-            f"{out_dir}/gram_postings.parquet", spark,
-            build=lambda s: union(s, "gram_postings.parquet"),
-        ),
+        postings=LazyParquet([f"{r}/gram_postings.parquet" for r in roots], spark),
         stats=LazyParquet(
-            f"{out_dir}/gram_stats.parquet", spark,
-            build=lambda s: union(s, "gram_stats.parquet")
-            .groupBy("gram")
-            .agg(F.sum("df").alias("df")),
+            [f"{r}/gram_stats.parquet" for r in roots], spark,
+            build=lambda df: df.groupBy("gram").agg(F.sum("df").alias("df")),
         ),
         n_docs=n_docs,
         n_buckets=int(meta["n_buckets"]) or None,

@@ -35,7 +35,7 @@ from google_spark.operators.ranking import (
     phrase_match_py,
     proximity_bonus_py,
 )
-from google_spark.session import LazyParquet, SparkSource
+from google_spark.session import LazyParquet, SparkSource, is_plain, point_read
 
 CACHE_TTL_S = 30 * 60  # reference: 30-minute cache GC (SearchApi.java:58)
 CACHE_MAX = 1000  # reference: 1000-entry cap (SearchApi.java:171-188)
@@ -212,14 +212,9 @@ class SearchEngine:
         self._history: dict[str, float] = {}  # query -> last access time
         # term -> DECODED posting entries, with a running byte counter
         self._postings_cache = PostingsCache()
-        # set by load(): doc_id-sorted parquet for driver-side point reads
-        self._meta_path: str | None = None
-        self._docs_path: str | None = None
-        self._meta_ds = None  # memoized pyarrow datasets
-        self._docs_ds = None
         # set by from_catalog(): snapshot source for staleness checks
         self._catalog = None
-        self._catalog_spark: SparkSession | None = None
+        self._catalog_spark: SparkSource = None
         self._catalog_version: int | None = None
         # every catalog tombstone ever propagated to the aux indexes in
         # this engine's lifetime: catalog.compact() EMPTIES the snapshot's
@@ -302,7 +297,7 @@ class SearchEngine:
     @classmethod
     def from_catalog(
         cls,
-        spark: SparkSession,
+        spark: SparkSource,
         catalog,
         ranks: DataFrame | dict[str, float] | None = None,
         doc_meta: DataFrame | None = None,
@@ -322,7 +317,10 @@ class SearchEngine:
         Optional auxiliary indexes (``fielded_index``/``trigram_index``,
         typically built from the same snapshot's docs) inherit the
         snapshot's merge-on-read delete files on every (re-)resolve, so a
-        catalog delete can never resurface through grep/regex or BM25F."""
+        catalog delete can never resurface through grep/regex or BM25F.
+        The snapshot resolves with no session: its tables open through
+        ``spark`` (a session, a zero-argument opener, or None for
+        get_spark) only when a distributed route first touches them."""
         # capture the version BEFORE resolving: a commit landing between
         # read() and head() would otherwise mark the engine current while
         # it serves the older snapshot — permanently stale if that commit
@@ -492,8 +490,9 @@ class SearchEngine:
     @classmethod
     def load(cls, spark: SparkSource, index_dir: str, mode: str = "simple") -> "SearchEngine":
         """Load a published serving bundle (see :meth:`save`) with no Spark
-        job. Postings, meta, and snippet lookups are then served
-        driver-side via pyarrow point reads; every table is a
+        job. Postings, meta, rank and snippet lookups are then served
+        driver-side by :func:`~google_spark.session.point_read`'s pyarrow
+        reads; every table is a
         :class:`~google_spark.session.LazyParquet` handle for the
         distributed paths (grep, symbols, the autocomplete long tail,
         synonym vectors, wand_topk), opened through ``spark`` — a session,
@@ -523,15 +522,12 @@ class SearchEngine:
             word_vectors=table("word_vectors.parquet"),
             fielded_index=findex, trigram_index=tindex,
         )
-        # prime the pyarrow dataset handles now (one directory listing
-        # each) so the FIRST query doesn't pay ~25ms of file discovery
-        index._pa_dataset = index.postings.dataset()
-        if meta is not None:
-            eng._meta_path = meta.path
-            eng._meta_ds = meta.dataset()
-        if docs is not None:
-            eng._docs_path = docs.path
-            eng._docs_ds = docs.dataset()
+        # prime the point-read handles' pyarrow datasets now (one directory
+        # listing each) so the FIRST query doesn't pay ~25ms of file
+        # discovery
+        for h in (index.postings, meta, docs):
+            if h is not None:
+                h.dataset()
         return eng
 
     # -- serving ----------------------------------------------------------
@@ -545,29 +541,7 @@ class SearchEngine:
         pre-joined (caller falls back to :meth:`_ranks_for`)."""
         if self.doc_meta is None or not ids:
             return {}
-        if self._meta_path is not None:
-            # published bundle: doc_id-sorted parquet, row-group pruned
-            # pyarrow point read — no Spark job
-            rows = self._point_read(self._meta_path, "_meta_ds", ids)
-        else:
-            rows = [
-                r.asDict()
-                for r in self.doc_meta.filter(F.col("doc_id").isin(ids)).collect()
-            ]
-        return {r["doc_id"]: r for r in rows}
-
-    def _point_read(self, path: str, memo_attr: str, ids: list[int]) -> list[dict]:
-        """Fetch rows by doc_id from a published doc_id-sorted parquet via
-        pyarrow (row-group statistics prune to the groups whose id range
-        overlaps the request) — the serving tier's KVS ``get``, with the
-        dataset handle memoized so repeat queries skip file discovery."""
-        import pyarrow.dataset as ds
-
-        dset = getattr(self, memo_attr)
-        if dset is None:
-            dset = ds.dataset(path, format="parquet")
-            setattr(self, memo_attr, dset)
-        return dset.to_table(filter=ds.field("doc_id").isin(ids)).to_pylist()
+        return {r["doc_id"]: r for r in point_read(self.doc_meta, "doc_id", ids)}
 
     def _ranks_for(self, repos: set[str]) -> dict[str, float]:
         """PageRank values for the given repos, via the lazily-filled
@@ -575,9 +549,7 @@ class SearchEngine:
         if not self._ranks_complete:
             missing = sorted(r for r in repos if r and r not in self._rank_cache)
             if missing:
-                rows = self.ranks_df.filter(
-                    F.col("node").isin(missing)
-                ).collect()
+                rows = point_read(self.ranks_df, "node", missing, ["node", "rank"])
                 for r in missing:
                     self._rank_cache[r] = DEFAULT_RANK
                 for row in rows:
@@ -804,15 +776,7 @@ class SearchEngine:
 
         if self.docs is None:
             return []
-        if self._docs_path is not None:
-            rows = self._point_read(self._docs_path, "_docs_ds", [doc_id])
-        else:
-            rows = [
-                r.asDict()
-                for r in self.docs.filter(F.col("doc_id") == doc_id)
-                .limit(1)
-                .collect()
-            ]
+        rows = point_read(self.docs, "doc_id", [doc_id], ["doc_id", "content"])
         if not rows or not rows[0].get("content"):
             return []
         tf = Counter(t for t, _ in tokenize(rows[0]["content"], mode=self.mode))
@@ -871,13 +835,7 @@ class SearchEngine:
                 self.index, weights, k, row_cache=self._postings_cache
             )
         ids = [int(d) for d, _ in fb]
-        if self._docs_path is not None:
-            rows = self._point_read(self._docs_path, "_docs_ds", ids)
-        else:
-            rows = [
-                r.asDict()
-                for r in self.docs.filter(F.col("doc_id").isin(ids)).collect()
-            ]
+        rows = point_read(self.docs, "doc_id", ids, ["doc_id", "content"])
         texts = {int(r["doc_id"]): r.get("content") or "" for r in rows}
         # w(t) = round6(Σ_d round6(score_d) · tf/dl), summed in doc_id
         # order so the float sum is deterministic
@@ -1172,8 +1130,8 @@ class SearchEngine:
         Serving shape: the two terms' posting rows come through the same
         point-read/decode cache as plain queries; candidates are the
         NumPy intersection of their doc arrays; positions are fetched
-        ONLY for the co-occurring docs (positions_for filters
-        executor-side). Same one-machine assumption as the rest of the
+        ONLY for the co-occurring docs (positions_for keeps only those).
+        Same one-machine assumption as the rest of the
         serving tier: the two terms' posting rows fit the driver."""
         self._maybe_refresh()
         import numpy as np
@@ -1307,16 +1265,7 @@ class SearchEngine:
         if missing:
             for t in missing:
                 self._idf_cache[t] = 0.0
-            if isinstance(self.index.terms, LazyParquet):
-                import pyarrow.dataset as ds
-
-                rows = self.index.terms.dataset().to_table(
-                    filter=ds.field("term").isin(missing),
-                    columns=["term", "idf"],
-                ).to_pylist()
-                self._idf_cache.update({r["term"]: r["idf"] for r in rows})
-            else:
-                self._idf_cache.update(self.index.idf_map(missing))
+            self._idf_cache.update(self.index.idf_map(missing))
         return self._idf_cache
 
     def _search_uncached(
@@ -1466,10 +1415,7 @@ class SearchEngine:
         if not rows:
             return
         ids = [r.doc_id for r in rows]
-        if self._docs_path is not None:
-            fetched = self._point_read(self._docs_path, "_docs_ds", ids)
-        else:
-            fetched = self.docs.filter(F.col("doc_id").isin(ids)).collect()
+        fetched = point_read(self.docs, "doc_id", ids, ["doc_id", "content"])
         texts = {r["doc_id"]: r["content"] for r in fetched}
         for r in rows:
             text = texts.get(r.doc_id) or ""
@@ -1498,7 +1444,7 @@ class SearchEngine:
         and shared by autocomplete and spell suggestion — bounded driver
         memory at web scale; a pyarrow read of ``terms.parquet`` on a
         published bundle, else one small Spark job total."""
-        if self._vocab is None and isinstance(self.index.terms, LazyParquet):
+        if self._vocab is None and is_plain(self.index.terms):
             import pyarrow.compute as pc
 
             tbl = self.index.terms.dataset().to_table(columns=["term", "df"])

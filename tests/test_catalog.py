@@ -604,3 +604,72 @@ def test_commit_lock_release_is_token_checked(tmp_path):
     with cat._commit_lock():
         assert os.path.exists(lock)
     assert not os.path.exists(lock)
+
+
+def _no_spark(*_a, **_k):
+    raise AssertionError("a catalog snapshot query opened a Spark session")
+
+
+def test_session_free_catalog_snapshot_matches_spark_and_oracle(
+    spark, identified, tmp_path, monkeypatch
+):
+    """A snapshot of two segments plus a delete file opens with no Spark
+    session (``from_catalog(None, ...)``) and answers plain, phrase and
+    ``-term`` queries exactly like the Spark-opened engine: every score
+    equals OracleIndex BM25 (stats stay pre-delete, so the oracle indexes
+    every committed doc) within 1e-6, phrases and exclusions hold, and no
+    deleted doc appears."""
+    import google_spark.session as session
+    from google_spark.operators.ranking import parse_query_ext
+    from google_spark.oracle import OracleIndex
+
+    rows = identified.select("doc_id", "content").orderBy("doc_id").collect()
+    ids = [r["doc_id"] for r in rows]
+    cut = len(ids) * 3 // 4
+    cat = SnapshotCatalog(str(tmp_path / "cat"))
+    cat.commit_build(
+        spark, identified.filter(F.col("doc_id").isin(ids[:cut])),
+        id_col="doc_id", text_col="content",
+    )
+    cat.append_docs(
+        spark, identified.filter(F.col("doc_id").isin(ids[cut:])),
+        id_col="doc_id", text_col="content",
+    )
+    queries = [
+        QUERY, "data partition", "merge sort search", "zzznotthere",
+        '"return result"', '"data data" index', "data -partition",
+        "def index -hash",
+    ]
+    before = SearchEngine.from_catalog(spark, cat)
+    victims = sorted(
+        {r.doc_id for q in queries for r in before.search(q, k=2)}
+        | set(ids[cut::17])
+    )
+    cat.delete_docs(victims)
+    m = cat.manifest()
+    assert len(m.segments) == 2 and m.deletes
+
+    live = SearchEngine.from_catalog(spark, cat)
+    want = {q: live.search(q, k=10) for q in queries}
+    oracle = OracleIndex([(r["doc_id"], r["content"]) for r in rows])
+    monkeypatch.setattr(session, "get_spark", _no_spark)
+    free = SearchEngine.from_catalog(None, cat)
+    for q in queries:
+        got = free.search(q, k=10)
+        assert [(r.doc_id, r.score, r.priority) for r in got] == [
+            (r.doc_id, r.score, r.priority) for r in want[q]
+        ], q
+        assert bool(got) == (q != "zzznotthere"), q
+        assert not {r.doc_id for r in got} & set(victims), q
+        spec = parse_query_ext(q)
+        scored = oracle.query_terms(" ".join(spec.terms))
+        for r in got:
+            assert r.score == pytest.approx(
+                sum(oracle.bm25(t, r.doc_id) for t in scored), abs=1e-6
+            ), (q, r.doc_id)
+            for t in spec.excludes:
+                assert r.doc_id not in oracle.postings.get(t, {}), (q, t)
+            for a, b in spec.phrases:
+                pos = oracle.postings[a][r.doc_id]
+                nxt = set(oracle.postings[b][r.doc_id])
+                assert any(p + 1 in nxt for p in pos), (q, r.doc_id)

@@ -293,8 +293,9 @@ class TestFunnel:
         ev = spark.createDataFrame(
             [], "user_id long, event_type string, ts timestamp"
         )
-        with _pytest.raises(ValueError):
-            funnel_counts(ev, [])
+        for steps, msg in (([], "non-empty"), (["view", "click", "view"], "'view'")):
+            with _pytest.raises(ValueError, match=msg):
+                funnel_counts(ev, steps)
 
 
 class TestRetention:

@@ -215,26 +215,34 @@ def test_autocomplete_complete_trie_skips_fallback(engine):
 
 def test_save_load_serving_bundle(engine, spark, tmp_path_factory):
     """A published bundle must serve the same results as the live engine —
-    same ranked ids/priorities, same snippets — with the point-read paths
-    (postings/meta/docstore pyarrow datasets) active."""
+    same ranked ids/priorities, same snippets — through pyarrow point reads
+    of postings, meta and docstore: its queries with snippets start no
+    Spark job."""
     from google_spark.search import SearchEngine
 
     out = str(tmp_path_factory.mktemp("bundle"))
     engine.save(out)
     loaded = SearchEngine.load(spark, out)
-    assert loaded._meta_path and loaded._docs_path
     assert loaded.index.disk_path == out
     assert "rank" in loaded.doc_meta.columns  # saved pre-joined
 
-    for q in ("data partition", "merge sort", "zzznotthere"):
+    queries = ("data partition", "merge sort", "zzznotthere")
+    sc = spark.sparkContext
+    sc.setJobGroup("bundle-serve", "loaded bundle queries")
+    try:
+        served = {q: loaded.search(q, k=8, snippets=True) for q in queries}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("bundle-serve") == []
+    assert any(r.snippet for r in served["data partition"])
+    for q in queries:
         a = engine.search(q, k=8, snippets=True)
-        b = loaded.search(q, k=8, snippets=True)
         assert [(r.doc_id, round(r.priority, 9), r.path, r.snippet) for r in a] == [
-            (r.doc_id, round(r.priority, 9), r.path, r.snippet) for r in b
+            (r.doc_id, round(r.priority, 9), r.path, r.snippet) for r in served[q]
         ], q
 
-    # proximity re-rank: the bundle serves positions driver-side (pyarrow),
-    # the live engine runs the executor-side kernel — identical results
+    # proximity re-rank: the bundle reads positions with pyarrow, the live
+    # engine with a Spark collect — identical results
     for q in ("data partition", "hash join"):
         a = engine.search(q, k=8, proximity=True)
         b = loaded.search(q, k=8, proximity=True)

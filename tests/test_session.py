@@ -1,8 +1,10 @@
-"""session.py without a JVM: the executor zip is published atomically and
-LazyParquet opens its DataFrame once, only on first use."""
+"""session.py: the executor zip is published atomically, LazyParquet opens
+its DataFrame once, only on first use, and point_read answers a plain
+handle with pyarrow exactly as Spark answers the same rows."""
 
 from __future__ import annotations
 
+import ast
 import copy
 import os
 import sys
@@ -82,7 +84,7 @@ def test_lazy_parquet_columns_open_no_session(tmp_path):
     h = LazyParquet(_table(tmp_path), no_session)
     assert h.columns == ["term", "df"]
     assert h.dataset().to_table().num_rows == 1
-    assert copy.copy(h).path == h.path  # dunder probes never open either
+    assert copy.copy(h).roots == h.roots  # dunder probes never open either
 
 
 def test_lazy_parquet_opens_once_under_concurrent_first_use(tmp_path):
@@ -100,3 +102,87 @@ def test_lazy_parquet_opens_once_under_concurrent_first_use(tmp_path):
         t.join(timeout=30)
     assert not any(t.is_alive() for t in threads)
     assert got == [1] * 16 and fake.opens == 1
+
+
+def _roots(tmp_path) -> list[str]:
+    """Two hive-partitioned roots (tb=0/1) of (term, df) rows, the layout
+    of a two-segment postings table."""
+    terms = iter("abcdefgh")
+    roots = []
+    for r in range(2):
+        for tb in (0, 1):
+            d = tmp_path / f"seg{r}" / f"tb={tb}"
+            d.mkdir(parents=True)
+            rows = [{"term": next(terms), "df": 10 * r + tb} for _ in range(2)]
+            pq.write_table(pa.Table.from_pylist(rows), d / "part-0.parquet")
+        roots.append(str(tmp_path / f"seg{r}"))
+    return roots
+
+
+def test_point_read_plain_handles_match_dataframe(spark, tmp_path):
+    """A plain one-root handle, a plain two-root handle and the equivalent
+    DataFrames return the same rows for present, absent and empty keys —
+    the handles without opening a session — and a derived handle answers
+    through Spark."""
+    from pyspark.sql import functions as F
+
+    from google_spark.session import LazyParquet, point_read
+
+    def no_session():
+        raise AssertionError("a plain point read opened a session")
+
+    roots = _roots(tmp_path)
+    one = spark.read.parquet(roots[0])
+    both = one.unionByName(spark.read.parquet(roots[1]))
+    pairs = [
+        (LazyParquet(roots[0], no_session), one),
+        (LazyParquet(roots, no_session), both),
+    ]
+    key_sets = [["a", "f"], ["b", "c", "h"], ["zz"], ["a", "zz"], []]
+    for handle, df in pairs:
+        assert handle.columns == df.columns == ["term", "df", "tb"]
+        for keys in key_sets:
+            for columns in (None, ["term", "df"]):
+                for prune in (None, {"tb": [1]}):
+                    got = point_read(handle, "term", keys, columns, prune)
+                    want = point_read(df, "term", keys, columns, prune)
+                    assert sorted(got, key=lambda r: r["term"]) == sorted(
+                        want, key=lambda r: r["term"]
+                    ), (keys, columns, prune)
+    assert point_read(pairs[1][0], "term", ["a", "g"], ["term", "df"]) != []
+    assert point_read(pairs[1][0], "term", [], ["term"]) == []
+
+    derived = LazyParquet(
+        roots, spark, build=lambda df: df.groupBy("tb").agg(F.sum("df").alias("df"))
+    )
+    assert not derived.plain and derived._df is None
+    assert derived.columns == ["tb", "df"]  # the derived schema, via Spark
+    assert derived._df is not None
+    got = point_read(derived, "tb", [1], ["tb", "df"])
+    assert got == [{"tb": 1, "df": 1 + 1 + 11 + 11}]
+
+
+def test_pyarrow_dataset_is_imported_only_by_session():
+    """Every pyarrow dataset read in the package goes through
+    session.point_read / LazyParquet.dataset."""
+    import google_spark
+
+    pkg = os.path.dirname(google_spark.__file__)
+    offenders = []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            for node in ast.walk(tree):
+                names = []
+                if isinstance(node, ast.Import):
+                    names = [a.name for a in node.names]
+                elif isinstance(node, ast.ImportFrom) and node.module:
+                    names = [f"{node.module}.{a.name}" for a in node.names]
+                    names.append(node.module)
+                if any(n == "pyarrow.dataset" or n.startswith("pyarrow.dataset.") for n in names):
+                    offenders.append(os.path.relpath(path, pkg))
+    assert sorted(set(offenders)) == ["session.py"], offenders

@@ -209,6 +209,21 @@ def test_ivf_recall_vs_brute_force(spark, emb_df):
     assert recall >= 0.8, (recall, exact, approx)
 
 
+def test_ann_missing_probe_id_raises_value_error(spark, emb_df):
+    """Every probe-by-id search names the missing id in a ValueError
+    (vec_ids in emb_df run 0..95)."""
+    from google_spark.operators.similarity import (
+        ann_ivf_topk,
+        ann_lsh_topk,
+        ivfpq_topk,
+        pq_topk,
+    )
+
+    for search in (ann_lsh_topk, ann_ivf_topk, pq_topk, ivfpq_topk):
+        with pytest.raises(ValueError, match="vec_id = 9999"):
+            search(emb_df, 9999, k=5)
+
+
 def test_ivf_assignments_cover_all_vectors(spark, emb_df):
     from google_spark.operators.similarity import ivf_assignments
 
