@@ -747,18 +747,13 @@ class SnapshotCatalog:
     def load_deletes(self, version: int | None = None) -> np.ndarray | None:
         """Sorted unique deleted doc_ids for a snapshot (None when the
         snapshot carries no delete files)."""
-        import pyarrow.parquet as pq
-
         m = self.manifest(version)
         if not m.deletes:
             return None
-        parts = [
-            pq.read_table(os.path.join(self.root, p), columns=["doc_id"])
-            .column("doc_id")
-            .to_numpy()
-            for p in m.deletes
-        ]
-        return np.unique(np.concatenate(parts).astype(np.int64))
+        tbl = LazyParquet([os.path.join(self.root, p) for p in m.deletes]).read(
+            ["doc_id"]
+        )
+        return np.unique(np.asarray(tbl.column("doc_id").to_pylist(), dtype=np.int64))
 
     def live_doc_ids(
         self, spark: SparkSession, version: int | None = None
@@ -815,9 +810,12 @@ class SnapshotCatalog:
         roots (served by pyarrow point reads; tb pruning applies to every
         segment); per-term idf is a derived handle that re-finalizes the
         segments' dfs with the snapshot's n_docs; delete files ride along
-        as a sorted doc_id array the query kernels mask against. Both
-        handles open through ``spark`` (session, opener, or None for
-        get_spark) only when a distributed path first touches them."""
+        as a sorted doc_id array the query kernels mask against. Segments
+        and deletes come from ONE manifest read, so a commit landing
+        mid-read cannot pair one snapshot's segments with another's
+        deletes. Both handles open through ``spark`` (session, opener, or
+        None for get_spark) only when a distributed path first touches
+        them."""
         m = self.manifest(version)
         seg_dirs = self._seg_dirs(m)
         n_docs = int(m.summary["n_docs"])
@@ -830,7 +828,7 @@ class SnapshotCatalog:
             n_docs=n_docs,
             avgdl=float(m.summary["avgdl"]),
             n_buckets=int(m.summary["n_buckets"]),
-            deletes=self.load_deletes(version),
+            deletes=self.load_deletes(m.version),
         )
 
     # -- maintenance ------------------------------------------------------
@@ -846,7 +844,7 @@ class SnapshotCatalog:
         files. Multi-segment snapshots also fold into ONE segment (the
         append path's read-time union disappears)."""
         m = self.manifest()
-        idx = self.read(spark)
+        idx = self.read(spark, m.version)
         deletes = idx.deletes
         rewritten = _rewrite_postings(idx.postings, deletes)
         # n_pending = tombstones whose removal n_docs does not yet reflect

@@ -25,14 +25,14 @@ from __future__ import annotations
 
 from collections import defaultdict
 from dataclasses import dataclass
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from typing import TYPE_CHECKING, Iterator
 
 from google_spark.functions.tokenizer import tokenize
 from google_spark.session import PARQUET_CODEC, SparkSource, point_read
+
+if TYPE_CHECKING:
+    import pandas as pd
+    from pyspark.sql import Column, DataFrame, SparkSession
 
 DOC_TERMS_SCHEMA = (
     "doc_id long, dl int, term string, tf int, positions array<int>"
@@ -81,6 +81,8 @@ class IndexTables:
         from functools import reduce
         from operator import or_
 
+        from pyspark.sql import functions as F
+
         # term filter first: touching ``postings.filter`` opens a lazy
         # handle's session before any Column is built (Catalyst merges the
         # two filters, so the tb pruning below is unaffected)
@@ -110,6 +112,8 @@ def tokenize_docs(
     ``mapInPandas`` pass (Arrow batches), so the only shuffle in the whole
     build is the groupBy(term, shard) exchange.
     """
+
+    import pandas as pd
 
     from google_spark.functions.tokenizer import tokenize_code, tokenize_simple
 
@@ -160,6 +164,8 @@ def encode_sorted_terms(shard: int, term_arrays) -> pd.DataFrame:
     with arrays already doc_id-sorted; each becomes one compressed posting
     row with block metadata. One definition keeps the batch-build and
     incremental-merge outputs structurally identical by construction."""
+    import pandas as pd
+
     from google_spark.functions.codec import block_metadata_np, encode_postings_np
 
     out: dict[str, list] = {
@@ -228,6 +234,8 @@ def build_postings(
     output rows are byte-identical either way). Size ``n_buckets`` (default
     :data:`N_TERM_BUCKETS`) so one group's postings — roughly
     total_postings / (n_buckets * n_shards) — fits executor memory."""
+    from pyspark.sql import functions as F
+
     if n_buckets is None:
         n_buckets = N_TERM_BUCKETS
     sharded = doc_terms.withColumn(
@@ -243,6 +251,8 @@ def corpus_stats(doc_terms: DataFrame, total_docs: int) -> tuple[int, float]:
     that tokenize to nothing still count toward N and the avgdl denominator
     (matching the oracle). dl is repeated per (doc, term) row, so take
     first(dl) per doc before summing."""
+    from pyspark.sql import functions as F
+
     per_doc = doc_terms.groupBy("doc_id").agg(F.first("dl").alias("dl"))
     row = per_doc.agg(F.sum("dl").alias("total_dl")).collect()[0]
     total_dl = int(row["total_dl"] or 0)
@@ -253,6 +263,8 @@ def term_stats(postings: DataFrame, n_docs: int) -> DataFrame:
     """Global df + BM25 idf per term (the analog of the reference's IDF
     finalize pass, ref: src/cis5550/jobs/Indexer.java:234-246, with
     ln(N/df) replaced by the BM25 idf)."""
+    from pyspark.sql import functions as F
+
     return postings.groupBy("term").agg(F.sum("df").alias("df")).withColumn(
         "idf",
         F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0),
@@ -289,6 +301,8 @@ def build_index(
     term-keyed exchange for the global rank — WindowGroupLimit cuts each
     map task to N rows per term BEFORE the exchange, so the shuffle moves
     at most N x tasks rows per term, not the raw posting count."""
+    from pyspark.sql import functions as F
+
     if total_docs is None:
         total_docs = docs.count()
     doc_terms = tokenize_docs(docs, id_col=id_col, text_col=text_col, mode=mode, stem=stem)
@@ -331,11 +345,13 @@ def build_index(
 N_TERM_BUCKETS = 64
 
 
-def term_bucket_col(term: Column | str, n_buckets: int = N_TERM_BUCKETS) -> F.Column:
+def term_bucket_col(term: Column | str, n_buckets: int = N_TERM_BUCKETS) -> Column:
     """Deterministic term bucket for partition pruning: a query touching k
     terms scans at most k of ``n_buckets`` partitions (the Iceberg
     bucket(term) analog; the reference instead salts rowKeys to spread the
     range partitioner, ref: src/cis5550/jobs/Indexer.java:28-33)."""
+    from pyspark.sql import functions as F
+
     return F.pmod(F.xxhash64(term), F.lit(n_buckets)).cast("int")
 
 
@@ -407,35 +423,21 @@ def write_index(
 def read_delete_file(del_dir: str):
     """Sorted unique int64 doc_id array from a ``deletes.parquet``
     directory (None when absent/empty). Readers union ALL part files, so
-    tombstoning is append-only — see :func:`append_delete_file`."""
+    tombstoning is append-only — see :func:`append_delete_file`. Only
+    committed parts are read (:func:`~google_spark.session.parquet_files`),
+    so a crashed writer's torn staging file never poisons a bundle read."""
     import os
 
     import numpy as np
 
+    from google_spark.session import LazyParquet
+
     if not os.path.isdir(del_dir):
         return None
-    import pyarrow.parquet as pq
-
-    # enumerate committed parts explicitly: pyarrow's directory discovery
-    # only skips '.'/'_' basename PREFIXES, so a crashed writer's torn
-    # '*.parquet.tmp' staging file would be read as parquet and poison
-    # every subsequent bundle read
-    parts = sorted(
-        e.path
-        for e in os.scandir(del_dir)
-        if e.is_file()
-        and e.name.endswith(".parquet")
-        and not e.name.startswith((".", "_"))
-    )
-    if not parts:
+    tbl = LazyParquet(del_dir).read(["doc_id"])
+    if tbl is None or not tbl.num_rows:
         return None
-    ids = np.unique(
-        pq.read_table(parts, columns=["doc_id"])
-        .column("doc_id")
-        .to_numpy()
-        .astype(np.int64)
-    )
-    return ids if len(ids) else None
+    return np.unique(np.asarray(tbl.column("doc_id").to_pylist(), dtype=np.int64))
 
 
 def append_delete_file(del_dir: str, doc_ids) -> int:
@@ -510,11 +512,9 @@ def read_index(spark: SparkSource, out_dir: str) -> IndexTables:
     and terms tables are :class:`~google_spark.session.LazyParquet` handles
     that open through ``spark`` (session, opener, or None for get_spark)
     only when a distributed path first touches them."""
-    import pyarrow.parquet as pq
-
     from google_spark.session import LazyParquet
 
-    row = pq.read_table(f"{out_dir}/stats.parquet").to_pylist()[0]
+    row = LazyParquet(f"{out_dir}/stats.parquet").read().to_pylist()[0]
     deletes = read_delete_file(f"{out_dir}/deletes.parquet")
     return IndexTables(
         postings=LazyParquet(f"{out_dir}/postings.parquet", spark),

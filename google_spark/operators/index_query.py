@@ -35,18 +35,19 @@ Ties break (score desc, doc_id asc) everywhere, including the oracle.
 from __future__ import annotations
 
 from collections import Counter
-from typing import Iterator
+from typing import TYPE_CHECKING, Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from google_spark import bm25_idf, bm25_term
 from google_spark.functions.codec import decode_postings_arrays, not_deleted_mask
 from google_spark.functions.tokenizer import tokenize
 from google_spark.operators.index_build import IndexTables, term_stats
 from google_spark.session import point_read
+
+if TYPE_CHECKING:
+    import pandas as pd
+    from pyspark.sql import DataFrame
 
 
 def query_terms(query: str, mode: str = "simple", stem: bool = False) -> list[str]:
@@ -71,6 +72,7 @@ def _decode_matching(matching: DataFrame) -> DataFrame:
     """Decode the matching postings blobs into (term, doc_id, tf, dl) rows.
     ``matching`` comes from IndexTables.matching(): term filter pushed to
     the parquet scan plus bucket partition pruning on disk-backed indexes."""
+    import pandas as pd
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -134,6 +136,8 @@ def weighted_topk(
     one scan of the pruned per-shard df column) — the decode emits scored
     rows directly and the plan is scan -> kernel -> partial/final sum ->
     TakeOrderedAndProject, with no joins."""
+    import pandas as pd
+    from pyspark.sql import functions as F
 
     spark = index.postings.sparkSession
     qf = {t: float(w) for t, w in weights.items() if w}
@@ -232,6 +236,8 @@ def prefix_topk(
     The dictionary probe is a scan of the (term, df) relation with the
     prefix pushed down as a StartsWith filter; the collect is capped at
     ``max_expand`` rows."""
+    from pyspark.sql import functions as F
+
     spark = index.postings.sparkSession
     rows = (
         index.terms.filter(F.col("term").startswith(prefix))
@@ -285,6 +291,8 @@ def wildcard_topk(
     reversed-term field is the escape hatch when the dictionary itself
     is huge; unnecessary here — a 100 TB corpus has a vocabulary orders
     of magnitude smaller than its postings)."""
+    from pyspark.sql import functions as F
+
     spark = index.postings.sparkSession
     rx = wildcard_regex(pattern)
     terms = index.terms
@@ -321,6 +329,8 @@ def regexp_term_topk(
     in the scan's Filter — O(vocab), corpus-independent (regex literals
     are not extracted into a StartsWith here; anchor-aware prefix
     extraction is what :func:`wildcard_topk` does for its grammar)."""
+    from pyspark.sql import functions as F
+
     spark = index.postings.sparkSession
     # wrap in a non-capturing group so the anchors bind the WHOLE pattern:
     # naive "^" + regex + "$" breaks on top-level alternation ("foo|bar"
@@ -362,6 +372,8 @@ def facet_counts(
     The metadata join is doc_id-keyed, and each facet is a hash aggregate
     over the candidate rows; the per-facet frames union AFTER aggregation,
     so the union carries |distinct values| rows, not candidates."""
+    from pyspark.sql import functions as F
+
     spark = index.postings.sparkSession
     if facet_cols is None:
         facet_cols = ["lang", "source"]
@@ -395,16 +407,12 @@ def facet_counts(
 
 def _topk_from_arrays(
     d_parts: list[np.ndarray], s_parts: list[np.ndarray], k: int
-) -> pd.DataFrame:
-    """Exact top-k (score desc, doc_id asc) from per-term (docs, scores)
-    arrays: one unique + bincount accumulation, boundary ties kept."""
+) -> tuple[np.ndarray, np.ndarray]:
+    """Exact top-k (doc_ids int64, scores float64), ordered (score desc,
+    doc_id asc), from per-term (docs, scores) arrays: one unique +
+    bincount accumulation, boundary ties kept."""
     if not d_parts:
-        return pd.DataFrame(
-            {
-                "doc_id": pd.Series([], dtype="int64"),
-                "score": pd.Series([], dtype="float64"),
-            }
-        )
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
     all_docs = np.concatenate(d_parts)
     all_scores = np.concatenate(s_parts)
     uniq, inv = np.unique(all_docs, return_inverse=True)
@@ -415,12 +423,7 @@ def _topk_from_arrays(
     else:
         cand = np.arange(len(uniq))
     order = cand[np.lexsort((uniq[cand], -sums[cand]))][:k]
-    return pd.DataFrame(
-        {
-            "doc_id": pd.Series(uniq[order], dtype="int64"),
-            "score": pd.Series(sums[order], dtype="float64"),
-        }
-    )
+    return uniq[order], sums[order]
 
 
 _FETCH_COLS = [
@@ -484,14 +487,18 @@ def _wand_shard_kernel(
     k: int,
     deletes=None,
 ) -> pd.DataFrame:
-    """Exact top-k within one shard (see :func:`_kernel_decoded`)."""
-    return _kernel_decoded(
+    """Exact top-k within one shard (see :func:`_kernel_decoded`), as the
+    (doc_id, score) frame ``applyInPandas`` returns."""
+    import pandas as pd
+
+    doc_ids, scores = _kernel_decoded(
         [_decode_posting_row(row, deletes) for _, row in pdf.iterrows()],
         weights,
         idf,
         avgdl,
         k,
     )
+    return pd.DataFrame({"doc_id": doc_ids, "score": scores})
 
 
 def _kernel_decoded(
@@ -500,8 +507,9 @@ def _kernel_decoded(
     idf: dict[str, float],
     avgdl: float,
     k: int,
-) -> pd.DataFrame:
-    """Exact top-k over decoded posting entries.
+) -> tuple[np.ndarray, np.ndarray]:
+    """Exact top-k (doc_ids, scores) over decoded posting entries, ordered
+    (score desc, doc_id asc).
 
     Small candidate sets (<= WAND_FASTPATH_MAX postings) score everything
     with one vectorized accumulation. Above that, block-max segment pruning
@@ -582,6 +590,8 @@ def wand_topk(
     index: IndexTables, query: str, k: int = 10, mode: str = "simple", stem: bool = False
 ) -> DataFrame:
     """DataFrame[doc_id, score] — top-k via per-shard block-max WAND."""
+    from pyspark.sql import functions as F
+
     spark = index.postings.sparkSession
     terms = query_terms(query, mode=mode, stem=stem)
     if not terms:
@@ -650,6 +660,10 @@ def batch_topk(
     Queries that tokenize to nothing (or match no indexed term) simply
     produce no output rows — same contract as ``wand_topk`` returning an
     empty frame."""
+    import pandas as pd
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
     spark = index.postings.sparkSession
     deletes = index.deletes
     n = index.n_docs
@@ -733,8 +747,6 @@ def batch_topk(
         .groupBy("query_id", "doc_id")
         .agg(F.sum("s").alias("score"))
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("doc_id")
     )
@@ -871,8 +883,8 @@ def local_topk_core(
     if not entries:
         return []
     idf = entries_idf(entries, index.n_docs)
-    out = _kernel_decoded(entries, weights, idf, index.avgdl, k)
-    return list(zip(out["doc_id"].tolist(), out["score"].tolist()))
+    doc_ids, scores = _kernel_decoded(entries, weights, idf, index.avgdl, k)
+    return list(zip(doc_ids.tolist(), scores.tolist()))
 
 
 def more_like_this(
@@ -903,6 +915,8 @@ def more_like_this(
     the ordinary distributed WAND path — no corpus scan, no O(corpus)
     state."""
     from collections import Counter as _Counter
+
+    from pyspark.sql import functions as F
 
     from google_spark.functions.tokenizer import tokenize
 

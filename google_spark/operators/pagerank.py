@@ -26,8 +26,10 @@ Spark-first restatement:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 DAMPING = 0.85
 TELEPORT = 0.15
@@ -49,6 +51,8 @@ def extract_import_edges(
     regexp_extract_all -> explode -> semi join; Catalyst prunes ``content``
     out of every post-extract exchange.
     """
+    from pyspark.sql import functions as F
+
     modules = F.regexp_extract_all(F.col(content_col), F.lit(IMPORT_RE), 1)
     edges = (
         source_files.select(
@@ -93,6 +97,8 @@ def pagerank(
     ignored; ranks start at tele. One extra broadcast-sized join per
     iteration on the node grain — the per-iteration shuffle count is
     unchanged."""
+    from pyspark.sql import functions as F
+
     spark = edges.sparkSession
     if nodes is None:
         nodes = (
@@ -203,6 +209,8 @@ def hits(
     localCheckpoint on the same cadence. Rounds are O(|E|) shuffles —
     HITS converges in a few rounds on web-ish graphs, and fixed small
     n_iter is the contract here."""
+    from pyspark.sql import functions as F
+
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -259,6 +267,8 @@ def synthetic_doc_graph(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     to ``(doc_id*17 + k) mod N`` for k in (1, 5, 11), self-loops dropped.
     Any engine can reproduce the exact same edges from doc ids alone, so
     it needs no import statements in the corpus."""
+    from pyspark.sql import functions as F
+
     n = docs.count()
     ks = docs.sparkSession.createDataFrame([(1,), (5,), (11,)], "k int")
     return (
@@ -314,6 +324,8 @@ def anchor_texts(
     the concatenated anchor state for such a module is itself large;
     cap upstream via sampling if a corpus has degenerate hubs).
     """
+    from pyspark.sql import functions as F
+
     lines = F.split(F.col(content_col), "\n")
     shifted = [
         F.concat(
@@ -369,6 +381,8 @@ def extract_href_edges(
     :func:`extract_import_edges` — scan -> JVM regexp -> explode -> Arrow
     normalize kernel -> semi join, with ``page`` pruned out of every
     post-extract exchange."""
+    from pyspark.sql import functions as F
+
     from google_spark.operators.crawler import extract_links_flat
 
     pages = crawled.filter(F.col(page_col).isNotNull())

@@ -20,11 +20,12 @@ min-gap) or in Arrow-batched pandas UDFs over just the k result rows.
 from __future__ import annotations
 
 from dataclasses import dataclass
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from typing import TYPE_CHECKING
 
 from google_spark.functions.tokenizer import tokenize
+
+if TYPE_CHECKING:
+    from pyspark.sql import Column, DataFrame
 
 # Reference weights: pagerank 0.1, tfidf 10, title/url boost 100000
 # (src/cis5550/jobs/RankScore.java:24-31). We keep the same *structure* with
@@ -161,10 +162,12 @@ def phrase_match_py(
     return True
 
 
-def min_gap_col(pa: str, pb: str) -> F.Column:
+def min_gap_col(pa: str, pb: str) -> Column:
     """min over |pa_i - pb_j| with nested JVM higher-order functions — the
     vectorized analog of the reference's pairwise loop (ref:
     src/cis5550/jobs/RankScore.java:269-277)."""
+    from pyspark.sql import functions as F
+
     return F.array_min(
         F.flatten(
             F.transform(pa, lambda x: F.transform(pb, lambda y: F.abs(x - y)))
@@ -197,6 +200,8 @@ def proximity_bonus(doc_terms: DataFrame, terms: list[str]) -> DataFrame:
     """DataFrame[doc_id, prox_bonus]: Σ over adjacent query-term pairs of
     1/min_gap for docs containing both. ``doc_terms`` is the tokenize_docs
     relation (doc_id, term, positions)."""
+    from pyspark.sql import functions as F
+
     spark = doc_terms.sparkSession
     pairs = [(a, b) for a, b in zip(terms, terms[1:]) if a != b]
     if not pairs:
@@ -240,6 +245,8 @@ def priority_score(
     (optional); pass ``title_col`` to boost on docstore titles too (ref:
     src/cis5550/jobs/RankScore.java:51-60 boosts title and url alike).
     """
+    from pyspark.sql import functions as F
+
     scored = bm25_scores
     if doc_meta is not None:
         scored = scored.join(doc_meta, "doc_id", "left")
@@ -288,6 +295,7 @@ def snippets(
     only the k result rows against the doc store (broadcast of the tiny
     side), then one pandas UDF over k rows."""
     import pandas as pd
+    from pyspark.sql import functions as F
 
     lowered = [t.lower() for t in terms]
 
@@ -341,6 +349,8 @@ def bm25f_topk(
     (stats, then scoring) — this is the batch/offline scorer; interactive
     serving stays on the posting index."""
     from collections import Counter
+
+    from pyspark.sql import functions as F
 
     from google_spark.operators.dedup import tokens_col
     from google_spark.operators.docstore import title_col

@@ -31,11 +31,14 @@ of real vocabulary terms (drop/swap/append, length >= 4).
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from typing import TYPE_CHECKING
 
-from google_spark.operators.index_build import IndexTables
+import numpy as np
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
+
+    from google_spark.operators.index_build import IndexTables
 
 
 def suggest_distributed(
@@ -45,6 +48,8 @@ def suggest_distributed(
     The length band |len(v) - len(term)| <= max_dist is a pure prune
     (distance >= length difference); the threshold form of levenshtein
     stops the DP early on hopeless rows."""
+    from pyspark.sql import functions as F
+
     q = term.lower()
     lev = F.levenshtein(F.col("term"), F.lit(q), max_dist)
     return (
@@ -83,6 +88,7 @@ def fuzzy_topk(
     with the |len| band prune and the thresholded JVM levenshtein; the
     per-query-term cap is a WindowGroupLimit top-k heap; the collect is
     bounded at |query terms| * max_expand rows."""
+    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     from google_spark.operators.index_query import query_terms, weighted_topk

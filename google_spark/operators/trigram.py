@@ -496,12 +496,10 @@ def read_trigram_index(spark: SparkSource, out_dir: str) -> TrigramIndex:
     import json
     import os
 
-    import pyarrow.parquet as pq
-
     from google_spark.operators.index_build import read_delete_file
     from google_spark.session import LazyParquet
 
-    meta = pq.read_table(f"{out_dir}/gram_meta.parquet").to_pylist()[0]
+    meta = LazyParquet(f"{out_dir}/gram_meta.parquet").read().to_pylist()[0]
     roots = [out_dir]
     n_docs = int(meta["n_docs"])
     for k in trigram_segments(out_dir):

@@ -12,16 +12,13 @@ everything here is driver-side orchestration of the distributed operators.
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
 from google_spark import bm25_term
 from google_spark.operators.index_build import IndexTables, build_index, read_index
 from google_spark.operators.index_query import wand_topk_local
 from google_spark.operators.pagerank import extract_import_edges, pagerank
-from google_spark.operators.docstore import title_col
 from google_spark.operators.ranking import (
     DEFAULT_RANK,
     W_PATH_BOOST,
@@ -36,6 +33,9 @@ from google_spark.operators.ranking import (
     proximity_bonus_py,
 )
 from google_spark.session import LazyParquet, SparkSource, is_plain, point_read
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 CACHE_TTL_S = 30 * 60  # reference: 30-minute cache GC (SearchApi.java:58)
 CACHE_MAX = 1000  # reference: 1000-entry cap (SearchApi.java:171-188)
@@ -141,6 +141,8 @@ def _with_rank(doc_meta, ranks):
         or "repo" not in doc_meta.columns
     ):
         return doc_meta
+    from pyspark.sql import functions as F
+
     return doc_meta.join(
         F.broadcast(ranks.select(F.col("node").alias("repo"), "rank")),
         "repo",
@@ -241,6 +243,10 @@ class SearchEngine:
         trigram: bool = False,
         trigram_fold_case: bool = False,
     ) -> "SearchEngine":
+        from pyspark.sql import functions as F
+
+        from google_spark.operators.docstore import title_col
+
         index = build_index(
             spark, source_files, id_col=id_col, text_col=text_col,
             mode=mode, n_shards=n_shards,
@@ -517,18 +523,11 @@ class SearchEngine:
             from google_spark.operators.trigram import read_trigram_index
 
             tindex = read_trigram_index(spark, os.path.join(index_dir, "trigram"))
-        eng = cls(
+        return cls(
             index, table("ranks.parquet"), meta, docs, mode=mode,
             word_vectors=table("word_vectors.parquet"),
             fielded_index=findex, trigram_index=tindex,
         )
-        # prime the point-read handles' pyarrow datasets now (one directory
-        # listing each) so the FIRST query doesn't pay ~25ms of file
-        # discovery
-        for h in (index.postings, meta, docs):
-            if h is not None:
-                h.dataset()
-        return eng
 
     # -- serving ----------------------------------------------------------
 
@@ -649,6 +648,8 @@ class SearchEngine:
         between them."""
         if self.docs is None:
             raise ValueError("this surface needs the docstore (docs=)")
+        from pyspark.sql import functions as F
+
         docs = self.docs.select(
             F.col("doc_id"), F.col("content").alias("text")
         )
@@ -687,6 +688,8 @@ class SearchEngine:
             self._maybe_refresh()
         if self.docs is None:
             raise ValueError("grep needs the docstore (docs=) to verify")
+        from pyspark.sql import functions as F
+
         # tombstone masking shared with symbols(): the trigram path ALSO
         # masks via its own deletes (redundant but cheap); the full-scan
         # path has only this
@@ -1447,7 +1450,7 @@ class SearchEngine:
         if self._vocab is None and is_plain(self.index.terms):
             import pyarrow.compute as pc
 
-            tbl = self.index.terms.dataset().to_table(columns=["term", "df"])
+            tbl = self.index.terms.read(["term", "df"])
             # (df desc, term asc): the Spark orderBy below, ties included
             # (both compare strings by UTF-8 bytes)
             keys = [("df", "descending"), ("term", "ascending")]
@@ -1460,6 +1463,8 @@ class SearchEngine:
                 )
             ]
         if self._vocab is None:
+            from pyspark.sql import functions as F
+
             self._vocab = [
                 (r["term"], int(r["df"]))
                 for r in self.index.terms.orderBy(F.desc("df"), F.asc("term"))
@@ -1532,6 +1537,8 @@ class SearchEngine:
         """Distributed completion path: prefix filter pushed into the terms
         scan, top-``limit`` by df. One small Spark job; serves the long tail
         the capped trie drops."""
+        from pyspark.sql import functions as F
+
         rows = (
             self.index.terms.filter(F.col("term").startswith(prefix.lower()))
             .orderBy(F.desc("df"), F.asc("term"))

@@ -7,9 +7,12 @@ Blocks serving GET /search, /autocomplete, /history, /health (see
 google_spark/server.py). The bundle opens with pyarrow alone and no JVM
 starts: every point-read route (/search, /suggest, /autocomplete within
 the trie, /facets, /explain, /related, /wildcard, ...) is answered
-without Spark. The Spark session — ``local[--cores]``, app ``serve`` — is
-started by the first route that runs a distributed job (/grep, /symbol,
-the autocomplete scan past the trie cap, /synonym with word vectors).
+without Spark, and the process imports only NumPy and pyarrow
+(``pq.ParquetFile`` reads) — neither pandas, pyspark nor
+``pyarrow.dataset``. The Spark session — ``local[--cores]``, app
+``serve`` — is started by the first route that runs a distributed job
+(/grep, /symbol, the autocomplete scan past the trie cap, /synonym with
+word vectors); pyspark is imported then.
 """
 
 from __future__ import annotations

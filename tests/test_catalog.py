@@ -673,3 +673,19 @@ def test_session_free_catalog_snapshot_matches_spark_and_oracle(
                 pos = oracle.postings[a][r.doc_id]
                 nxt = set(oracle.postings[b][r.doc_id])
                 assert any(p + 1 in nxt for p in pos), (q, r.doc_id)
+
+
+def test_read_takes_deletes_from_the_manifest_it_resolved(
+    spark, identified, tmp_path, monkeypatch
+):
+    """read(version=None) resolves HEAD once: a delete commit landing
+    between its manifest read and its delete read must not pair v1's
+    segments with v2's delete files."""
+    cat = _mk_catalog(tmp_path, spark, identified)
+    victim = int(identified.select("doc_id").first()[0])
+    assert cat.delete_docs([victim]) == 2
+    heads = iter([1, 2, 2, 2])
+    monkeypatch.setattr(cat, "head", lambda: next(heads))
+    idx = cat.read(None)
+    assert idx.deletes is None
+    assert cat.read(None).deletes.tolist() == [victim]

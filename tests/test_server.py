@@ -493,6 +493,80 @@ def test_session_free_bundle_answers_point_read_routes(spark, bundle, served, mo
         assert got[p] == _get(served[1], p), p
 
 
+_FRESH_SERVE = r"""
+import json
+import sys
+import urllib.request
+
+from google_spark.search import SearchEngine
+from google_spark.server import start_server
+
+bodies = {}
+for bundle, paths in json.loads(sys.argv[1]):
+    srv = start_server(SearchEngine.load(None, bundle))
+    host, port = srv.server_address
+    try:
+        for p in paths:
+            url = f"http://{host}:{port}{p}"
+            with urllib.request.urlopen(url, timeout=30) as resp:
+                bodies[bundle + p] = [resp.status, json.loads(resp.read())]
+    finally:
+        srv.shutdown()
+banned = sorted(
+    m for m in sys.modules
+    if m.split(".")[0] in ("pandas", "pyspark", "py4j")
+    or m.startswith(("pyarrow.dataset", "pyarrow._dataset", "pyarrow.acero", "pyarrow._acero"))
+)
+print(json.dumps({"bodies": bodies, "banned": banned}))
+"""
+
+
+def test_fresh_interpreter_serves_bundles_without_pandas_or_spark(
+    spark, bundle, served, tmp_path
+):
+    """A new interpreter loads the bundle, and a copy with tombstones,
+    with ``spark=None`` and serves every point-read route plus /related
+    without importing pandas, pyspark, py4j, pyarrow.dataset or
+    pyarrow.acero; every body equals the Spark-loaded engine's."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    from google_spark.operators.index_build import delete_from_index
+    from google_spark.search import SearchEngine
+    from google_spark.server import start_server
+
+    top = [r.doc_id for r in served[0].search("data partition", k=3)]
+    tomb = str(tmp_path / "tombstoned")
+    shutil.copytree(bundle, tomb)
+    assert delete_from_index(tomb, top[:2]) == 2
+    paths = _POINT_READ_PATHS + [f"/related?doc_id={top[2]}&limit=5"]
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join([root, os.environ.get("PYTHONPATH", "")])}
+    proc = subprocess.run(
+        [sys.executable, "-c", _FRESH_SERVE, json.dumps([[bundle, paths], [tomb, paths]])],
+        capture_output=True, text=True, timeout=600, env=env, cwd=str(tmp_path),
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["banned"] == []
+
+    tomb_srv = start_server(SearchEngine.load(spark, tomb))
+    host, port = tomb_srv.server_address
+    try:
+        want = {bundle + p: list(_get(served[1], p)) for p in paths}
+        want.update({tomb + p: list(_get(f"http://{host}:{port}", p)) for p in paths})
+    finally:
+        tomb_srv.shutdown()
+    assert got["bodies"] == want
+    # the tombstones took effect: the deleted docs left the first query
+    first = paths[0]
+    ids = [r["doc_id"] for r in got["bodies"][tomb + first][1]["results"]]
+    assert ids and not set(ids) & set(top[:2])
+    assert got["bodies"][bundle + first] != got["bodies"][tomb + first]
+
+
 def test_session_free_grep_opens_session_on_first_use(bundle, served):
     """/grep on a session-free engine starts Spark through the lazy
     handle and answers like the Spark-loaded engine."""

@@ -83,7 +83,7 @@ def test_lazy_parquet_columns_open_no_session(tmp_path):
 
     h = LazyParquet(_table(tmp_path), no_session)
     assert h.columns == ["term", "df"]
-    assert h.dataset().to_table().num_rows == 1
+    assert h.read().to_pylist() == [{"term": "a", "df": 1}]
     assert copy.copy(h).roots == h.roots  # dunder probes never open either
 
 
@@ -106,7 +106,10 @@ def test_lazy_parquet_opens_once_under_concurrent_first_use(tmp_path):
 
 def _roots(tmp_path) -> list[str]:
     """Two hive-partitioned roots (tb=0/1) of (term, df) rows, the layout
-    of a two-segment postings table."""
+    of a two-segment postings table, plus a third root whose one file
+    holds several row groups of sorted terms (so reads prune row groups)
+    beside what a directory reader must skip: Spark's ``_SUCCESS`` and
+    ``.crc`` files, and a torn ``*.parquet.tmp`` staging file."""
     terms = iter("abcdefgh")
     roots = []
     for r in range(2):
@@ -116,14 +119,24 @@ def _roots(tmp_path) -> list[str]:
             rows = [{"term": next(terms), "df": 10 * r + tb} for _ in range(2)]
             pq.write_table(pa.Table.from_pylist(rows), d / "part-0.parquet")
         roots.append(str(tmp_path / f"seg{r}"))
+    d = tmp_path / "seg2" / "tb=1"
+    d.mkdir(parents=True)
+    rows = [{"term": f"m{i:02d}", "df": i} for i in range(12)]
+    pq.write_table(pa.Table.from_pylist(rows), d / "part-0.parquet", row_group_size=3)
+    assert pq.ParquetFile(d / "part-0.parquet").num_row_groups == 4
+    (d / "_SUCCESS").write_bytes(b"")
+    (d / ".part-2.parquet.crc").write_bytes(b"not parquet")
+    (d / "part-1.parquet.tmp").write_bytes(b"PAR1 torn")
+    roots.append(str(tmp_path / "seg2"))
     return roots
 
 
-def test_point_read_plain_handles_match_dataframe(spark, tmp_path):
-    """A plain one-root handle, a plain two-root handle and the equivalent
-    DataFrames return the same rows for present, absent and empty keys —
-    the handles without opening a session — and a derived handle answers
-    through Spark."""
+def test_point_read_plain_handles_match_dataframe(spark, tmp_path, monkeypatch):
+    """Plain handles over one root, over two roots and over a root of
+    several row groups beside non-data files return the same rows as the
+    equivalent DataFrames for present, absent and empty keys — the handles
+    without opening a session — and a derived handle answers through
+    Spark."""
     from pyspark.sql import functions as F
 
     from google_spark.session import LazyParquet, point_read
@@ -134,11 +147,19 @@ def test_point_read_plain_handles_match_dataframe(spark, tmp_path):
     roots = _roots(tmp_path)
     one = spark.read.parquet(roots[0])
     both = one.unionByName(spark.read.parquet(roots[1]))
+    # Spark would read the torn file, so its frame comes from the file alone
+    groups = spark.read.parquet(f"{roots[2]}/tb=1/part-0.parquet").withColumn(
+        "tb", F.lit(1)
+    )
     pairs = [
         (LazyParquet(roots[0], no_session), one),
-        (LazyParquet(roots, no_session), both),
+        (LazyParquet(roots[:2], no_session), both),
+        (LazyParquet(roots[2], no_session), groups),
     ]
-    key_sets = [["a", "f"], ["b", "c", "h"], ["zz"], ["a", "zz"], []]
+    key_sets = [
+        ["a", "f"], ["b", "c", "h"], ["zz"], ["a", "zz"], [],
+        ["m00"], ["m04", "m05", "m11"], ["m02", "m03", "zz"], ["l", "m055"],
+    ]
     for handle, df in pairs:
         assert handle.columns == df.columns == ["term", "df", "tb"]
         for keys in key_sets:
@@ -150,10 +171,24 @@ def test_point_read_plain_handles_match_dataframe(spark, tmp_path):
                         want, key=lambda r: r["term"]
                     ), (keys, columns, prune)
     assert point_read(pairs[1][0], "term", ["a", "g"], ["term", "df"]) != []
+    # the footer's min/max keep only the row groups holding a key
+    read_groups = []
+    real = pq.ParquetFile.read_row_groups
+
+    def spy(self, row_groups, **kw):
+        read_groups.append(list(row_groups))
+        return real(self, row_groups, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy)
+    assert point_read(pairs[2][0], "term", ["m04", "m11"], ["df"]) == [
+        {"df": 4}, {"df": 11}
+    ]
+    assert read_groups == [[1, 3]]
+    monkeypatch.undo()
     assert point_read(pairs[1][0], "term", [], ["term"]) == []
 
     derived = LazyParquet(
-        roots, spark, build=lambda df: df.groupBy("tb").agg(F.sum("df").alias("df"))
+        roots[:2], spark, build=lambda df: df.groupBy("tb").agg(F.sum("df").alias("df"))
     )
     assert not derived.plain and derived._df is None
     assert derived.columns == ["tb", "df"]  # the derived schema, via Spark
@@ -163,8 +198,9 @@ def test_point_read_plain_handles_match_dataframe(spark, tmp_path):
 
 
 def test_pyarrow_dataset_is_imported_only_by_session():
-    """Every pyarrow dataset read in the package goes through
-    session.point_read / LazyParquet.dataset."""
+    """No module of the package imports pyarrow.dataset: it imports pandas,
+    and the serving process reads parquet with ``pq.ParquetFile`` alone
+    (session.point_read / LazyParquet.read)."""
     import google_spark
 
     pkg = os.path.dirname(google_spark.__file__)
@@ -185,4 +221,4 @@ def test_pyarrow_dataset_is_imported_only_by_session():
                     names.append(node.module)
                 if any(n == "pyarrow.dataset" or n.startswith("pyarrow.dataset.") for n in names):
                     offenders.append(os.path.relpath(path, pkg))
-    assert sorted(set(offenders)) == ["session.py"], offenders
+    assert offenders == [], offenders
