@@ -204,8 +204,11 @@ def hits(
     ``pagerank(exact_iters=...)``).
 
     Scale shape mirrors :func:`pagerank`: each half-step is one edge-keyed
-    join plus one hash aggregate at node grain; the normalizer rides in as
-    a broadcast scalar (no collect); lineage is truncated with
+    join plus one hash aggregate at node grain; the normalizer is collected
+    as a scalar (one one-row job), so each half-step's plan holds the
+    previous vector once — a normalizer joined back in as a subplan holds
+    it twice, and the plan doubles every half-step (three rounds on a
+    4-edge graph took an 11 GB driver). Lineage is truncated with
     localCheckpoint on the same cadence. Rounds are O(|E|) shuffles —
     HITS converges in a few rounds on web-ish graphs, and fixed small
     n_iter is the contract here."""
@@ -220,10 +223,8 @@ def hits(
     )
 
     def _normalize(df: DataFrame, col: str) -> DataFrame:
-        total = df.agg(F.sum(col).alias("_t"))
-        return df.crossJoin(F.broadcast(total)).select(
-            "node", (F.col(col) / F.col("_t")).alias(col)
-        )
+        total = df.agg(F.sum(col).alias("_t")).collect()[0]["_t"]
+        return df.select("node", (F.col(col) / F.lit(total)).alias(col))
 
     h = nodes.withColumn("hub", F.lit(1.0))
     a = nodes.withColumn("authority", F.lit(0.0))

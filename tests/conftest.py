@@ -7,7 +7,10 @@ import pytest
 def spark():
     from google_spark.session import get_spark
 
-    s = get_spark(app="google_spark_tests")
+    # The test tables are a few hundred rows: 8 shuffle partitions (twice
+    # the usual 4 cores) instead of the engine's 32 cuts the per-task cost
+    # that dominates every shuffle at this size.
+    s = get_spark(app="google_spark_tests", shuffle_partitions=8)
     yield s
     s.stop()
 
