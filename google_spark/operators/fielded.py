@@ -29,12 +29,9 @@ path is pytest-pinned (test_ranking).
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
+from typing import TYPE_CHECKING, Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from google_spark import bm25_idf
 from google_spark.operators.index_build import (
@@ -43,6 +40,11 @@ from google_spark.operators.index_build import (
     read_index,
     write_index,
 )
+
+if TYPE_CHECKING:
+    import pandas as pd
+    from pyspark.sql import DataFrame, SparkSession
+
 
 def _merge_extra_weights(wb: dict, weights: dict | None) -> None:
     """Fold EXTRA-field weights into the built-in map. title/body have
@@ -100,6 +102,8 @@ def build_fielded_index(
     matches the scan-path convention, and is scored by
     :func:`bm25f_index_topk` with weight (1.0, 0.75) unless overridden
     via its ``weights`` argument."""
+    from pyspark.sql import functions as F
+
     from google_spark.operators.docstore import title_col
 
     total = docs.count()
@@ -207,6 +211,8 @@ def _field_component_rows(
     the pruned postings scan, no shuffle (float op order mirrors
     ranking.bm25f_topk exactly, checked by
     tests/test_ranking.py::test_bm25f_index_topk_parity_with_scan_path)."""
+    import pandas as pd
+
     from google_spark.functions.codec import (
         decode_postings_arrays,
         not_deleted_mask,
@@ -354,6 +360,8 @@ def bm25f_index_topk(
     default to ``(1.0, 0.75)``, and title/body keep their dedicated
     keyword arguments."""
     from collections import Counter
+
+    from pyspark.sql import functions as F
 
     from google_spark.operators.ranking import normalize_query
 

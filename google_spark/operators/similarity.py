@@ -840,17 +840,20 @@ def ivfpq_topk(
             lambda a, b: a.cast("double") - b,
         ).alias("r"),
     )
-    # codebook training EXCLUDES the coarse seeds: a seed vector always
-    # self-assigns (cosine 1.0 to itself), so its residual is the zero
+    # with no Lloyd round the centroids ARE the seed vectors, so a seed
+    # self-assigns (cosine 1.0 to itself) and its residual is the zero
     # vector — seeding the residual codebooks from them would collapse
-    # every centroid to ~0 and the quantizer would carry no information
-    seed_ids = [
-        r[0]
-        for r in emb.orderBy(id_col).limit(n_centroids).select(id_col).collect()
-    ]
+    # every centroid to ~0, so training excludes them. After a round the
+    # centroids have moved and the seeds' residuals carry information.
+    train = with_r
+    if n_iters == 0:
+        seed_ids = [
+            r[0]
+            for r in emb.orderBy(id_col).limit(n_centroids).select(id_col).collect()
+        ]
+        train = with_r.filter(~F.col(id_col).isin(seed_ids))
     books = pq_train(
-        with_r.filter(~F.col(id_col).isin(seed_ids)),
-        m=m, ksub=ksub, n_iters=n_iters, id_col=id_col, vec_col="r",
+        train, m=m, ksub=ksub, n_iters=n_iters, id_col=id_col, vec_col="r",
     )
     cand_r = with_r.join(cand_ids, id_col, "left_semi")
     codes = pq_encode(cand_r, books, id_col=id_col, vec_col="r").join(

@@ -42,9 +42,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 from functools import reduce
-
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from typing import TYPE_CHECKING
 
 from google_spark.fsutil import atomic_write
 from google_spark.operators.index_build import (
@@ -52,6 +50,9 @@ from google_spark.operators.index_build import (
     write_bucketed_postings,
 )
 from google_spark.session import SparkSource
+
+if TYPE_CHECKING:
+    from pyspark.sql import Column, DataFrame, SparkSession
 
 try:  # Python 3.11+ moved sre_parse; both expose the same parse()
     from re import _parser as _sre
@@ -366,6 +367,8 @@ class TrigramIndex:
     def matching(self, grams: list[str]) -> DataFrame:
         from operator import or_
 
+        from pyspark.sql import functions as F
+
         # gram filter first, so a lazy handle opens before any Column is
         # built (see IndexTables.matching)
         df = self.postings.filter(F.col("gram").isin(grams))
@@ -381,6 +384,8 @@ class TrigramIndex:
         return df
 
     def df_map(self, grams: list[str]) -> dict[str, int]:
+        from pyspark.sql import functions as F
+
         rows = self.stats.filter(F.col("gram").isin(grams)).collect()
         return {r["gram"]: int(r["df"]) for r in rows}
 
@@ -391,6 +396,8 @@ def doc_trigram_col(text_col: str = "text", fold_case: bool = False) -> Column:
     (doc, gram) once. Texts shorter than 3 chars yield an empty array
     (``sequence`` with start > stop would count DOWN, so it is guarded).
     With ``fold_case`` grams come from ``lower(text)``."""
+    from pyspark.sql import functions as F
+
     t = F.lower(F.col(text_col)) if fold_case else F.col(text_col)
     grams = F.transform(
         F.sequence(F.lit(1), F.length(t) - F.lit(2)),
@@ -417,6 +424,8 @@ def build_trigram_index(
     index that serves case-insensitive queries (the ripgrep ``-i``
     analog) — and still serves case-sensitive ones, with folded grams for
     candidates and exact-case verification."""
+    from pyspark.sql import functions as F
+
     if total_docs is None:
         total_docs = docs.count()
     pairs = docs.select(
@@ -434,9 +443,7 @@ def build_trigram_index(
         )
     ).persist()
     postings.count()
-    stats = (
-        postings.groupBy("gram").agg(F.sum("df").alias("df"))
-    ).persist()
+    stats = _sum_gram_df(postings).persist()
     return TrigramIndex(
         postings=postings, stats=stats, n_docs=total_docs,
         fold_case=fold_case,
@@ -512,7 +519,7 @@ def read_trigram_index(spark: SparkSource, out_dir: str) -> TrigramIndex:
         postings=LazyParquet([f"{r}/gram_postings.parquet" for r in roots], spark),
         stats=LazyParquet(
             [f"{r}/gram_stats.parquet" for r in roots], spark,
-            build=lambda df: df.groupBy("gram").agg(F.sum("df").alias("df")),
+            build=_sum_gram_df,
         ),
         n_docs=n_docs,
         n_buckets=int(meta["n_buckets"]) or None,
@@ -520,6 +527,14 @@ def read_trigram_index(spark: SparkSource, out_dir: str) -> TrigramIndex:
         fold_case=bool(meta.get("fold_case", False)),
         deletes=read_delete_file(f"{out_dir}/deletes.parquet"),
     )
+
+
+def _sum_gram_df(stats: DataFrame) -> DataFrame:
+    """Per-gram df summed over ``stats`` rows (shards, or the stats of a
+    base and its segments)."""
+    from pyspark.sql import functions as F
+
+    return stats.groupBy("gram").agg(F.sum("df").alias("df"))
 
 
 def delete_from_trigram_index(out_dir: str, doc_ids) -> int:
@@ -732,6 +747,8 @@ def compact_trigram_index(
     snapshot-catalog read does this automatically; a raw table that still
     contains deleted text can resurface it through the fallback, exactly
     as it would for any doc that was never indexed)."""
+    from pyspark.sql import functions as F
+
     idx = read_trigram_index(spark, out_dir)
     n_docs = idx.n_docs
     if idx.deletes is not None and len(idx.deletes):
@@ -769,7 +786,7 @@ def compact_trigram_index(
             F.sort_array(F.flatten(F.collect_list("doc_ids"))).alias("doc_ids"),
             F.sum("df").alias("df"),
         )
-    stats = merged.groupBy("gram").agg(F.sum("df").alias("df"))
+    stats = _sum_gram_df(merged)
     out = TrigramIndex(
         postings=merged,
         stats=stats,
@@ -797,6 +814,8 @@ def compact_trigram_index(
 
 
 def _candidate_expr(q, grams_col: Column) -> Column:
+    from pyspark.sql import functions as F
+
     if q[0] == "gram":
         return F.array_contains(grams_col, q[1])
     kind, kids = q
@@ -811,6 +830,8 @@ def regex_candidates(index: TrigramIndex, q) -> DataFrame:
     """doc_ids that satisfy the trigram query — a SUPERSET of the regex's
     matches. One pruned postings scan, one groupBy(doc_id), then a JVM
     boolean filter; nothing touches the driver."""
+    from pyspark.sql import functions as F
+
     grams = sorted(query_grams(q))
     per_doc = (
         index.matching(grams)
@@ -841,6 +862,8 @@ def _mask_docs(docs: DataFrame, id_col: str, deletes) -> DataFrame:
     ids driver-side instead). Small delete sets become a NOT IN conjunct
     the parquet scan can evaluate per row group; larger ones a broadcast
     anti-join, so the plan never carries a multi-MB literal list."""
+    from pyspark.sql import functions as F
+
     if deletes is None or not len(deletes):
         return docs
     if len(deletes) <= 10_000:
@@ -889,6 +912,8 @@ def _prune_to_candidates(
     aggregate, and re-reading that fraction of the corpus would all cost
     ~corpus anyway, so ONE verification scan is strictly cheaper. Common
     on tiny-vocabulary corpora and for patterns made of stop-grams."""
+    from pyspark.sql import functions as F
+
     verify = f"(?i){pattern}" if case_insensitive else pattern
     # merge-on-read tombstones: the fallback scan filters them out of the
     # corpus; the indexed path masks the collected candidate ids instead
@@ -949,6 +974,8 @@ def regex_search(
     (``regexp_extract`` group 0). ``case_insensitive`` needs an index
     built with ``fold_case=True`` to stay indexed (ASCII folding; see
     :func:`trigram_query`)."""
+    from pyspark.sql import functions as F
+
     cand, verify = _prune_to_candidates(
         index, docs, pattern, case_insensitive, prune_keep, id_col,
         max_candidate_frac=max_candidate_frac,
@@ -987,6 +1014,8 @@ def grep_lines(
     raw text including ``\\n`` chars — so a pattern whose trigrams would
     have to span lines simply yields extra candidates, never misses
     (trigrams of the matching line are a subset of the doc's trigrams)."""
+    from pyspark.sql import functions as F
+
     cand, verify = _prune_to_candidates(
         index, docs, pattern, case_insensitive, prune_keep, id_col,
         max_candidate_frac=max_candidate_frac,

@@ -12,7 +12,6 @@ import os
 import tempfile
 import threading
 import zipfile
-from concurrent.futures import ThreadPoolExecutor
 from typing import TYPE_CHECKING, Callable, Union
 
 import numpy as np
@@ -305,23 +304,21 @@ def _arrow_values(values: list) -> pa.Array:
     return pa.Array.from_buffers(pa.int64(), len(ints), [None, pa.py_buffer(ints)])
 
 
-_pool: ThreadPoolExecutor | None = None
-
-
 def _point_read_plain(
     table: LazyParquet, key: str, where: dict[str, list], columns
 ) -> list[dict]:
-    """Files are read in parallel, as a pyarrow dataset scan would: a
-    docstore read decompresses one row group per file."""
-    global _pool
+    """The matching rows of each file, read one file after another: a file
+    is skipped on its partition values and, inside it, every row group
+    whose ``key`` min/max holds none of the keys."""
     sorted_keys = sorted(set(where[key]))
-
-    def read(file: tuple[str, dict]) -> list[dict]:
-        path, part = file
+    out = []
+    for path, part in table.files():
+        if not all(part[c] in v for c, v in where.items() if c in part):
+            continue
         ft = table._footer(path)
         rgs = ft.row_groups(key, sorted_keys) if key in ft.names else None
         if rgs == []:
-            return []
+            continue
         cols = [c for c in ft.names if columns is None or c in columns or c in where]
         f = pq.ParquetFile(path, metadata=ft.meta)
         tbl = f.read(columns=cols) if rgs is None else f.read_row_groups(rgs, columns=cols)
@@ -333,17 +330,5 @@ def _point_read_plain(
         rows = (tbl if mask is None else tbl.filter(mask)).to_pylist()
         for row in rows:
             row.update(part)
-        return rows if columns is None else [{c: r[c] for c in columns} for r in rows]
-
-    files = [
-        (path, part)
-        for path, part in table.files()
-        if all(part[c] in v for c, v in where.items() if c in part)
-    ]
-    if len(files) < 2:
-        return [r for f in files for r in read(f)]
-    if _pool is None:
-        with _open_lock:
-            if _pool is None:
-                _pool = ThreadPoolExecutor(pa.cpu_count(), "point_read")
-    return [r for rows in _pool.map(read, files) for r in rows]
+        out += rows if columns is None else [{c: r[c] for c in columns} for r in rows]
+    return out

@@ -479,3 +479,35 @@ class TestIvfPqResidual:
             ).collect()
         }
         assert raw != res
+
+    def test_seeds_train_the_codebooks_after_lloyd_rounds(self, spark, monkeypatch):
+        # a seed's residual is zero only while the centroids are the seeds
+        # themselves (n_iters=0); after a Lloyd round it is a real residual
+        # and belongs in the codebook training set
+        import google_spark.operators.similarity as sim
+
+        rng = np.random.default_rng(23)
+        rows = [
+            (i, rng.standard_normal(8).astype(float).tolist())
+            for i in range(40)
+        ]
+        emb = spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>"
+        )
+        trained = []
+
+        class Trained(Exception):
+            pass
+
+        def spy(df, **kw):  # count the training rows, skip the training
+            trained.append(df.count())
+            raise Trained
+
+        monkeypatch.setattr(sim, "pq_train", spy)
+        for n_iters in (0, 1):
+            with pytest.raises(Trained):
+                sim.ivfpq_topk(
+                    emb, 5, k=10, n_centroids=4, nprobe=2, m=4, ksub=4,
+                    n_iters=n_iters, residual=True,
+                )
+        assert trained == [40 - 4, 40]

@@ -501,9 +501,12 @@ import urllib.request
 from google_spark.search import SearchEngine
 from google_spark.server import start_server
 
-bodies = {}
+bodies, trigram = {}, []
 for bundle, paths in json.loads(sys.argv[1]):
-    srv = start_server(SearchEngine.load(None, bundle))
+    eng = SearchEngine.load(None, bundle)
+    if eng.trigram_index is not None:
+        trigram.append(bundle)
+    srv = start_server(eng)
     host, port = srv.server_address
     try:
         for p in paths:
@@ -517,23 +520,25 @@ banned = sorted(
     if m.split(".")[0] in ("pandas", "pyspark", "py4j")
     or m.startswith(("pyarrow.dataset", "pyarrow._dataset", "pyarrow.acero", "pyarrow._acero"))
 )
-print(json.dumps({"bodies": bodies, "banned": banned}))
+print(json.dumps({"bodies": bodies, "banned": banned, "trigram": trigram}))
 """
 
 
 def test_fresh_interpreter_serves_bundles_without_pandas_or_spark(
     spark, bundle, served, tmp_path
 ):
-    """A new interpreter loads the bundle, and a copy with tombstones,
-    with ``spark=None`` and serves every point-read route plus /related
-    without importing pandas, pyspark, py4j, pyarrow.dataset or
-    pyarrow.acero; every body equals the Spark-loaded engine's."""
+    """A new interpreter loads the bundle, a copy with tombstones and a
+    copy that carries a trigram index, with ``spark=None`` and serves every
+    point-read route plus /related without importing pandas, pyspark,
+    py4j, pyarrow.dataset or pyarrow.acero; every body equals the
+    Spark-loaded engine's."""
     import os
     import shutil
     import subprocess
     import sys
 
     from google_spark.operators.index_build import delete_from_index
+    from google_spark.operators.trigram import build_trigram_index, write_trigram_index
     from google_spark.search import SearchEngine
     from google_spark.server import start_server
 
@@ -541,22 +546,31 @@ def test_fresh_interpreter_serves_bundles_without_pandas_or_spark(
     tomb = str(tmp_path / "tombstoned")
     shutil.copytree(bundle, tomb)
     assert delete_from_index(tomb, top[:2]) == 2
+    tri = str(tmp_path / "trigram")
+    shutil.copytree(bundle, tri)
+    tindex = build_trigram_index(spark, served[0].docs, text_col="content")
+    write_trigram_index(tindex, os.path.join(tri, "trigram"))
+    tindex.postings.unpersist()
+    tindex.stats.unpersist()
     paths = _POINT_READ_PATHS + [f"/related?doc_id={top[2]}&limit=5"]
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = {**os.environ, "PYTHONPATH": os.pathsep.join([root, os.environ.get("PYTHONPATH", "")])}
     proc = subprocess.run(
-        [sys.executable, "-c", _FRESH_SERVE, json.dumps([[bundle, paths], [tomb, paths]])],
+        [sys.executable, "-c", _FRESH_SERVE,
+         json.dumps([[bundle, paths], [tomb, paths], [tri, paths]])],
         capture_output=True, text=True, timeout=600, env=env, cwd=str(tmp_path),
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     got = json.loads(proc.stdout.strip().splitlines()[-1])
     assert got["banned"] == []
+    assert got["trigram"] == [tri]
 
     tomb_srv = start_server(SearchEngine.load(spark, tomb))
     host, port = tomb_srv.server_address
     try:
         want = {bundle + p: list(_get(served[1], p)) for p in paths}
         want.update({tomb + p: list(_get(f"http://{host}:{port}", p)) for p in paths})
+        want.update({tri + p: want[bundle + p] for p in paths})
     finally:
         tomb_srv.shutdown()
     assert got["bodies"] == want

@@ -1,8 +1,10 @@
 """On-disk layout of the engine's parquet: every posting bucket directory
 (word ``tb=``, trigram ``gb=``) holds exactly one file with rows sorted by
-(key, shard), every column chunk the engine writes is zstd, and bundles
-and catalog segments written by earlier builds (snappy, several files per
-bucket) keep serving unchanged."""
+(key, shard), the docstore is doc_id-sorted row groups of at most
+DOCSTORE_ROW_GROUP_ROWS docs, every column chunk the engine writes is
+zstd, and bundles and catalog segments written by earlier builds (snappy,
+several files per bucket, one docstore row group per file) keep serving
+unchanged."""
 
 from __future__ import annotations
 
@@ -17,7 +19,7 @@ from pyspark.sql import functions as F
 from google_spark.operators.catalog import SnapshotCatalog
 from google_spark.operators.index_query import wand_topk_local
 from google_spark.oracle import OracleIndex
-from google_spark.search import SearchEngine
+from google_spark.search import DOCSTORE_ROW_GROUP_ROWS, SearchEngine
 from google_spark.sources.tables import with_doc_identity
 
 QUERIES = ("data partition merge", "search engine", "def hash index", "zzznotthere")
@@ -206,6 +208,68 @@ def test_legacy_snappy_bundle_serves(spark, bundle, tmp_path):
         assert old.search(q, k=10, snippets=True) == new.search(q, k=10, snippets=True), q
     for pat in (r"def \w+", "partition"):
         assert old.grep(pat, limit=50) == new.grep(pat, limit=50), pat
+
+
+def test_docstore_row_groups_prune_snippet_reads(bundle, monkeypatch):
+    """The docstore is doc_id-sorted zstd row groups of at most
+    DOCSTORE_ROW_GROUP_ROWS docs with disjoint id ranges, and a snippet
+    read decodes only the row groups holding a returned doc."""
+    root = os.path.join(bundle, "docstore.parquet")
+    file_spans, group_spans, n_groups = [], [], []
+    for path in _parquet_files(root):
+        f = pq.ParquetFile(path)
+        ids = f.read(columns=["doc_id"]).column("doc_id").to_pylist()
+        assert ids == sorted(ids), path
+        file_spans.append((ids[0], ids[-1]))
+        col = f.schema_arrow.names.index("doc_id")
+        n_groups.append(f.metadata.num_row_groups)
+        for r in range(f.metadata.num_row_groups):
+            rg = f.metadata.row_group(r)
+            assert rg.num_rows <= DOCSTORE_ROW_GROUP_ROWS, (path, r, rg.num_rows)
+            st = rg.column(col).statistics
+            group_spans.append((st.min, st.max))
+    assert max(n_groups) > 1  # some file holds more than one group of docs
+    for spans in (file_spans, group_spans):
+        spans = sorted(spans)
+        assert all(a[1] < b[0] for a, b in zip(spans, spans[1:])), spans
+    assert _codecs(root) == {"ZSTD"}
+
+    eng = SearchEngine.load(None, bundle)
+    opened = []
+    real = pq.ParquetFile.read_row_groups
+
+    def spy(self, row_groups, **kw):
+        if "content" in self.schema_arrow.names:
+            col = self.schema_arrow.names.index("doc_id")
+            for r in row_groups:
+                st = self.metadata.row_group(r).column(col).statistics
+                opened.append((st.min, st.max))
+        return real(self, row_groups, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy)
+    for q in QUERIES[:3]:
+        opened.clear()
+        got = eng.search(q, k=10, snippets=True)
+        ids = [r.doc_id for r in got]
+        assert ids and any(r.snippet for r in got), q
+        assert opened and len(opened) <= len(ids), (q, opened)
+        assert all(any(lo <= d <= hi for d in ids) for lo, hi in opened), q
+
+
+def test_single_row_group_docstore_serves(bundle, tmp_path):
+    """A docstore written as one row group per file (builds before the
+    small-group layout) serves the same results and snippets."""
+    old = str(tmp_path / "old")
+    shutil.copytree(bundle, old)
+    for path in _parquet_files(os.path.join(old, "docstore.parquet")):
+        t = pq.read_table(path)
+        pq.write_table(t, path, row_group_size=len(t), compression="zstd")
+        assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    new_eng = SearchEngine.load(None, bundle)
+    old_eng = SearchEngine.load(None, old)
+    for q in QUERIES:
+        want = new_eng.search(q, k=10, snippets=True)
+        assert old_eng.search(q, k=10, snippets=True) == want, q
 
 
 def test_catalog_legacy_segment_unions_with_zstd_append(
