@@ -216,17 +216,28 @@ def encode_postings_np(
 
 def decode_postings_arrays(data: bytes):
     """Vectorized decode -> (doc_ids, tfs, dls) as int64 NumPy arrays.
-    Pure slicing thanks to the SoA layout — positions (the tail of the
-    blob) are never even varint-materialized as lists."""
-    values = _varint_decode_array(np.frombuffer(data, dtype=np.uint8))
-    n = int(values[0])
+    Thanks to the SoA layout only the first ``1 + 3n`` varints are
+    decoded: the scoring arrays end at the 3n-th varint terminator (a
+    byte below 0x80) after ``n``, and the position tail is never
+    decoded."""
+    n, start = _read_varint(data, 0)
     if n == 0:
         z = np.empty(0, dtype=np.int64)
         return z, z.copy(), z.copy()
-    gaps = values[1 : 1 + n].astype(np.int64)
-    tfs = values[1 + n : 1 + 2 * n].astype(np.int64)
-    dls = values[1 + 2 * n : 1 + 3 * n].astype(np.int64)
-    return np.cumsum(gaps), tfs, dls
+    m = 3 * n
+    # a varint of an int64 is at most 10 bytes: the window holds all m
+    head = np.frombuffer(data, dtype=np.uint8)[start : start + 10 * m]
+    ends = np.flatnonzero(head < 0x80)[:m]
+    if ends[-1] == m - 1:  # every varint is one byte
+        values = head[:m].astype(np.int64)
+    else:
+        head = head[: ends[-1] + 1]
+        starts = np.empty(m, dtype=np.int64)
+        starts[0] = 0
+        starts[1:] = ends[:-1] + 1
+        shift = (np.arange(len(head)) - np.repeat(starts, ends - starts + 1)) * 7
+        values = np.add.reduceat((head & 0x7F).astype(np.int64) << shift, starts)
+    return np.cumsum(values[:n]), values[n : 2 * n], values[2 * n :]
 
 
 def block_metadata_np(doc_ids, tfs, dls, block_size: int = BLOCK_SIZE):

@@ -2,11 +2,12 @@
 https://github.com/Cyan4973/xxHash/blob/dev/doc/xxhash_spec.md), seeded to
 match Spark's ``F.xxhash64`` (seed 42) bit-for-bit.
 
-Why it exists: the on-disk index is bucket-partitioned by
-``pmod(xxhash64(term), n_buckets)`` (index_build.term_bucket_col). The
-serving tier's point lookups (the KVS ``get`` analog) read those buckets
-directly with pyarrow — no Spark job — so the DRIVER must compute the same
-bucket for a query term that the BUILD computed in the JVM. Parity with
+Why it exists: indexes written before key-sorted files are
+bucket-partitioned by ``pmod(xxhash64(term), n_buckets)``
+(index_build.term_bucket_col), and still serve. The serving tier's point
+lookups (the KVS ``get`` analog) read those buckets directly with pyarrow —
+no Spark job — so the DRIVER must compute the same bucket for a query term
+that the BUILD computed in the JVM. Parity with
 Spark is asserted over the whole testdata vocabulary plus adversarial
 lengths in tests/test_xxh.py.
 """

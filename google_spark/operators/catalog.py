@@ -350,7 +350,6 @@ class SnapshotCatalog:
         self,
         index: IndexTables,
         version: int,
-        n_buckets: int,
         doclens: DataFrame | None = None,
         keys: DataFrame | None = None,
     ) -> str:
@@ -364,7 +363,7 @@ class SnapshotCatalog:
         tmp = seg + ".tmp"
         if os.path.isdir(tmp):
             shutil.rmtree(tmp)
-        write_index(index, tmp, n_buckets=n_buckets)
+        write_index(index, tmp)
         if doclens is not None:
             doclens.select("doc_id", "dl").write.mode("overwrite").parquet(
                 os.path.join(tmp, "doclens.parquet")
@@ -411,9 +410,7 @@ class SnapshotCatalog:
         later compaction re-finalize avgdl without decoding the postings,
         keys lets upsert_files find the doc versions it replaces."""
         v = (max(self.versions()) + 1) if self.versions() else 1
-        seg = self._write_segment(
-            index, v, n_buckets, doclens=doclens, keys=keys
-        )
+        seg = self._write_segment(index, v, doclens=doclens, keys=keys)
         summary = {
             "n_docs": index.n_docs,
             "avgdl": index.avgdl,
@@ -552,7 +549,6 @@ class SnapshotCatalog:
             seg = self._write_segment(
                 seg_index,
                 v,
-                n_buckets,
                 doclens=doclens,
                 keys=_keys_of(docs, id_col),
             )
@@ -807,10 +803,12 @@ class SnapshotCatalog:
     def read(self, spark: SparkSource, version: int | None = None) -> IndexTables:
         """Resolve a snapshot into IndexTables with no Spark job and no
         session: postings are a plain handle over the segments' postings
-        roots (served by pyarrow point reads; tb pruning applies to every
-        segment); per-term idf is a derived handle that re-finalizes the
-        segments' dfs with the snapshot's n_docs; delete files ride along
-        as a sorted doc_id array the query kernels mask against. Segments
+        roots (served by pyarrow point reads: a key-sorted segment prunes
+        row groups on their term min/max, a tb= segment of an earlier
+        build its bucket directories); per-term idf is a derived handle
+        that re-finalizes the segments' dfs with the snapshot's n_docs;
+        delete files ride along as a sorted doc_id array the query kernels
+        mask against. Segments
         and deletes come from ONE manifest read, so a commit landing
         mid-read cannot pair one snapshot's segments with another's
         deletes. Both handles open through ``spark`` (session, opener, or
@@ -876,7 +874,7 @@ class SnapshotCatalog:
             n_buckets=n_buckets,
         )
         v = (max(self.versions()) + 1) if self.versions() else 1
-        seg = self._write_segment(index, v, n_buckets, doclens=doclens, keys=keys)
+        seg = self._write_segment(index, v, doclens=doclens, keys=keys)
         summary = {
             "n_docs": n_docs,
             "avgdl": avgdl,
@@ -954,7 +952,8 @@ def _rewrite_postings(postings: DataFrame, deletes: np.ndarray | None) -> DataFr
     re-encoded — making the output structurally identical to a fresh
     build over the surviving docs. Terms whose postings are fully deleted
     disappear. One exchange on (tb, shard), the same shape as the build's
-    encode exchange."""
+    encode exchange; tb is recomputed from the term, since segments
+    unioned without tb= directories read it as null."""
 
     def kernel(pdf):
         from google_spark.functions.codec import (
@@ -994,12 +993,13 @@ def _rewrite_postings(postings: DataFrame, deletes: np.ndarray | None) -> DataFr
 
         return encode_sorted_terms(shard, term_arrays())
 
-    df = postings
-    if "tb" not in df.columns:
-        from google_spark.operators.index_build import term_bucket_col
+    from google_spark.operators.index_build import term_bucket_col
 
-        df = df.withColumn("tb", term_bucket_col("term"))
-    return df.groupBy("tb", "shard").applyInPandas(kernel, schema=POSTINGS_SCHEMA)
+    return (
+        postings.withColumn("tb", term_bucket_col("term"))
+        .groupBy("tb", "shard")
+        .applyInPandas(kernel, schema=POSTINGS_SCHEMA)
+    )
 
 
 def _doclens_from_postings(postings: DataFrame) -> DataFrame:

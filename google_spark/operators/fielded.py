@@ -3,10 +3,11 @@
 ``ranking.bm25f_topk`` is the batch/offline BM25F scorer — two full corpus
 scans per query. That is the wrong cost model for interactive field-weighted
 search at 10^12 files, so this module builds PER-FIELD posting lists with
-the same codec, sharding, and bucket layout as the main index
+the same codec, sharding, and key-sorted layout as the main index
 (operators/index_build.py) and answers BM25F queries on the PRUNED index
 path: per query term, decode that term's postings from each field's index
-(tb-bucket partition pruning applies per field exactly as for plain BM25),
+(row-group pruning on term min/max applies per field exactly as for plain
+BM25),
 combine the per-field weighted tf contributions BEFORE the k1 saturation
 (Robertson/Zaragoza BM25F — the principled generalization of the
 reference's flat additive title boost, ref:
@@ -136,9 +137,9 @@ def build_fielded_index(
 
 
 def write_fielded_index(findex: FieldedIndex, out_dir: str) -> None:
-    """Persist every field under ``{out_dir}/field={name}`` with the same
-    bucket-partitioned layout as write_index, so per-field point reads and
-    tb pruning work unchanged."""
+    """Persist every field under ``{out_dir}/field={name}`` with
+    write_index's key-sorted layout, so per-field point reads prune row
+    groups on term min/max as the body index's do."""
     for name, idx in findex.fields.items():
         write_index(idx, f"{out_dir}/field={name}")
 
@@ -272,7 +273,7 @@ def bm25f_local_topk(
 ) -> list[tuple[int, float]]:
     """Interactive BM25F serving path: fetch ONLY the query terms' posting
     rows from each field's index through the point-read tier
-    (bucket-pruned pyarrow reads on a published fielded bundle — zero
+    (row-group-pruned pyarrow reads on a published fielded bundle — zero
     Spark jobs; pruned collect on an in-memory index), then score in pure
     NumPy in the driver — the fielded twin of wand_topk_local. Returns
     [(doc_id, score)] with scores rounded to 4 decimals, rank- and

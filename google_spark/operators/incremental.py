@@ -43,14 +43,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from google_spark.operators.index_build import (
-    N_TERM_BUCKETS,
     POSTINGS_SCHEMA,
     IndexTables,
     build_postings,
     term_bucket_col,
     term_stats,
     tokenize_docs,
-    write_bucketed_postings,
+    write_index,
 )
 
 LINEAGE_SCHEMA = (
@@ -401,14 +400,15 @@ def merge_batches(
 
     tmp = os.path.join(out_dir, "index.tmp")
     final = os.path.join(out_dir, "index")
-    write_bucketed_postings(merged, os.path.join(tmp, "postings.parquet"))
-    postings = spark.read.parquet(os.path.join(tmp, "postings.parquet"))
-    terms = term_stats(postings, total_docs)
-    terms.write.mode("overwrite").parquet(os.path.join(tmp, "terms.parquet"))
-    spark.createDataFrame(
-        [(total_docs, avgdl, N_TERM_BUCKETS)],
-        "n_docs long, avgdl double, n_buckets int",
-    ).write.mode("overwrite").parquet(os.path.join(tmp, "stats.parquet"))
+    write_index(
+        IndexTables(
+            postings=merged,
+            terms=term_stats(merged, total_docs),
+            n_docs=total_docs,
+            avgdl=avgdl,
+        ),
+        tmp,
+    )
     if os.path.exists(final):
         import shutil
 
@@ -419,7 +419,6 @@ def merge_batches(
         terms=spark.read.parquet(os.path.join(final, "terms.parquet")),
         n_docs=total_docs,
         avgdl=avgdl,
-        n_buckets=N_TERM_BUCKETS,
     )
 
 

@@ -10,6 +10,8 @@ Indexer dataflow — ref: src/cis5550/jobs/Indexer.java:53-246):
         [bucketed groups: group count is a knob, not |vocab| * n_shards]
     doc_terms --agg--> stats(n_docs, avgdl)
     postings --groupBy(term)--> terms(term, df, idf)
+    postings, terms --repartitionByRange(term)--> key-sorted parquet
+        [one row group per term on a point read: write_key_sorted]
 
 Skew design (replaces the reference's rowKey salting, ref:
 src/cis5550/jobs/Indexer.java:28-33): postings are sharded by
@@ -23,6 +25,8 @@ you raise ``n_shards``; nothing else changes.
 
 from __future__ import annotations
 
+import os
+import shutil
 from collections import defaultdict
 from dataclasses import dataclass
 from typing import TYPE_CHECKING, Iterator
@@ -48,9 +52,10 @@ POSTINGS_SCHEMA = (
 class IndexTables:
     """The built index: postings + per-term stats + corpus scalars.
 
-    ``n_buckets`` is set when the postings were read from a
-    bucket-partitioned on-disk layout (see :func:`write_index`); query
-    paths then prune to at most |query terms| partitions."""
+    ``n_buckets`` is set when the postings may include ``tb=bucket(term)``
+    directories (bundles and catalog segments written before key-sorted
+    files, see :func:`write_index`); query paths then prune those
+    directories to at most |query terms| of them."""
 
     postings: DataFrame
     terms: DataFrame  # term, df, idf
@@ -74,10 +79,11 @@ class IndexTables:
         return {r["term"]: r["idf"] for r in rows}
 
     def matching(self, terms: list[str]) -> DataFrame:
-        """Postings rows for the given terms, with partition pruning on the
-        ``tb`` bucket column when the index is disk-backed. The bucket
-        predicate is built from literal expressions Catalyst constant-folds,
-        so pruning costs zero extra Spark jobs."""
+        """Postings rows for the given terms. The term filter is pushed to
+        the parquet scan, where key-sorted files skip row groups on their
+        term min/max; ``tb=`` bucket directories of earlier builds are
+        pruned on a predicate of literal expressions Catalyst
+        constant-folds, so pruning costs zero extra Spark jobs."""
         from functools import reduce
         from operator import or_
 
@@ -95,7 +101,8 @@ class IndexTables:
                     for t in terms
                 ],
             )
-            df = df.filter(pred)
+            # key-sorted segments unioned beside tb= ones carry a null tb
+            df = df.filter(F.col("tb").isNull() | pred)
         return df
 
 
@@ -346,47 +353,71 @@ N_TERM_BUCKETS = 64
 
 
 def term_bucket_col(term: Column | str, n_buckets: int = N_TERM_BUCKETS) -> Column:
-    """Deterministic term bucket for partition pruning: a query touching k
-    terms scans at most k of ``n_buckets`` partitions (the Iceberg
-    bucket(term) analog; the reference instead salts rowKeys to spread the
-    range partitioner, ref: src/cis5550/jobs/Indexer.java:28-33)."""
+    """Deterministic term bucket: the encode exchange's group key, and the
+    ``tb`` directory of posting files written before key-sorted files (a
+    query touching k terms scans at most k of their ``n_buckets``
+    directories; the reference instead salts rowKeys to spread the range
+    partitioner, ref: src/cis5550/jobs/Indexer.java:28-33)."""
     from pyspark.sql import functions as F
 
     return F.pmod(F.xxhash64(term), F.lit(n_buckets)).cast("int")
 
 
-def write_bucketed_postings(
-    postings: DataFrame,
-    path: str,
-    key: str = "term",
-    bucket: str = "tb",
-    n_buckets: int = N_TERM_BUCKETS,
-) -> None:
-    """Write (``key``, shard, ...) posting rows as parquet partitioned by
-    ``bucket=bucket(key)``: exactly one file per bucket directory, rows
-    sorted by (key, shard). One file means a point read opens one footer
-    per bucket it touches; sorted keys compress better and give each row
-    group min/max statistics on ``key`` for pushdown. Each task writes
-    whole buckets, so write parallelism is at most min(n_buckets, shuffle
-    partitions): raise ``n_buckets`` to spread a larger index's write."""
+# Rows per row group of the key-sorted posting and term files. Files hold
+# disjoint key ranges and row groups ascending ones, so a point read of one
+# key decodes one group of at most this many rows (two where the key's few
+# shard rows straddle a row-group cut).
+POSTINGS_ROW_GROUP_ROWS = 2048
+
+
+def write_key_sorted(df: DataFrame, path: str, key: str) -> None:
+    """Write ``df`` as parquet range-partitioned by ``key`` and sorted by
+    (``key``, shard) inside each file, in row groups of at most
+    :data:`POSTINGS_ROW_GROUP_ROWS` rows — the layout of the reference's
+    range-partitioned KVS tables, where one key is one key range (ref:
+    src/cis5550/jobs/RankScore.java:112,152). Files hold disjoint key
+    ranges and row groups ascending ones, so a point read's footer min/max
+    on ``key`` selects the one row group holding a key (two at a
+    row-group cut); AQE sizes the file count. Min/max
+    statistics are written for ``key`` only: nothing prunes on the other
+    columns, and a blob column's min/max costs up to a KB of footer per
+    file."""
+    sort = [key] + (["shard"] if "shard" in df.columns else [])
     (
-        postings.withColumn(bucket, term_bucket_col(key, n_buckets))
-        .repartition(bucket)
-        .sortWithinPartitions(bucket, key, "shard")
+        df.repartitionByRange(key)
+        .sortWithinPartitions(*sort)
         .write.mode("overwrite")
-        .partitionBy(bucket)
+        .option("parquet.block.row.count.limit", POSTINGS_ROW_GROUP_ROWS)
+        .option("parquet.column.statistics.enabled", False)
+        .option(f"parquet.column.statistics.enabled#{key}", True)
         .parquet(path)
     )
 
 
-def write_index(
-    index: IndexTables, out_dir: str, n_buckets: int = N_TERM_BUCKETS
+def write_key_sorted_tables(
+    postings: DataFrame, terms: DataFrame, out_dir: str, names: tuple[str, str], key: str
 ) -> None:
-    """Persist the index as parquet partitioned by ``tb=bucket(term)`` so
-    query-time term filters prune directories (Iceberg-style bucket
-    partitioning without a catalog), one term-sorted file per bucket
-    (:func:`write_bucketed_postings`). The atomic-publish analog of the
-    reference's index2->index rename (ref: src/cis5550/jobs/
+    """``postings`` and the ``terms`` derived from them as the key-sorted
+    tables ``out_dir/names[0]`` and ``out_dir/names[1]``. Each range
+    sampler runs its input's plan once more, so the postings are persisted
+    across both writes unless they are cached already: the encode runs
+    once."""
+    own = not postings.is_cached
+    if own:
+        postings.persist()
+    try:
+        write_key_sorted(postings, f"{out_dir}/{names[0]}", key)
+        write_key_sorted(terms, f"{out_dir}/{names[1]}", key)
+    finally:
+        if own:
+            postings.unpersist()
+
+
+def write_index(index: IndexTables, out_dir: str) -> None:
+    """Persist the index as key-sorted parquet (:func:`write_key_sorted`):
+    postings and terms range-sorted by term, so a query term's postings
+    are one row group found through the footers. The atomic-publish analog
+    of the reference's index2->index rename (ref: src/cis5550/jobs/
     Indexer.java:245-246) is parquet's atomic directory commit.
 
     Merge-on-read deletes travel with the bundle: a snapshot read from the
@@ -395,29 +426,31 @@ def write_index(
     restored by :func:`read_index`, so a published bundle can never
     resurrect deleted documents (compact() first if you want a
     tombstone-free bundle)."""
-    write_bucketed_postings(
-        index.postings, f"{out_dir}/postings.parquet", n_buckets=n_buckets
-    )
-    index.terms.write.mode("overwrite").parquet(f"{out_dir}/terms.parquet")
-    spark = index.postings.sparkSession
-    spark.createDataFrame(
-        [(index.n_docs, index.avgdl, n_buckets)],
-        "n_docs long, avgdl double, n_buckets int",
-    ).write.mode("overwrite").parquet(f"{out_dir}/stats.parquet")
-    if index.deletes is not None and len(index.deletes):
-        spark.createDataFrame(
-            [(int(x),) for x in index.deletes], "doc_id long"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{out_dir}/deletes.parquet"
-        )
-    else:
-        # OVERWRITE semantics for the whole bundle: a same-path rewrite
-        # from a tombstone-free index must clear any stale deletes.parquet
-        # left by an earlier delete_from_index, or the rebuilt docs stay
-        # invisibly masked forever (write_trigram_index has the same rule)
-        import shutil
+    import pyarrow as pa
 
-        shutil.rmtree(f"{out_dir}/deletes.parquet", ignore_errors=True)
+    write_key_sorted_tables(
+        index.postings, index.terms, out_dir,
+        ("postings.parquet", "terms.parquet"), "term",
+    )
+    # n_buckets 0: no tb= directories (bundles from earlier builds carry
+    # their bucket count here, and read_index prunes on it)
+    write_sidecar(
+        f"{out_dir}/stats.parquet",
+        pa.table(
+            {
+                "n_docs": pa.array([index.n_docs], pa.int64()),
+                "avgdl": pa.array([index.avgdl], pa.float64()),
+                "n_buckets": pa.array([0], pa.int32()),
+            }
+        ),
+    )
+    # OVERWRITE semantics for the whole bundle: a same-path rewrite from a
+    # tombstone-free index must clear any stale deletes.parquet left by an
+    # earlier delete_from_index, or the rebuilt docs stay invisibly masked
+    # forever (write_trigram_index has the same rule)
+    shutil.rmtree(f"{out_dir}/deletes.parquet", ignore_errors=True)
+    if index.deletes is not None and len(index.deletes):
+        append_delete_file(f"{out_dir}/deletes.parquet", index.deletes)
 
 
 def read_delete_file(del_dir: str):
@@ -426,8 +459,6 @@ def read_delete_file(del_dir: str):
     tombstoning is append-only — see :func:`append_delete_file`. Only
     committed parts are read (:func:`~google_spark.session.parquet_files`),
     so a crashed writer's torn staging file never poisons a bundle read."""
-    import os
-
     import numpy as np
 
     from google_spark.session import LazyParquet
@@ -451,8 +482,6 @@ def append_delete_file(del_dir: str, doc_ids) -> int:
     only an invisible ``.tmp`` orphan. Returns how many ids were newly
     tombstoned. Delete-file growth is bounded by the compaction cadence,
     exactly as for the catalog's merge-on-read files."""
-    import os
-
     import numpy as np
 
     ids = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
@@ -480,21 +509,29 @@ def append_delete_file(del_dir: str, doc_ids) -> int:
 
 
 def write_doc_id_file(path: str, ids) -> None:
-    """One doc_id parquet file in the engine's codec, written atomically
-    with pyarrow (no Spark job): staged under a '_'-prefixed name that
-    directory readers skip, then renamed into place."""
-    import os
-
+    """One doc_id parquet file, written with :func:`write_table_file`."""
     import pyarrow as pa
+
+    write_table_file(path, pa.table({"doc_id": pa.array(ids, type=pa.int64())}))
+
+
+def write_table_file(path: str, table) -> None:
+    """One parquet file in the engine's codec, written atomically with
+    pyarrow (no Spark job): staged under a '_'-prefixed name that
+    directory readers skip, then renamed into place."""
     import pyarrow.parquet as pq
 
     tmp = os.path.join(os.path.dirname(path), "_" + os.path.basename(path) + ".tmp")
-    pq.write_table(
-        pa.table({"doc_id": pa.array(ids, type=pa.int64())}),
-        tmp,
-        compression=PARQUET_CODEC,
-    )
+    pq.write_table(table, tmp, compression=PARQUET_CODEC)
     os.replace(tmp, path)
+
+
+def write_sidecar(dir_path: str, table) -> None:
+    """Replace the parquet directory ``dir_path`` with one file holding
+    ``table`` (a Spark overwrite's semantics, without the Spark job)."""
+    shutil.rmtree(dir_path, ignore_errors=True)
+    os.makedirs(dir_path)
+    write_table_file(os.path.join(dir_path, "part-00000.parquet"), table)
 
 
 def delete_from_index(out_dir: str, doc_ids) -> int:

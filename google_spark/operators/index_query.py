@@ -71,7 +71,8 @@ WAND_FASTPATH_MAX = 5_000_000
 def _decode_matching(matching: DataFrame) -> DataFrame:
     """Decode the matching postings blobs into (term, doc_id, tf, dl) rows.
     ``matching`` comes from IndexTables.matching(): term filter pushed to
-    the parquet scan plus bucket partition pruning on disk-backed indexes."""
+    the parquet scan (row groups of key-sorted files skip on their term
+    min/max; tb= directories of earlier builds are partition-pruned)."""
     import pandas as pd
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -365,7 +366,8 @@ def facet_counts(
     value NULL, like SQL GROUP BY.
 
     Scale shape: candidates come from ONE pruned index scan (term filter
-    pushed to the parquet scan + bucket partition pruning) reduced to a
+    pushed to the parquet scan, which skips row groups on term min/max)
+    reduced to a
     distinct doc_id relation — cost proportional to the query terms'
     posting lists, never the corpus; merge-on-read deletes are removed
     with a left-anti join against the (driver-resident) delete vector.
@@ -438,14 +440,17 @@ def _fetch_posting_rows(index: IndexTables, terms: list[str]) -> list:
     catalog snapshot is read with pyarrow and no Spark job — the analog
     of the reference's serve-time KVS ``get`` (ref:
     src/cis5550/jobs/RankScore.java:112,152 does per-word point reads, not
-    a scan job); an in-memory index is one pruned Spark collect. On a
-    bucket-partitioned layout the Python XXH64 twin (functions/xxh.py)
-    computes the ``tb`` buckets the build wrote, so the read opens only
-    those directories."""
+    a scan job); an in-memory index is one pruned Spark collect. Key-sorted
+    files are pruned to one row group per term on the footers' term
+    min/max. When the index may hold ``tb=`` bucket directories of earlier
+    builds (``n_buckets`` set; a catalog may mix them with key-sorted
+    segments in any order), the Python XXH64 twin (functions/xxh.py)
+    computes the buckets that build wrote, so the read opens only those
+    directories; files outside any ``tb=`` directory are kept."""
     from google_spark.functions.xxh import term_bucket
 
     prune = None
-    if index.n_buckets and "tb" in index.postings.columns:
+    if index.n_buckets:
         prune = {"tb": sorted({term_bucket(t, index.n_buckets) for t in terms})}
     return point_read(index.postings, "term", terms, _FETCH_COLS, prune)
 

@@ -20,8 +20,9 @@ Spark-first shape:
  - postings are (gram, shard) rows exactly like the word index:
    ``shard = pmod(xxhash64(doc_id), n_shards)`` caps a hot gram's row at
    |docs|/n_shards ids — "the" never materializes on one reducer
- - on disk the postings are partitioned by ``gb = bucket(gram)``; a query
-   touching k grams scans at most k of ``n_buckets`` directories
+ - on disk the postings are range-sorted by gram in small row groups
+   (index_build.write_key_sorted); a query touching k grams decodes at
+   most k row groups, found through the footers' gram min/max
  - candidate generation is one pruned scan + one groupBy(doc_id) whose
    filter is a JVM boolean expression built from the compiled query
    (``array_contains`` under AND/OR) — no driver-side set algebra
@@ -47,7 +48,8 @@ from typing import TYPE_CHECKING
 from google_spark.fsutil import atomic_write
 from google_spark.operators.index_build import (
     term_bucket_col,
-    write_bucketed_postings,
+    write_key_sorted_tables,
+    write_sidecar,
 )
 from google_spark.session import SparkSource
 
@@ -341,14 +343,12 @@ def prune_and(q, df_map: dict[str, int], keep: int = 8):
 # Index build / persistence
 # ---------------------------------------------------------------------------
 
-N_GRAM_BUCKETS = 64
-
-
 @dataclass
 class TrigramIndex:
     """postings: (gram, shard, doc_ids array<long> sorted, df long);
     stats: (gram, df) for AND pruning. ``n_buckets`` set when the
-    postings carry the on-disk ``gb`` partition column. ``deletes`` is a
+    postings may include ``gb=`` bucket directories (indexes written
+    before key-sorted files), which queries then prune. ``deletes`` is a
     sorted int64 array of merge-on-read tombstoned doc_ids (same
     semantics as IndexTables.deletes / the snapshot catalog's delete
     files): every query path masks them — candidate ids on the indexed
@@ -380,7 +380,8 @@ class TrigramIndex:
                     for g in grams
                 ],
             )
-            df = df.filter(pred)
+            # key-sorted parts unioned beside gb= ones carry a null gb
+            df = df.filter(F.col("gb").isNull() | pred)
         return df
 
     def df_map(self, grams: list[str]) -> dict[str, int]:
@@ -450,25 +451,25 @@ def build_trigram_index(
     )
 
 
-def write_trigram_index(
-    index: TrigramIndex, out_dir: str, n_buckets: int = N_GRAM_BUCKETS
-) -> None:
-    """Bucket-partitioned parquet, same layout contract as the word index
-    (index_build.write_index): query-time gram filters prune to at most
-    |query grams| of ``n_buckets`` directories."""
-    write_bucketed_postings(
-        index.postings,
-        f"{out_dir}/gram_postings.parquet",
-        key="gram",
-        bucket="gb",
-        n_buckets=n_buckets,
+def write_trigram_index(index: TrigramIndex, out_dir: str) -> None:
+    """Gram-sorted parquet, same layout contract as the word index
+    (index_build.write_index): a query's gram filter decodes one row
+    group per gram."""
+    import pyarrow as pa
+
+    _write_gram_tables(index, out_dir)
+    # n_buckets 0: no gb= directories (indexes from earlier builds carry
+    # their bucket count here, and read_trigram_index prunes on it)
+    write_sidecar(
+        f"{out_dir}/gram_meta.parquet",
+        pa.table(
+            {
+                "n_docs": pa.array([index.n_docs], pa.int64()),
+                "n_buckets": pa.array([0], pa.int32()),
+                "fold_case": pa.array([index.fold_case], pa.bool_()),
+            }
+        ),
     )
-    index.stats.write.mode("overwrite").parquet(f"{out_dir}/gram_stats.parquet")
-    spark = index.postings.sparkSession
-    spark.createDataFrame(
-        [(index.n_docs, n_buckets, index.fold_case)],
-        "n_docs long, n_buckets int, fold_case boolean",
-    ).write.mode("overwrite").parquet(f"{out_dir}/gram_meta.parquet")
     # overwrite semantics for the WHOLE bundle: a rewrite into the same
     # path must not inherit stale delete files, stale appended segments
     # (read_trigram_index would union resurrected pre-rewrite docs back
@@ -495,7 +496,8 @@ def write_trigram_index(
 def read_trigram_index(spark: SparkSource, out_dir: str) -> TrigramIndex:
     """Open a disk trigram index: the base plus every COMMITTED appended
     segment (see :func:`append_trigram_index`). Each part is read from
-    its own parquet root, so the gb partition filter prunes every part;
+    its own parquet root (gb= directories of earlier builds are pruned
+    on the base's bucket count; key-sorted parts on their gram min/max);
     per-gram stats re-aggregate lazily across parts. No Spark job: the
     scalars are pyarrow reads and the tables are LazyParquet handles that
     open through ``spark`` (session, opener, or None for get_spark) on
@@ -526,6 +528,13 @@ def read_trigram_index(spark: SparkSource, out_dir: str) -> TrigramIndex:
         disk_path=out_dir,
         fold_case=bool(meta.get("fold_case", False)),
         deletes=read_delete_file(f"{out_dir}/deletes.parquet"),
+    )
+
+
+def _write_gram_tables(index: TrigramIndex, out_dir: str) -> None:
+    write_key_sorted_tables(
+        index.postings, index.stats, out_dir,
+        ("gram_postings.parquet", "gram_stats.parquet"), "gram",
     )
 
 
@@ -618,8 +627,9 @@ def append_trigram_index(
 ) -> int:
     """Append ``new_docs`` to the disk trigram index at ``out_dir`` as a
     new committed segment; returns the segment id. The segment inherits
-    the base's bucket count and case-folding, so query-time gb pruning
-    applies to every part uniformly. Cost is proportional to the NEW
+    the base's case-folding and is written gram-sorted like the base
+    (a base with gb= directories keeps its pruning: the segment's rows
+    read with a null gb). Cost is proportional to the NEW
     batch only — the existing postings are never read or rewritten.
     ``tags`` (e.g. stream_id/stream_epoch) are merged into the segment's
     ``_COMMITTED`` marker — the exactly-once bookkeeping
@@ -627,11 +637,10 @@ def append_trigram_index(
     import json
     import os
 
-    meta = spark.read.parquet(f"{out_dir}/gram_meta.parquet").collect()[0]
-    n_buckets = int(meta["n_buckets"])
-    fold = (
-        bool(meta["fold_case"]) if "fold_case" in meta.__fields__ else False
-    )
+    from google_spark.session import LazyParquet
+
+    meta = LazyParquet(f"{out_dir}/gram_meta.parquet").read().to_pylist()[0]
+    fold = bool(meta.get("fold_case", False))
     segs = trigram_segments(out_dir)
     k = (segs[-1] + 1) if segs else 1
     seg_dir = os.path.join(_tri_seg_root(out_dir), f"seg={k:05d}")
@@ -645,16 +654,7 @@ def append_trigram_index(
         total_docs=n_new,
         fold_case=fold,
     )
-    write_bucketed_postings(
-        seg_idx.postings,
-        f"{seg_dir}/gram_postings.parquet",
-        key="gram",
-        bucket="gb",
-        n_buckets=n_buckets,
-    )
-    seg_idx.stats.write.mode("overwrite").parquet(
-        f"{seg_dir}/gram_stats.parquet"
-    )
+    _write_gram_tables(seg_idx, seg_dir)
     seg_idx.postings.unpersist()
     seg_idx.stats.unpersist()
     marker = {"segment": k, "n_docs": n_new}
@@ -793,7 +793,7 @@ def compact_trigram_index(
         n_docs=n_docs,
         fold_case=idx.fold_case,
     )
-    write_trigram_index(out, dest_dir, n_buckets=idx.n_buckets or N_GRAM_BUCKETS)
+    write_trigram_index(out, dest_dir)
     # carry the stream-epoch high-water marks: the merged-away segments'
     # markers were the exactly-once bookkeeping, so a replayed epoch
     # arriving AFTER compaction must still be recognized as committed

@@ -451,7 +451,7 @@ class SearchEngine:
         self.fielded_index = fielded
 
     def save(self, out_dir: str) -> None:
-        """Publish the full serving bundle: bucket-partitioned postings
+        """Publish the full serving bundle: term-sorted postings and terms
         (write_index) plus the pre-joined doc metadata, the docstore
         content, and the rank table. Meta and content are globally sorted
         by doc_id. The docstore is written in row groups of
@@ -488,11 +488,12 @@ class SearchEngine:
                 "overwrite"
             ).parquet(f"{out_dir}/doc_meta.parquet")
         if self.docs is not None:
+            # no min/max for the content: nothing prunes on it
             self.docs.sort("doc_id").write.mode("overwrite").option(
                 "parquet.block.row.count.limit", DOCSTORE_ROW_GROUP_ROWS
-            ).option("parquet.compression.codec.zstd.level", 9).parquet(
-                f"{out_dir}/docstore.parquet"
-            )
+            ).option("parquet.compression.codec.zstd.level", 9).option(
+                "parquet.column.statistics.enabled#content", False
+            ).parquet(f"{out_dir}/docstore.parquet")
         if self.word_vectors is not None:
             self.word_vectors.write.mode("overwrite").parquet(
                 f"{out_dir}/word_vectors.parquet"

@@ -230,10 +230,11 @@ class LazyParquet:
     def _open(self, spark: SparkSession) -> DataFrame:
         from functools import reduce
 
-        from pyspark.sql import DataFrame
-
+        # roots of both layouts union: a key-sorted root has no tb/gb
+        # partition column, and reads it as null
         df = reduce(
-            DataFrame.unionByName, [spark.read.parquet(r) for r in self.roots]
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [spark.read.parquet(r) for r in self.roots],
         )
         return df if self._build is None else self._build(df)
 
@@ -268,9 +269,11 @@ def point_read(
     serving tier's one lookup primitive (the analog of the reference's
     per-word KVS ``get``, ref: src/cis5550/jobs/RankScore.java:112,152).
     ``columns`` selects columns (None = all); ``prune`` adds filters
-    ``{column: values}`` that every returned row also satisfies (the
-    term-bucket partition column, so a read opens only those
-    directories).
+    ``{column: values}`` on hive partition columns (the ``tb=`` term-bucket
+    directories of earlier builds): a row under a ``column=v`` directory
+    is returned only when v is in the values, and a row outside any such
+    directory (a key-sorted file read beside them: null ``column``) is
+    kept.
 
     A plain :class:`LazyParquet` is read with ``pq.ParquetFile``: files
     are skipped on their partition values, row groups on the key's footer
@@ -284,9 +287,9 @@ def point_read(
         return _point_read_plain(table, key, where, columns)
     from pyspark.sql import functions as F
 
-    df = table
-    for c, v in where.items():
-        df = df.filter(F.col(c).isin(v))
+    df = table.filter(F.col(key).isin(where[key]))
+    for c, v in (prune or {}).items():
+        df = df.filter(F.col(c).isin(v) | F.col(c).isNull())
     if columns is not None:
         df = df.select(*columns)
     return [r.asDict() for r in df.collect()]

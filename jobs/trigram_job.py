@@ -44,7 +44,6 @@ def main() -> None:
         p.add_argument("--text-col", default="text")
         p.add_argument("--n-shards", type=int, default=8)
     p_build.add_argument("--fold-case", action="store_true")
-    p_build.add_argument("--n-buckets", type=int, default=64)
 
     p_cmp = sub.add_parser("compact", help="merge base+segments -> --dest")
     p_cmp.add_argument("--dest", required=True)
@@ -97,7 +96,7 @@ def main() -> None:
             n_shards=args.n_shards,
             fold_case=args.fold_case,
         )
-        write_trigram_index(idx, args.root, n_buckets=args.n_buckets)
+        write_trigram_index(idx, args.root)
         out.update(n_docs=idx.n_docs, fold_case=idx.fold_case)
     elif args.op == "append":
         docs = spark.read.parquet(args.input)

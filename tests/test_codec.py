@@ -146,3 +146,30 @@ def test_numpy_full_decode_with_positions(case):
     assert t.tolist() == tfs
     assert l.tolist() == dls
     assert [x.tolist() for x in p] == positions
+
+
+def test_decode_arrays_parity_edge_cases_and_skips_positions():
+    """The scoring-array decode equals the scalar ``decode_postings`` on
+    an empty list, one-byte varints only, 9-byte doc gaps, huge doc
+    lengths and long position lists, and needs no byte past the dls: the
+    blob cut before its n_pos varints decodes the same arrays."""
+    cases = [
+        ([], [], [], []),
+        ([0, 1, 2], [1, 1, 1], [1, 1, 1], [[1], [1], [1]]),
+        ([2**62, 2**63 - 1], [1, 2], [2**40, 1], [[7], [1, 2**31]]),
+        (
+            [5, 9_000_000_000, 9_000_000_001],
+            [3000, 1, 2500],
+            [100_000, 3, 2**33],
+            [list(range(1, 6001, 2)), [127], list(range(128, 128 + 2500))],
+        ),
+    ]
+    for doc_ids, tfs, dls, positions in cases:
+        blob = encode_postings(doc_ids, tfs, dls, positions)
+        want = [list(x) for x in decode_postings(blob)[:3]]
+        assert [a.tolist() for a in decode_postings_arrays(blob)] == want
+        # with no positions a blob is n, gaps, tfs, dls and one 1-byte
+        # n_pos per doc
+        no_pos = encode_postings(doc_ids, tfs, dls, [[] for _ in doc_ids])
+        head = blob[: len(no_pos) - len(doc_ids)]
+        assert [a.tolist() for a in decode_postings_arrays(head)] == want

@@ -80,10 +80,11 @@ def test_spell_suggest_band_filter_before_levenshtein(spark, corpus_df):
 
 
 def test_disk_index_partition_pruning(spark, corpus_df, tmp_path):
+    import re
+
     from google_spark.operators.index_build import (
         build_index,
         read_index,
-        term_bucket_col,
         write_index,
     )
     from google_spark.sources.tables import with_doc_identity
@@ -93,13 +94,11 @@ def test_disk_index_partition_pruning(spark, corpus_df, tmp_path):
     out = str(tmp_path / "pidx")
     write_index(idx, out)
     loaded = read_index(spark, out)
+    assert loaded.n_buckets is None  # key-sorted files, no tb= directories
     plan = _plan(loaded.matching(["data"]))
-    bucket = spark.range(1).select(
-        term_bucket_col(F.lit("data")).alias("b")
-    ).collect()[0]["b"]
-    # the tb partition filter with the term's bucket value reaches the scan
-    assert f"tb#" in plan and "PartitionFilters" in plan
-    assert str(bucket) in plan
+    # the term predicate with the term's value reaches the scan, whose
+    # key-sorted row groups skip on their term min/max
+    assert re.search(r"PushedFilters: \[[^\]]*EqualTo\(term,data\)", plan), plan
 
 
 def test_hot_term_spreads_across_shards(spark, corpus_df):
@@ -261,8 +260,9 @@ def test_bm25f_local_zero_spark_jobs_when_cached(spark, corpus_df, tmp_path):
 def test_trigram_search_prunes_partitions_and_guards_rlike(
     spark, tmp_path
 ):
-    """Disk trigram search must (a) prune the postings scan to the query
-    grams' gb= directories (PartitionFilters), (b) verify with RLIKE only
+    """Disk trigram search must (a) push the query grams to the postings
+    scan (PushedFilters: gram-sorted row groups skip on their min/max),
+    (b) verify with RLIKE only
     on candidate rows: the candidate ids are a pushed In(doc_id) parquet
     filter that precedes RLIKE in the Filter's conjunct order — never a
     semi-join Catalyst can push the regex below (the round-4 `weak`)."""
@@ -282,19 +282,21 @@ def test_trigram_search_prunes_partitions_and_guards_rlike(
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     idx = build_trigram_index(spark, docs, total_docs=0)
     out = str(tmp_path / "tri")
-    write_trigram_index(idx, out, n_buckets=16)
+    write_trigram_index(idx, out)
     disk = read_trigram_index(spark, out)
     phrase = _re.escape(
         " ".join(docs.filter(F.col("doc_id") == 0).first()["text"].split()[:6])
     )
-    # (a) the gb= partition column appears in the candidate job's
-    # postings scan PartitionFilters
+    # (a) the query grams appear in the candidate job's postings scan
+    # PushedFilters
     q = trigram_query(phrase, fold=disk.fold_case)
     q = prune_and(q, disk.df_map(sorted(query_grams(q))), keep=8)
+    grams = sorted(query_grams(q))
+    assert len(grams) > 1
     cand_plan = _plan(regex_candidates(disk, q))
-    assert _re.search(r"PartitionFilters: \[[^\]]*gb#", cand_plan), (
-        cand_plan[:500]
-    )
+    pushed = _re.search(r"PushedFilters: \[[^\]]*In\(gram, \[([^\]]*)\]", cand_plan)
+    assert pushed, cand_plan[:800]
+    assert pushed.group(1).split(",") == grams
     # (b) the verify plan: no join, In(doc_id) pushed to the parquet
     # scan, RLIKE after the IN conjunct (JVM-side, candidates only)
     plan = _plan(regex_search(spark, disk, docs, phrase))

@@ -1,7 +1,9 @@
 """SearchEngine facade: e2e search, cache, pagination, autocomplete,
-local-vs-distributed WAND parity, bucketed index pruning."""
+local-vs-distributed WAND parity, key-sorted index pruning."""
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -80,10 +82,13 @@ def test_bucketed_index_roundtrip_and_pruning(spark, corpus_df, tmp_path):
     out = str(tmp_path / "bidx")
     write_index(idx, out)
     loaded = read_index(spark, out)
-    assert loaded.n_buckets == 64
-    # partition pruning shows up in the physical plan's partition filters
+    assert loaded.n_buckets is None  # key-sorted files, no tb= directories
+    # the term predicate is pushed to the parquet scan, whose row groups
+    # skip on their term min/max
     plan = loaded.matching(["data"])._jdf.queryExecution().executedPlan().toString()
-    assert "tb" in plan
+    assert re.search(r"PushedFilters: \[[^\]]*EqualTo\(term,data\)", plan), plan
+    plan = loaded.matching(["data", "merge"])._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PushedFilters: \[[^\]]*In\(term, \[data,merge\]", plan), plan
     a = wand_topk_local(idx, "data partition", k=10)
     b = wand_topk_local(loaded, "data partition", k=10)
     assert [(d, round(s, 9)) for d, s in a] == [(d, round(s, 9)) for d, s in b]
@@ -512,7 +517,6 @@ def test_aux_tombstones_survive_compaction_and_reopen(
             spark, store, id_col="doc_id", text_col="content", n_shards=2
         ),
         tdir,
-        n_buckets=8,
     )
     eng = SearchEngine.from_catalog(
         spark, cat, docs=store,

@@ -592,7 +592,7 @@ def test_stream_to_catalog_keeps_trigram_fresh(spark, corpus_df, tmp_path):
     tri_dir = str(tmp_path / "tri_stream")
     write_trigram_index(
         build_trigram_index(spark, seed, text_col="text", n_shards=2),
-        tri_dir, n_buckets=8,
+        tri_dir,
     )
     eng = SearchEngine.from_catalog(
         spark, cat, trigram_index=read_trigram_index(spark, tri_dir)

@@ -225,9 +225,9 @@ def test_match_column_is_first_span(spark, tri_docs, tri_index):
 
 def test_disk_round_trip(spark, tri_docs, tri_index, tmp_path):
     out = str(tmp_path / "tri")
-    write_trigram_index(tri_index, out, n_buckets=8)
+    write_trigram_index(tri_index, out)
     idx2 = read_trigram_index(spark, out)
-    assert idx2.n_buckets == 8
+    assert idx2.n_buckets is None  # gram-sorted files, no gb= directories
     got = {
         r.doc_id
         for r in regex_search(
@@ -359,7 +359,7 @@ def test_folded_index_disk_round_trip(spark, code_docs, tmp_path):
 
     idx = build_trigram_index(spark, code_docs, n_shards=2, fold_case=True)
     out = str(tmp_path / "tri_ci")
-    write_trigram_index(idx, out, n_buckets=4)
+    write_trigram_index(idx, out)
     idx2 = read_trigram_index(spark, out)
     assert idx2.fold_case is True
     got = {
@@ -398,7 +398,7 @@ def test_append_segments_equal_full_rebuild(spark, tmp_path):
     all_docs = base.unionByName(new)
 
     out = str(tmp_path / "tri")
-    write_trigram_index(build_trigram_index(spark, base), out, n_buckets=8)
+    write_trigram_index(build_trigram_index(spark, base), out)
     seg = append_trigram_index(spark, out, new)
     assert seg == 1
     assert trigram_segments(out) == [1]
@@ -446,7 +446,7 @@ def test_uncommitted_segment_is_ignored(spark, tmp_path):
         [(1, "alpha beta gamma")], "doc_id long, text string"
     )
     out = str(tmp_path / "tri")
-    write_trigram_index(build_trigram_index(spark, docs), out, n_buckets=4)
+    write_trigram_index(build_trigram_index(spark, docs), out)
     seg = append_trigram_index(
         spark,
         out,
@@ -473,7 +473,7 @@ def test_append_inherits_fold_case(spark, tmp_path):
     )
     out = str(tmp_path / "tri_ci")
     write_trigram_index(
-        build_trigram_index(spark, docs, fold_case=True), out, n_buckets=4
+        build_trigram_index(spark, docs, fold_case=True), out
     )
     append_trigram_index(
         spark,
@@ -624,7 +624,7 @@ def test_delete_masks_indexed_and_fallback_paths(
     from google_spark.operators.trigram import delete_from_trigram_index
 
     out = str(tmp_path / "tri_del")
-    write_trigram_index(tri_index, out, n_buckets=8)
+    write_trigram_index(tri_index, out)
     assert delete_from_trigram_index(out, [1]) == 1
     assert delete_from_trigram_index(out, [1]) == 0  # idempotent
     idx = read_trigram_index(spark, out)
@@ -656,7 +656,7 @@ def test_with_deletes_write_read_round_trip(spark, tri_docs, tri_index, tmp_path
     assert list(idx.deletes) == [2, 6]
     assert tri_index.deletes is None  # functional: original untouched
     out = str(tmp_path / "tri_wd")
-    write_trigram_index(idx, out, n_buckets=8)
+    write_trigram_index(idx, out)
     loaded = read_trigram_index(spark, out)
     assert list(loaded.deletes) == [2, 6]
     got = {
@@ -675,7 +675,7 @@ def test_compact_applies_deletes(spark, tri_docs, tri_index, tmp_path):
     )
 
     out = str(tmp_path / "tri_cd")
-    write_trigram_index(tri_index, out, n_buckets=8)
+    write_trigram_index(tri_index, out)
     delete_from_trigram_index(out, [5])
     dest = str(tmp_path / "tri_cd2")
     compacted = compact_trigram_index(spark, out, dest)
@@ -708,7 +708,7 @@ def test_grep_lines_excludes_deleted(spark, code_docs, tmp_path):
 
     idx = build_trigram_index(spark, code_docs, n_shards=2)
     out = str(tmp_path / "tri_gd")
-    write_trigram_index(idx, out, n_buckets=8)
+    write_trigram_index(idx, out)
     before = {
         r.doc_id
         for r in grep_lines(
@@ -739,7 +739,7 @@ def test_compact_ignores_stray_tombstones(spark, tri_docs, tri_index, tmp_path):
     )
 
     out = str(tmp_path / "tri_stray")
-    write_trigram_index(tri_index, out, n_buckets=8)
+    write_trigram_index(tri_index, out)
     # one real victim + two strays far outside the corpus
     delete_from_trigram_index(out, [5, 10**9, 10**9 + 1])
     compacted = compact_trigram_index(spark, out, str(tmp_path / "tri_stray2"))
@@ -794,7 +794,7 @@ def test_write_trigram_rewrite_clears_segments_and_epochs(
     )
 
     out = str(tmp_path / "tri_rewrite")
-    write_trigram_index(tri_index, out, n_buckets=8)
+    write_trigram_index(tri_index, out)
     extra = spark.createDataFrame(
         [(900, "zzqqy unique gram payload")], "doc_id long, text string"
     )
@@ -807,7 +807,7 @@ def test_write_trigram_rewrite_clears_segments_and_epochs(
     assert trigram_epoch_done(out, "s1", 7)
     n_before = read_trigram_index(spark, out).n_docs
 
-    write_trigram_index(tri_index, out, n_buckets=8)  # full rewrite
+    write_trigram_index(tri_index, out)  # full rewrite
     re = read_trigram_index(spark, out)
     assert re.n_docs == tri_index.n_docs and re.n_docs < n_before
     assert not trigram_epoch_done(out, "s1", 7)  # HWM cleared

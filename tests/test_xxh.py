@@ -53,7 +53,7 @@ def test_disk_backed_lookup_matches_spark_path(spark, corpus_df):
     d = tempfile.mkdtemp(prefix="diskidx_")
     write_index(idx, d)
     disk = read_index(spark, d)
-    assert disk.disk_path == d and disk.n_buckets
+    assert disk.disk_path == d and disk.n_buckets is None
 
     cache: dict = {}
     for q in ["hash join", "merge sort", "data", "the", "zzz absent term", ""]:
