@@ -51,9 +51,6 @@ def __getattr__(name):
         "build_index": ("google_spark.operators.index_build", "build_index"),
         "read_index": ("google_spark.operators.index_build", "read_index"),
         "write_index": ("google_spark.operators.index_build", "write_index"),
-        "incremental_build": ("google_spark.operators.incremental", "incremental_build"),
-        "compact_batches": ("google_spark.operators.incremental", "compact_batches"),
-        "gc_compacted": ("google_spark.operators.incremental", "gc_compacted"),
         "wand_topk": ("google_spark.operators.index_query", "wand_topk"),
         "wand_topk_local": ("google_spark.operators.index_query", "wand_topk_local"),
         "exhaustive_topk": ("google_spark.operators.index_query", "exhaustive_topk"),
@@ -68,7 +65,6 @@ def __getattr__(name):
         "ann_ivf_topk": ("google_spark.operators.similarity", "ann_ivf_topk"),
         "write_ivf_index": ("google_spark.operators.similarity", "write_ivf_index"),
         "ivf_index_topk": ("google_spark.operators.similarity", "ivf_index_topk"),
-        "streaming_dedup": ("google_spark.streaming.ingest", "streaming_dedup"),
         "batch_topk": ("google_spark.operators.index_query", "batch_topk"),
         "SnapshotCatalog": ("google_spark.operators.catalog", "SnapshotCatalog"),
         "serve": ("google_spark.server", "serve"),
@@ -135,8 +131,6 @@ def __getattr__(name):
             "google_spark.operators.components",
             "cluster_dedup_by_score",
         ),
-        "stream_to_catalog": ("google_spark.streaming.ingest", "stream_to_catalog"),
-        "streaming_near_dedup": ("google_spark.streaming.ingest", "streaming_near_dedup"),
         "prefix_topk": ("google_spark.operators.index_query", "prefix_topk"),
         "wildcard_topk": ("google_spark.operators.index_query", "wildcard_topk"),
         "regexp_term_topk": (
@@ -193,10 +187,6 @@ def __getattr__(name):
         "delete_from_trigram_index": (
             "google_spark.operators.trigram",
             "delete_from_trigram_index",
-        ),
-        "append_epoch_to_trigram": (
-            "google_spark.operators.trigram",
-            "append_epoch_to_trigram",
         ),
         "delete_from_fielded_index": (
             "google_spark.operators.fielded",

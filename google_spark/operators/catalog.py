@@ -30,8 +30,9 @@ published index gets Iceberg's reader/writer isolation instead:
                   re-encoded without the deleted docs (bit-identical to a
                   fresh build over the survivors), df/idf/n_docs/avgdl
                   are re-finalized exactly;
-- time travel: ``read(spark, version=k)``; audit: ``log()`` (the
-  snapshot-history analog of the incremental layout's lineage table);
+- time travel: ``read(spark, version=k)``; audit: ``log()``, the
+  lineage table (``jobs/build_index.py`` tags each batch commit with its
+  batch id, content checksum, docs and bytes);
   ``expire(keep_last=k)`` drops old manifests and any data no surviving
   manifest references.
 
@@ -275,7 +276,7 @@ class SnapshotCatalog:
                 )
                 segments, deletes, summary = apply_fn(parent)
                 # stream high-water marks ride EVERY commit (delete,
-                # compact, upsert, ...), so the exactly-once epoch guard
+                # compact, upsert, ...), so a writer's resume point
                 # survives expire() dropping the manifest that first
                 # carried a tag — HEAD's summary always holds the
                 # freshest mark per stream. A summary that already
@@ -402,22 +403,24 @@ class SnapshotCatalog:
         operation: str = "overwrite",
         doclens: DataFrame | None = None,
         keys: DataFrame | None = None,
-        n_buckets: int = N_TERM_BUCKETS,
+        tags: dict | None = None,
     ) -> int:
         """Publish a fully-built index as a new snapshot. ``doclens``
         (doc_id, dl — one row per doc that produced tokens) and ``keys``
         (doc_id, repo, path) are optional segment sidecars: doclens lets a
         later compaction re-finalize avgdl without decoding the postings,
-        keys lets upsert_files find the doc versions it replaces."""
+        keys lets upsert_files find the doc versions it replaces. ``tags``
+        are merged into the manifest summary, as in :meth:`append_docs`."""
         v = (max(self.versions()) + 1) if self.versions() else 1
         seg = self._write_segment(index, v, doclens=doclens, keys=keys)
         summary = {
             "n_docs": index.n_docs,
             "avgdl": index.avgdl,
             "total_dl": index.avgdl * index.n_docs,
-            "n_buckets": n_buckets,
+            "n_buckets": N_TERM_BUCKETS,
             "n_deletes": 0,
             "n_pending": 0,
+            **(tags or {}),
         }
         return self._commit(operation, [os.path.relpath(seg, self.root)], [], summary)
 
@@ -430,16 +433,18 @@ class SnapshotCatalog:
         mode: str = "simple",
         stem: bool = False,
         n_shards: int = 8,
-        n_buckets: int = N_TERM_BUCKETS,
+        tags: dict | None = None,
     ) -> int:
         """Tokenize + build + publish in one pass (the convenience full
-        publish; writes the doclens sidecar so compaction stays cheap)."""
+        publish; writes the doclens sidecar so compaction stays cheap).
+        ``tags`` are merged into the manifest summary (see
+        :meth:`append_docs`)."""
         total_docs = docs.count()
         doc_terms = tokenize_docs(
             docs, id_col=id_col, text_col=text_col, mode=mode, stem=stem
         ).persist()
         try:
-            postings = build_postings(doc_terms, n_shards=n_shards, n_buckets=n_buckets)
+            postings = build_postings(doc_terms, n_shards=n_shards)
             doclens = doc_terms.groupBy("doc_id").agg(F.first("dl").alias("dl"))
             total_dl = int(
                 doclens.agg(F.sum("dl").alias("s")).collect()[0]["s"] or 0
@@ -450,13 +455,9 @@ class SnapshotCatalog:
                 terms=term_stats(postings, total_docs),
                 n_docs=total_docs,
                 avgdl=avgdl,
-                n_buckets=n_buckets,
             )
             return self.commit_index(
-                index,
-                doclens=doclens,
-                keys=_keys_of(docs, id_col),
-                n_buckets=n_buckets,
+                index, doclens=doclens, keys=_keys_of(docs, id_col), tags=tags
             )
         finally:
             doc_terms.unpersist()
@@ -479,13 +480,14 @@ class SnapshotCatalog:
         segment's own doc lengths; per-term df (hence idf) is re-finalized
         lazily at read time by summing segment dfs.
 
-        ``tags`` (JSON-serializable) are merged into the manifest summary —
-        the idempotence hook for at-least-once writers (a streaming epoch
-        records ``stream_epoch``; a replay finds it via :meth:`log` and
-        skips the duplicate append)."""
+        ``tags`` (JSON-serializable) are merged into the manifest summary.
+        A ``stream_id``/``stream_epoch`` pair also advances that stream's
+        high-water mark in ``stream_epochs``, which every later commit
+        carries (see :meth:`_commit_apply`): the resume point of an
+        at-least-once writer such as ``jobs/build_index.py``."""
         m = self.manifest()
         seg, n_new, new_dl = self._build_segment(
-            m, docs, id_col, text_col, mode, stem, n_shards
+            docs, id_col, text_col, mode, stem, n_shards
         )
         rel = os.path.relpath(seg, self.root)
 
@@ -518,7 +520,6 @@ class SnapshotCatalog:
 
     def _build_segment(
         self,
-        m: Manifest,
         docs: DataFrame,
         id_col: str,
         text_col: str,
@@ -529,13 +530,12 @@ class SnapshotCatalog:
         """Tokenize + build + write one new segment for ``docs``; returns
         (segment path, n_docs, sum of doc lengths). Shared by append and
         upsert."""
-        n_buckets = int(m.summary["n_buckets"])
         n_new = docs.count()
         doc_terms = tokenize_docs(
             docs, id_col=id_col, text_col=text_col, mode=mode, stem=stem
         ).persist()
         try:
-            postings = build_postings(doc_terms, n_shards=n_shards, n_buckets=n_buckets)
+            postings = build_postings(doc_terms, n_shards=n_shards)
             doclens = doc_terms.groupBy("doc_id").agg(F.first("dl").alias("dl"))
             new_dl = int(doclens.agg(F.sum("dl").alias("s")).collect()[0]["s"] or 0)
             seg_index = IndexTables(
@@ -543,7 +543,6 @@ class SnapshotCatalog:
                 terms=term_stats(postings, max(n_new, 1)),
                 n_docs=n_new,
                 avgdl=(new_dl / n_new if n_new else 0.0),
-                n_buckets=n_buckets,
             )
             v = (max(self.versions()) + 1) if self.versions() else 1
             seg = self._write_segment(
@@ -637,7 +636,7 @@ class SnapshotCatalog:
             return self.head()
 
         seg, n_new, new_dl = self._build_segment(
-            m, docs_to_add, id_col, text_col, mode, stem, n_shards
+            docs_to_add, id_col, text_col, mode, stem, n_shards
         )
         deletes = list(m.deletes)
         if len(old_ids):
@@ -727,12 +726,12 @@ class SnapshotCatalog:
         summary = dict(m.summary)
         summary["rolled_back_to"] = int(version)
         # Pin the TARGET's stream high-water marks explicitly (an empty map
-        # when the target predates streaming). Without the key present,
+        # when the target carries none). Without the key present,
         # _commit_apply would inherit the rolled-back head's marks, and the
-        # discarded epochs could never re-append — the exactly-once guard
-        # would treat the lost data as already committed forever.
+        # discarded epochs could never re-append — a resuming writer would
+        # treat the lost data as already committed forever.
         summary["stream_epochs"] = dict(m.summary.get("stream_epochs", {}))
-        # a rollback is not itself a stream append: drop any tag the target
+        # a rollback is not itself a stream commit: drop any tag the target
         # carried so _commit_apply doesn't re-fold it into the marks
         summary.pop("stream_id", None)
         summary.pop("stream_epoch", None)
@@ -865,13 +864,11 @@ class SnapshotCatalog:
         total_dl = int(doclens.agg(F.sum("dl").alias("s")).collect()[0]["s"] or 0)
         avgdl = total_dl / n_docs if n_docs else 0.0
 
-        n_buckets = int(m.summary["n_buckets"])
         index = IndexTables(
             postings=rewritten,
             terms=term_stats(rewritten, n_docs),
             n_docs=n_docs,
             avgdl=avgdl,
-            n_buckets=n_buckets,
         )
         v = (max(self.versions()) + 1) if self.versions() else 1
         seg = self._write_segment(index, v, doclens=doclens, keys=keys)
@@ -879,7 +876,7 @@ class SnapshotCatalog:
             "n_docs": n_docs,
             "avgdl": avgdl,
             "total_dl": float(total_dl),
-            "n_buckets": n_buckets,
+            "n_buckets": int(m.summary["n_buckets"]),
             "n_deletes": 0,
             "n_pending": 0,
         }
@@ -947,8 +944,8 @@ def _rewrite_postings(postings: DataFrame, deletes: np.ndarray | None) -> DataFr
     """Decode -> merge -> delete-mask -> re-encode, one (term-bucket,
     shard) group at a time: rows of the same (term, shard) split across
     append segments fold into ONE row (their doc universes are disjoint,
-    so the merge is a concatenate + argsort like the incremental layout's
-    indexJoin), deleted docs drop out, blobs and block metadata are
+    so the merge is a concatenate + argsort, the reference's indexJoin,
+    Indexer.java:35-51), deleted docs drop out, blobs and block metadata are
     re-encoded — making the output structurally identical to a fresh
     build over the surviving docs. Terms whose postings are fully deleted
     disappear. One exchange on (tb, shard), the same shape as the build's

@@ -2,8 +2,7 @@
 
 The reference stores raw per-user queries (SearchHistory, ref:
 src/cis5550/jobs/SearchApi.java history route) and has no log analytics;
-this is the product-analytics layer a real engine's event stream feeds
-(the batch twin of the streaming rollups in streaming/ingest.py).
+this is the product-analytics layer a real engine's event stream feeds.
 
 Scale shape: ONE exchange. Events group by user with a map-side partial
 ``collect_list`` of fixed-width (ts, step-index) structs — per-user

@@ -169,8 +169,9 @@ def encode_sorted_terms(shard: int, term_arrays) -> pd.DataFrame:
     """Shared POSTINGS_SCHEMA row assembly for the encode AND merge
     kernels: ``term_arrays`` yields (term, doc_ids, tfs, dls, positions)
     with arrays already doc_id-sorted; each becomes one compressed posting
-    row with block metadata. One definition keeps the batch-build and
-    incremental-merge outputs structurally identical by construction."""
+    row with block metadata. One definition keeps the build's output and
+    catalog compaction's (``catalog._rewrite_postings``) structurally
+    identical by construction."""
     import pandas as pd
 
     from google_spark.functions.codec import block_metadata_np, encode_postings_np
@@ -227,27 +228,21 @@ def _encode_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
     return encode_sorted_terms(int(pdf["shard"].iloc[0]), term_arrays())
 
 
-def build_postings(
-    doc_terms: DataFrame, n_shards: int = 8, n_buckets: int | None = None
-) -> DataFrame:
+def build_postings(doc_terms: DataFrame, n_shards: int = 8) -> DataFrame:
     """doc_terms -> sharded, delta-varint-compressed posting lists.
 
     The encode exchange groups by (term-bucket, shard), not (term, shard):
-    group count is the fixed knob ``n_buckets * n_shards`` instead of
+    group count is the fixed ``N_TERM_BUCKETS * n_shards`` instead of
     ``|vocab| * n_shards`` — at web scale a per-term grouping would pay the
     framework's per-group cost hundreds of millions of times for singleton
     rare-term groups, while hash-bucketed groups stay uniformly sized
     (a hot term still spreads over all doc-shards exactly as before; the
-    output rows are byte-identical either way). Size ``n_buckets`` (default
-    :data:`N_TERM_BUCKETS`) so one group's postings — roughly
-    total_postings / (n_buckets * n_shards) — fits executor memory."""
+    output rows are byte-identical either way)."""
     from pyspark.sql import functions as F
 
-    if n_buckets is None:
-        n_buckets = N_TERM_BUCKETS
     sharded = doc_terms.withColumn(
         "shard", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_shards)).cast("int")
-    ).withColumn("tb", term_bucket_col("term", n_buckets))
+    ).withColumn("tb", term_bucket_col("term"))
     return sharded.groupBy("tb", "shard").applyInPandas(
         _encode_bucket, schema=POSTINGS_SCHEMA
     )

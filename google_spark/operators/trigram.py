@@ -471,20 +471,12 @@ def write_trigram_index(index: TrigramIndex, out_dir: str) -> None:
         ),
     )
     # overwrite semantics for the WHOLE bundle: a rewrite into the same
-    # path must not inherit stale delete files, stale appended segments
-    # (read_trigram_index would union resurrected pre-rewrite docs back
-    # in), or a stale streaming high-water mark (_stream_epochs.json —
-    # trigram_epoch_done would report replayed epochs as committed and
-    # append_epoch_to_trigram would silently drop new micro-batches)
-    import os
+    # path must not inherit stale delete files or stale appended segments
+    # (read_trigram_index would union resurrected pre-rewrite docs back in)
     import shutil
 
     shutil.rmtree(f"{out_dir}/deletes.parquet", ignore_errors=True)
     shutil.rmtree(_tri_seg_root(out_dir), ignore_errors=True)
-    try:
-        os.remove(os.path.join(out_dir, "_stream_epochs.json"))
-    except FileNotFoundError:
-        pass
     if index.deletes is not None and len(index.deletes):
         # tombstones travel with the bundle, same contract as write_index:
         # a published trigram index can never resurrect deleted documents
@@ -581,8 +573,7 @@ def with_deletes(index: TrigramIndex, doc_ids) -> TrigramIndex:
 # ---------------------------------------------------------------------------
 # Incremental maintenance: segment appends + compaction
 # ---------------------------------------------------------------------------
-# The Lucene-segment analog, and the same layout/commit discipline as
-# operators/incremental.py: a new batch of documents lands as a fully
+# The Lucene-segment analog: a new batch of documents lands as a fully
 # written ``segments/seg=<k>/`` directory whose ``_COMMITTED`` marker is
 # created LAST, so readers never observe a partial append and a crashed
 # writer leaves only an ignorable orphan. Appends never rewrite history —
@@ -623,17 +614,13 @@ def append_trigram_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_shards: int = 8,
-    tags: dict | None = None,
 ) -> int:
     """Append ``new_docs`` to the disk trigram index at ``out_dir`` as a
     new committed segment; returns the segment id. The segment inherits
     the base's case-folding and is written gram-sorted like the base
     (a base with gb= directories keeps its pruning: the segment's rows
     read with a null gb). Cost is proportional to the NEW
-    batch only — the existing postings are never read or rewritten.
-    ``tags`` (e.g. stream_id/stream_epoch) are merged into the segment's
-    ``_COMMITTED`` marker — the exactly-once bookkeeping
-    :func:`append_epoch_to_trigram` reads."""
+    batch only — the existing postings are never read or rewritten."""
     import json
     import os
 
@@ -657,74 +644,11 @@ def append_trigram_index(
     _write_gram_tables(seg_idx, seg_dir)
     seg_idx.postings.unpersist()
     seg_idx.stats.unpersist()
-    marker = {"segment": k, "n_docs": n_new}
-    if tags:
-        marker.update(tags)
-    atomic_write(os.path.join(seg_dir, "_COMMITTED"), json.dumps(marker))
-    return k
-
-
-def _trigram_stream_hwm(out_dir: str) -> dict[str, int]:
-    """Per-stream epoch high-water marks for the trigram index: the root
-    ``_stream_epochs.json`` (written by compaction, which folds segments —
-    and their markers — away) max-merged with every live committed
-    segment's marker tags. The exactly-once source of truth for
-    :func:`append_epoch_to_trigram`."""
-    import json
-    import os
-
-    hwm: dict[str, int] = {}
-    root_file = os.path.join(out_dir, "_stream_epochs.json")
-    if os.path.exists(root_file):
-        with open(root_file) as f:
-            hwm = {str(k): int(v) for k, v in json.load(f).items()}
-    for k in trigram_segments(out_dir):
-        seg_dir = os.path.join(_tri_seg_root(out_dir), f"seg={k:05d}")
-        with open(os.path.join(seg_dir, "_COMMITTED")) as f:
-            marker = json.load(f)
-        sid = marker.get("stream_id")
-        if sid is not None and "stream_epoch" in marker:
-            e = int(marker["stream_epoch"])
-            if e > hwm.get(str(sid), -1):
-                hwm[str(sid)] = e
-    return hwm
-
-
-def trigram_epoch_done(out_dir: str, stream_id: str, epoch_id: int) -> bool:
-    """True when this (stream, epoch) already landed in the trigram index
-    — epochs are monotone per stream (Structured Streaming's contract),
-    so any epoch at or below the stream's high-water mark is committed."""
-    return int(epoch_id) <= _trigram_stream_hwm(out_dir).get(str(stream_id), -1)
-
-
-def append_epoch_to_trigram(
-    spark: SparkSession,
-    out_dir: str,
-    batch_df: DataFrame,
-    epoch_id: int,
-    stream_id: str = "stream",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_shards: int = 8,
-) -> int | None:
-    """One micro-batch -> one trigram segment, EXACTLY ONCE: the segment's
-    ``_COMMITTED`` marker is tagged (stream_id, stream_epoch), so a
-    replayed epoch (stream restart re-delivers the last uncommitted
-    batch) finds its tag — or the compaction-carried high-water mark —
-    and becomes a no-op instead of double-indexing. The trigram twin of
-    streaming.ingest.append_epoch_to_catalog; because the two stores
-    commit independently, a crash between their commits heals on replay
-    (each skips only its own already-committed half). Returns the segment
-    id, or None for a skipped replay / empty batch."""
-    if trigram_epoch_done(out_dir, stream_id, epoch_id):
-        return None
-    if batch_df.isEmpty():
-        return None
-    return append_trigram_index(
-        spark, out_dir, batch_df, id_col=id_col, text_col=text_col,
-        n_shards=n_shards,
-        tags={"stream_id": str(stream_id), "stream_epoch": int(epoch_id)},
+    atomic_write(
+        os.path.join(seg_dir, "_COMMITTED"),
+        json.dumps({"segment": k, "n_docs": n_new}),
     )
+    return k
 
 
 def compact_trigram_index(
@@ -794,17 +718,6 @@ def compact_trigram_index(
         fold_case=idx.fold_case,
     )
     write_trigram_index(out, dest_dir)
-    # carry the stream-epoch high-water marks: the merged-away segments'
-    # markers were the exactly-once bookkeeping, so a replayed epoch
-    # arriving AFTER compaction must still be recognized as committed
-    hwm = _trigram_stream_hwm(out_dir)
-    if hwm:
-        import json
-        import os
-
-        atomic_write(
-            os.path.join(dest_dir, "_stream_epochs.json"), json.dumps(hwm)
-        )
     return read_trigram_index(spark, dest_dir)
 
 

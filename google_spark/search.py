@@ -367,7 +367,7 @@ class SearchEngine:
         new_tri = self.trigram_index
         if new_tri is not None and new_tri.disk_path is not None:
             # disk-backed trigram index: re-open so segments appended
-            # since (streaming epochs, append_trigram_index) and new
+            # since (append_trigram_index) and new
             # bundle tombstones join the read-time union
             from google_spark.operators.trigram import read_trigram_index
 

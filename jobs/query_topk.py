@@ -1,7 +1,10 @@
 """spark-submit entry: BM25 top-k queries against a built index.
 
     spark-submit --py-files google_spark.zip jobs/query_topk.py \
-        --index /data/index_build/index --query "hash join" -k 10
+        --index /data/index_build/data/b00009-1a2b3c --query "hash join" -k 10
+
+``--index`` is a ``write_index`` directory, such as the catalog segment
+``jobs/build_index.py`` prints as ``index``.
 
 Runs the distributed block-max WAND top-k (``index_query.wand_topk``) and
 prints one JSON line per query with ranked (doc_id, score) and latency.

@@ -689,3 +689,28 @@ def test_read_takes_deletes_from_the_manifest_it_resolved(
     idx = cat.read(None)
     assert idx.deletes is None
     assert cat.read(None).deletes.tolist() == [victim]
+
+
+def test_write_index_rewrite_clears_stale_deletes(spark, tmp_path):
+    """Review finding: a same-path rewrite from a tombstone-free index
+    must clear deletes.parquet left by an earlier delete_from_index, or
+    the rebuilt docs stay invisibly masked forever."""
+    from google_spark.operators.index_build import (
+        build_index,
+        delete_from_index,
+        read_index,
+        write_index,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "delta epsilon zeta")],
+        "doc_id long, text string",
+    )
+    out = str(tmp_path / "widx")
+    idx = build_index(spark, docs, id_col="doc_id", text_col="text")
+    write_index(idx, out)
+    delete_from_index(out, [1])
+    assert read_index(spark, out).deletes is not None
+    # rebuild (e.g. from a compacted corpus) into the SAME path
+    write_index(build_index(spark, docs, id_col="doc_id", text_col="text"), out)
+    assert read_index(spark, out).deletes is None

@@ -1,19 +1,39 @@
-"""Resumable incremental build: batch checkpoints, kill/resume equivalence,
-merge ≡ single-shot build, lineage/metrics (SURVEY.md §5.5)."""
+"""Resumable batch build into a snapshot catalog (``jobs/build_index.py``):
+one catalog commit per batch, a rerun resumes after the committed
+high-water mark, one compaction publishes; the compacted segment is
+blob-for-blob a single-shot build, and the commit log is the lineage
+table (SURVEY.md §5.5)."""
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
+
+from google_spark.operators.catalog import SnapshotCatalog
+from google_spark.operators.index_build import build_index, read_index
+from google_spark.operators.index_query import wand_topk, wand_topk_local
+from google_spark.oracle import OracleIndex
+
+QUERIES = ("data partition merge", "def hash index", "search engine")
 
 
 @pytest.fixture(scope="module")
 def identified(spark, corpus_df):
     from google_spark.sources.tables import with_doc_identity
 
-    return with_doc_identity(corpus_df).persist()
+    df = with_doc_identity(corpus_df).persist()
+    df.count()
+    yield df
+    df.unpersist()
+
+
+@pytest.fixture(scope="module")
+def single(spark, identified):
+    return build_index(spark, identified, id_col="doc_id", text_col="content")
 
 
 def _postings_map(index):
@@ -32,366 +52,169 @@ def _postings_map(index):
     }
 
 
-def test_incremental_equals_single_shot(spark, identified, tmp_path):
-    from google_spark.operators.incremental import incremental_build
-    from google_spark.operators.index_build import build_index
+def _assert_equals_single_shot(index, single):
+    assert index.n_docs == single.n_docs
+    assert index.avgdl == pytest.approx(single.avgdl, abs=1e-12)
+    # byte-identical postings per (term, shard): merging disjoint batches
+    # must reproduce the single-pass encoding exactly
+    assert _postings_map(index) == _postings_map(single)
 
-    out = str(tmp_path / "idx_inc")
-    inc = incremental_build(
-        spark, identified, out, n_batches=4, id_col="doc_id", text_col="content"
+    def terms(i):
+        return {r["term"]: (r["df"], round(r["idf"], 12)) for r in i.terms.collect()}
+
+    assert terms(index) == terms(single)
+
+
+def _batch_log(cat):
+    return {
+        m["summary"]["batch"]: m
+        for m in cat.log()
+        if m["operation"] in ("overwrite", "append")
+    }
+
+
+def test_incremental_equals_single_shot(spark, batch_build, single):
+    root, seg = batch_build
+    _assert_equals_single_shot(read_index(spark, seg), single)
+    cat = SnapshotCatalog(root)
+    assert [m["operation"] for m in cat.log()] == [
+        "overwrite", "append", "append", "compact"
+    ]
+    assert [os.path.join(root, s) for s in cat.manifest().segments] == [seg]
+
+
+def test_kill_resume_byte_identical(
+    spark, identified, single, run_batch_build, batch_commits, tmp_path,
+    monkeypatch,
+):
+    """A build killed inside its second commit (after the segment was
+    written) resumes after ``expire`` removed the orphan: batch 0 is not
+    rebuilt, the compacted head equals a single-shot build and the
+    oracle, and a third run commits nothing."""
+    root = str(tmp_path / "cat")
+    real = SnapshotCatalog._commit_apply
+
+    def killed(self, operation, apply_fn):
+        if operation == "append":
+            raise RuntimeError("killed before the append committed")
+        return real(self, operation, apply_fn)
+
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotCatalog, "_commit_apply", killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_batch_build(identified, root)
+    cat = SnapshotCatalog(root)
+    assert cat.versions() == [1] and cat.manifest().operation == "overwrite"
+    assert cat.manifest().summary["stream_epochs"] == {"build": 0}
+    assert len(os.listdir(cat.data_dir)) == 2  # batch 1's orphan segment
+
+    cat.expire(keep_last=1, orphan_grace_s=0)
+    assert len(os.listdir(cat.data_dir)) == 1
+    batch_commits.clear()
+    seg = run_batch_build(identified, root)
+    assert batch_commits == [("append_docs", 1), ("append_docs", 2)]
+    index = read_index(spark, seg)
+    _assert_equals_single_shot(index, single)
+    oracle = OracleIndex(
+        [(r.doc_id, r.content) for r in identified.select("doc_id", "content").collect()]
     )
-    single = build_index(spark, identified, id_col="doc_id", text_col="content")
-    assert inc.n_docs == single.n_docs
-    assert inc.avgdl == pytest.approx(single.avgdl, abs=1e-12)
-    # byte-identical postings per (term, shard): merge-sort of disjoint
-    # batches must reproduce the single-pass encoding exactly
-    assert _postings_map(inc) == _postings_map(single)
+    for q in QUERIES:
+        got = [(d, round(s, 6)) for d, s in wand_topk_local(index, q, k=10)]
+        assert got == [(d, round(s, 6)) for d, s in oracle.topk(q, k=10)], q
+
+    versions = cat.versions()
+    assert run_batch_build(identified, root) == seg
+    assert batch_commits == [("append_docs", 1), ("append_docs", 2)]
+    assert cat.versions() == versions
 
 
-def test_kill_resume_byte_identical(spark, identified, tmp_path):
-    from google_spark.operators.incremental import (
-        committed_batches,
-        incremental_build,
-    )
-
-    out_a = str(tmp_path / "killed")
-    # simulate a crash after 2 of 4 batches
-    got = incremental_build(
-        spark, identified, out_a, n_batches=4,
-        id_col="doc_id", text_col="content", stop_after=2,
-    )
-    assert got is None
-    assert len(committed_batches(out_a, 4)) == 2
-    # resume: finishes remaining batches only, then merges
-    resumed = incremental_build(
-        spark, identified, out_a, n_batches=4, id_col="doc_id", text_col="content"
-    )
-    out_b = str(tmp_path / "clean")
-    clean = incremental_build(
-        spark, identified, out_b, n_batches=4, id_col="doc_id", text_col="content"
-    )
-    assert _postings_map(resumed) == _postings_map(clean)
+def test_resume_skips_committed_batches(
+    spark, identified, single, batch_catalog, run_batch_build, batch_commits
+):
+    """A head whose mark covers batches 0-1 (the state a kill during the
+    third commit leaves) resumes with batch 2 only."""
+    cat = batch_catalog
+    cat.rollback(2)
+    assert cat.manifest().summary["stream_epochs"] == {"build": 1}
+    seg = run_batch_build(identified, cat.root)
+    assert batch_commits == [("append_docs", 2)]
+    _assert_equals_single_shot(read_index(spark, seg), single)
 
 
-def test_resume_skips_committed_batches(spark, identified, tmp_path, monkeypatch):
-    """Replay idempotence: a resumed build must not rebuild committed
-    batches (the no-double-counted-df high-water mark)."""
-    from google_spark.operators import incremental
-
-    out = str(tmp_path / "skip")
-    incremental.incremental_build(
-        spark, identified, out, n_batches=3,
-        id_col="doc_id", text_col="content", stop_after=2,
-    )
-    calls = []
-    real = incremental.build_batch
-
-    def spy(spark_, docs_, out_, batch, *a, **kw):
-        calls.append(batch)
-        return real(spark_, docs_, out_, batch, *a, **kw)
-
-    monkeypatch.setattr(incremental, "build_batch", spy)
-    incremental.incremental_build(
-        spark, identified, out, n_batches=3, id_col="doc_id", text_col="content"
-    )
-    assert calls == [2]  # only the uncommitted batch re-ran
-
-
-def test_merge_refuses_partial(spark, identified, tmp_path):
-    from google_spark.operators.incremental import incremental_build, merge_batches
-
-    out = str(tmp_path / "partial")
-    incremental_build(
-        spark, identified, out, n_batches=4,
-        id_col="doc_id", text_col="content", stop_after=1,
-    )
-    with pytest.raises(RuntimeError, match="uncommitted"):
-        merge_batches(spark, out, 4, total_docs=1)
-
-
-def test_lineage_metrics(spark, identified, tmp_path):
-    from google_spark.operators.incremental import incremental_build
-
-    out = str(tmp_path / "lin")
-    incremental_build(
-        spark, identified, out, n_batches=4, id_col="doc_id", text_col="content"
-    )
-    lineage = spark.read.parquet(os.path.join(out, "lineage.parquet"))
-    rows = {r["batch"]: r for r in lineage.collect()}
-    assert set(rows) == {0, 1, 2, 3}
-    assert sum(r["n_docs"] for r in rows.values()) == identified.count()
-    import re
-
-    for r in rows.values():
-        assert r["bytes"] > 0 and r["wall_s"] > 0
+def test_lineage_metrics(identified, batch_build):
+    cat = SnapshotCatalog(batch_build[0])
+    rows = _batch_log(cat)
+    assert set(rows) == {0, 1, 2}
+    assert sum(m["summary"]["batch_docs"] for m in rows.values()) == identified.count()
+    assert cat.manifest().summary["n_docs"] == identified.count()
+    for m in rows.values():
+        s = m["summary"]
+        assert s["batch_bytes"] > 0 and m["committed_at"] > s["batch_started_at"]
         # "<n_docs>:<15-hex xor of sha256 prefixes>"
-        assert re.fullmatch(r"\d+:[0-9a-f]{15}", r["content_checksum"])
-        assert int(r["content_checksum"].split(":")[0]) == r["n_docs"]
+        assert re.fullmatch(r"\d+:[0-9a-f]{15}", s["content_checksum"])
+        assert int(s["content_checksum"].split(":")[0]) == s["batch_docs"]
 
 
-def test_batch_checksum_matches_content_sha(spark, identified):
-    """Ingestion fidelity (input_hint): the engine-side sha256 (JVM F.sha2)
-    equals hashlib sha256 per row."""
-    import hashlib
-
+def test_batch_checksum_matches_content_sha(identified, batch_build):
+    """Ingestion fidelity: the engine-side sha256 (JVM F.sha2) equals
+    hashlib sha256 per row, and each batch commit's checksum tag is the
+    XOR of those digests' 60-bit prefixes over the batch's docs."""
     rows = identified.select(
-        "doc_id", "content", F.sha2("content", 256).alias("spark_sha"), "content_sha256"
+        "content",
+        F.sha2("content", 256).alias("spark_sha"),
+        "content_sha256",
+        F.pmod(F.xxhash64("doc_id"), F.lit(3)).alias("batch"),
     ).collect()
+    want: dict[int, list[int]] = {0: [0, 0], 1: [0, 0], 2: [0, 0]}
     for r in rows:
-        want = hashlib.sha256(r["content"].encode()).hexdigest()
-        assert r["spark_sha"] == want
-        assert r["content_sha256"] == want
+        sha = hashlib.sha256(r["content"].encode()).hexdigest()
+        assert r["spark_sha"] == sha
+        assert r["content_sha256"] == sha
+        want[r["batch"]][0] += 1
+        want[r["batch"]][1] ^= int(sha[:15], 16)
+    got = {
+        b: m["summary"]["content_checksum"]
+        for b, m in _batch_log(SnapshotCatalog(batch_build[0])).items()
+    }
+    assert got == {b: f"{n}:{x:015x}" for b, (n, x) in want.items()}
 
 
-def test_queryable_after_merge(spark, identified, tmp_path):
-    """The merged index answers queries rank-identically to a fresh build."""
-    from google_spark.operators.incremental import incremental_build
-    from google_spark.operators.index_build import build_index
-    from google_spark.operators.index_query import wand_topk
-
-    out = str(tmp_path / "q")
-    inc = incremental_build(
-        spark, identified, out, n_batches=4, id_col="doc_id", text_col="content"
-    )
-    single = build_index(spark, identified, id_col="doc_id", text_col="content")
-    q = "data partition merge"
-    a = [(r["doc_id"], round(r["score"], 9)) for r in wand_topk(inc, q, k=10).collect()]
-    b = [(r["doc_id"], round(r["score"], 9)) for r in wand_topk(single, q, k=10).collect()]
-    assert a == b and len(a) == 10
+def test_queryable_after_merge(spark, batch_build, single):
+    """The published segment, opened the way ``jobs/query_topk.py`` opens
+    ``--index``, answers queries rank-identically to a fresh build."""
+    index = read_index(spark, batch_build[1])
+    for q in QUERIES:
+        a = [(r["doc_id"], round(r["score"], 9)) for r in wand_topk(index, q, k=10).collect()]
+        b = [(r["doc_id"], round(r["score"], 9)) for r in wand_topk(single, q, k=10).collect()]
+        assert a == b and len(a) == 10, q
 
 
-def test_compaction_byte_identical_and_marker_preserving(spark, identified, tmp_path):
-    """Kill after 3/4 batches -> compact batches 0-2 into one segment ->
-    GC the covered batch dirs -> resume -> merge. The final index must be
-    byte-identical to a clean build, and lineage must still carry one row
-    per ORIGINAL batch (segments embed source markers)."""
-    import os
+def test_kill_during_compaction_is_ignored(
+    spark, identified, single, batch_catalog, run_batch_build, batch_commits,
+    monkeypatch,
+):
+    """A compaction killed after writing its segment leaves the head
+    serving every batch; the rerun commits no batch, compacts once, and
+    ``expire`` collects the orphan."""
+    cat = batch_catalog
+    cat.rollback(3)  # all batches committed, not yet compacted
+    head = cat.head()
+    real = SnapshotCatalog._commit_apply
 
-    from google_spark.operators.incremental import (
-        committed_batches,
-        committed_segments,
-        compact_batches,
-        gc_compacted,
-        incremental_build,
-    )
+    def killed(self, operation, apply_fn):
+        if operation == "compact":
+            raise RuntimeError("killed before the compaction committed")
+        return real(self, operation, apply_fn)
 
-    out = str(tmp_path / "cmp")
-    got = incremental_build(
-        spark, identified, out, n_batches=4,
-        id_col="doc_id", text_col="content", stop_after=3,
-    )
-    assert got is None
-    compact_batches(spark, out, 0, 2)
-    assert committed_segments(out) == [(0, 2)]
-    assert sorted(gc_compacted(out)) == [0, 1, 2]
-    # covered batch dirs are gone; only batch 3 remains to build
-    assert committed_batches(out, 4) == []
-    resumed = incremental_build(
-        spark, identified, out, n_batches=4, id_col="doc_id", text_col="content"
-    )
-    clean = incremental_build(
-        spark, identified, str(tmp_path / "cmp_clean"), n_batches=4,
-        id_col="doc_id", text_col="content",
-    )
-    assert _postings_map(resumed) == _postings_map(clean)
-    # marker-preserving lineage: one row per original batch, doc-count exact
-    lineage = spark.read.parquet(os.path.join(out, "lineage.parquet"))
-    rows = {r["batch"]: r for r in lineage.collect()}
-    assert set(rows) == {0, 1, 2, 3}
-    assert sum(r["n_docs"] for r in rows.values()) == identified.count()
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotCatalog, "_commit_apply", killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_batch_build(identified, cat.root)
+    assert cat.head() == head and len(cat.manifest().segments) == 3
 
-
-def test_kill_during_compaction_is_ignored(spark, identified, tmp_path):
-    """A segment dir without _COMMITTED (kill mid-compaction) must not
-    affect the merge: batch dirs still serve it, bytes identical."""
-    import os
-
-    from google_spark.operators.incremental import (
-        _segment_dir,
-        incremental_build,
-    )
-
-    out = str(tmp_path / "killseg")
-    incremental_build(
-        spark, identified, out, n_batches=4,
-        id_col="doc_id", text_col="content", stop_after=4,
-    )
-    # orphan, uncommitted segment covering 0-1 (garbage postings on purpose)
-    sdir = _segment_dir(out, 0, 1)
-    os.makedirs(sdir, exist_ok=True)
-    with open(os.path.join(sdir, "junk.txt"), "w") as f:
-        f.write("partial write, no marker")
-    resumed = incremental_build(
-        spark, identified, out, n_batches=4, id_col="doc_id", text_col="content"
-    )
-    clean = incremental_build(
-        spark, identified, str(tmp_path / "killseg_clean"), n_batches=4,
-        id_col="doc_id", text_col="content",
-    )
-    assert _postings_map(resumed) == _postings_map(clean)
-
-
-def test_overlapping_segments_resolve_largest_first(spark, identified, tmp_path):
-    """A later, larger compaction supersedes a smaller overlapping one; the
-    merge never double-counts a batch."""
-    from google_spark.operators.incremental import (
-        _resolve_inputs,
-        compact_batches,
-        incremental_build,
-    )
-
-    out = str(tmp_path / "overlap")
-    incremental_build(
-        spark, identified, out, n_batches=4, id_col="doc_id", text_col="content"
-    )
-    compact_batches(spark, out, 0, 1)
-    compact_batches(spark, out, 0, 2)  # larger span, overlaps the first
-    segs, loose = _resolve_inputs(out, 4)
-    assert segs == [(0, 2)] and loose == [3]
-    resumed = incremental_build(
-        spark, identified, out, n_batches=4, id_col="doc_id", text_col="content"
-    )
-    clean = incremental_build(
-        spark, identified, str(tmp_path / "overlap_clean"), n_batches=4,
-        id_col="doc_id", text_col="content",
-    )
-    assert _postings_map(resumed) == _postings_map(clean)
-
-
-def test_hierarchical_compaction_and_gc(spark, identified, tmp_path):
-    """Binpack pattern at stream scale: compact 0-1, GC (batches 0-1
-    gone), then re-compact 0-3 FROM seg 0-1 + loose batches 2-3, GC again
-    (superseded seg 0-1 removed). Final merge byte-identical to a clean
-    build; lineage still one row per original batch."""
-    import os
-
-    from google_spark.operators.incremental import (
-        _resolve_inputs,
-        _segment_dir,
-        committed_segments,
-        compact_batches,
-        gc_compacted,
-        incremental_build,
-    )
-
-    out = str(tmp_path / "hier")
-    incremental_build(
-        spark, identified, out, n_batches=4,
-        id_col="doc_id", text_col="content", stop_after=4,
-    )
-    compact_batches(spark, out, 0, 1)
-    assert sorted(gc_compacted(out)) == [0, 1]
-    compact_batches(spark, out, 0, 3)  # sources: seg 0-1 + batches 2,3
-    assert committed_segments(out) == [(0, 1), (0, 3)]
-    gc_compacted(out)
-    # superseded seg 0-1 collected; only the big segment remains
-    assert committed_segments(out) == [(0, 3)]
-    assert not os.path.isdir(_segment_dir(out, 0, 1))
-    segs, loose = _resolve_inputs(out, 4)
-    assert segs == [(0, 3)] and loose == []
-    resumed = incremental_build(
-        spark, identified, out, n_batches=4, id_col="doc_id", text_col="content"
-    )
-    clean = incremental_build(
-        spark, identified, str(tmp_path / "hier_clean"), n_batches=4,
-        id_col="doc_id", text_col="content",
-    )
-    assert _postings_map(resumed) == _postings_map(clean)
-    lineage = spark.read.parquet(os.path.join(out, "lineage.parquet"))
-    assert {r["batch"] for r in lineage.collect()} == {0, 1, 2, 3}
-
-
-def test_gc_keeps_batches_of_ignored_overlapping_segment(spark, identified, tmp_path):
-    """seg 0-2 and seg 1-3 overlap; the resolver chooses 0-2 and serves 3
-    from its loose batch dir. GC must NOT collect batch 3 (covered only by
-    the ignored segment) or the merge would lose it."""
-    from google_spark.operators.incremental import (
-        _resolve_inputs,
-        committed_batches,
-        compact_batches,
-        gc_compacted,
-        incremental_build,
-    )
-
-    out = str(tmp_path / "ovl")
-    incremental_build(
-        spark, identified, out, n_batches=4,
-        id_col="doc_id", text_col="content", stop_after=4,
-    )
-    compact_batches(spark, out, 0, 2)
-    compact_batches(spark, out, 1, 3)
-    assert sorted(gc_compacted(out)) == [0, 1, 2]
-    assert committed_batches(out, 4) == [3]  # batch 3 survives GC
-    segs, loose = _resolve_inputs(out, 4)
-    assert segs == [(0, 2)] and loose == [3]
-    resumed = incremental_build(
-        spark, identified, out, n_batches=4, id_col="doc_id", text_col="content"
-    )
-    clean = incremental_build(
-        spark, identified, str(tmp_path / "ovl_clean"), n_batches=4,
-        id_col="doc_id", text_col="content",
-    )
-    assert _postings_map(resumed) == _postings_map(clean)
-
-
-def test_resume_skips_segment_covered_batches_and_fresh_base(spark, identified, tmp_path):
-    """After compact+GC: (a) resume must NOT rebuild the covered batches
-    (their only copy lives in the segment; rebuilding re-pays O(corpus)
-    work the resolver then ignores), (b) a NEW stream's batch base must
-    clear the segment range (ids below it would be silently dropped by the
-    merge), (c) re-running the same compaction is an idempotent no-op even
-    though its source batches are gone."""
-    from google_spark.operators.incremental import (
-        _batch_dir,
-        compact_batches,
-        gc_compacted,
-        incremental_build,
-    )
-    from google_spark.streaming.ingest import _fresh_batch_base
-
-    out = str(tmp_path / "skiprebuild")
-    incremental_build(
-        spark, identified, out, n_batches=4,
-        id_col="doc_id", text_col="content", stop_after=3,
-    )
-    compact_batches(spark, out, 0, 2)
-    gc_compacted(out)
-    assert _fresh_batch_base(out) == 3  # segment hi + 1, not 0
-    resumed = incremental_build(
-        spark, identified, out, n_batches=4, id_col="doc_id", text_col="content"
-    )
-    # covered batches were NOT rebuilt: their dirs stay absent
-    for b in (0, 1, 2):
-        assert not os.path.isdir(_batch_dir(out, b)), b
-    assert _fresh_batch_base(out) == 4
-    compact_batches(spark, out, 0, 2)  # committed target -> no-op, no raise
-    clean = incremental_build(
-        spark, identified, str(tmp_path / "skiprebuild_clean"), n_batches=4,
-        id_col="doc_id", text_col="content",
-    )
-    assert _postings_map(resumed) == _postings_map(clean)
-
-
-def test_write_index_rewrite_clears_stale_deletes(spark, tmp_path):
-    """Review finding: a same-path rewrite from a tombstone-free index
-    must clear deletes.parquet left by an earlier delete_from_index, or
-    the rebuilt docs stay invisibly masked forever."""
-    from google_spark.operators.index_build import (
-        build_index,
-        delete_from_index,
-        read_index,
-        write_index,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "delta epsilon zeta")],
-        "doc_id long, text string",
-    )
-    out = str(tmp_path / "widx")
-    idx = build_index(spark, docs, id_col="doc_id", text_col="text")
-    write_index(idx, out)
-    delete_from_index(out, [1])
-    assert read_index(spark, out).deletes is not None
-    # rebuild (e.g. from a compacted corpus) into the SAME path
-    write_index(build_index(spark, docs, id_col="doc_id", text_col="text"), out)
-    assert read_index(spark, out).deletes is None
+    seg = run_batch_build(identified, cat.root)
+    assert batch_commits == []
+    assert cat.head() == head + 1 and cat.manifest().operation == "compact"
+    _assert_equals_single_shot(read_index(spark, seg), single)
+    cat.expire(keep_last=1, orphan_grace_s=0)
+    assert os.listdir(cat.data_dir) == [os.path.basename(seg)]

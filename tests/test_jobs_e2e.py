@@ -69,14 +69,22 @@ def test_jobs_end_to_end(corpus_parquet, tmp_path):
     assert build["n_docs"] == 300
     assert build["batches"] == 2
     assert build["index_bytes"] > 0
-    assert (out / "index" / "stats.parquet").exists()
-    assert (out / "lineage.parquet").exists()
+    assert os.path.exists(os.path.join(build["index"], "stats.parquet"))
+    # the catalog log is the lineage table: one tagged commit per batch,
+    # then the compaction that published build["index"]
+    from google_spark.operators.catalog import SnapshotCatalog
+
+    log = SnapshotCatalog(str(out)).log()
+    assert [m["operation"] for m in log] == ["overwrite", "append", "compact"]
+    assert [m["summary"].get("batch") for m in log[:2]] == [0, 1]
+    assert sum(m["summary"]["batch_docs"] for m in log[:2]) == 300
+    assert log[-1]["version"] == build["version"]
 
     # 2) top-k query job against the published index
     q = _run(
         [
             sys.executable, "jobs/query_topk.py",
-            "--index", str(out / "index"),
+            "--index", build["index"],
             "--query", "data partition", "-k", "5", "--cores", "8",
         ]
     )

@@ -226,13 +226,12 @@ def test_catalog_segments_layout(spark, docs, base_catalog, tmp_path):
     assert len(cat.manifest().segments) == 2
 
 
-def test_incremental_merge_layout(spark, docs, tmp_path):
-    from google_spark.operators.incremental import incremental_build
+def test_incremental_merge_layout(spark, docs, batch_build):
+    from google_spark.operators.index_build import read_index
 
-    out = str(tmp_path / "inc")
-    idx = incremental_build(spark, docs, out, n_batches=2, text_col="content")
-    _assert_compact_layout(os.path.join(out, "index"))
-    _assert_matches_oracle(idx, docs)
+    seg = batch_build[1]  # the batch build's compacted segment
+    _assert_compact_layout(seg)
+    _assert_matches_oracle(read_index(spark, seg), docs)
 
 
 def test_trigram_append_layout(spark, bundle, tmp_path):

@@ -777,20 +777,15 @@ def test_torn_tmp_delete_file_is_invisible(tmp_path):
     assert list(read_delete_file(d)) == [1, 2, 3, 7]
 
 
-def test_write_trigram_rewrite_clears_segments_and_epochs(
+def test_write_trigram_rewrite_clears_segments(
     spark, tri_docs, tri_index, tmp_path
 ):
     """Review finding: bundle overwrite must clear stale appended
-    segments (read would union resurrected docs back in) and the
-    streaming high-water mark (a reset stream's replayed epochs would be
-    treated as already committed and silently dropped)."""
-    import json
-    import os
-
+    segments (read would union resurrected docs back in)."""
     from google_spark.operators.trigram import (
         append_trigram_index,
         read_trigram_index,
-        trigram_epoch_done,
+        trigram_segments,
     )
 
     out = str(tmp_path / "tri_rewrite")
@@ -798,16 +793,10 @@ def test_write_trigram_rewrite_clears_segments_and_epochs(
     extra = spark.createDataFrame(
         [(900, "zzqqy unique gram payload")], "doc_id long, text string"
     )
-    append_trigram_index(
-        spark, out, extra, id_col="doc_id", text_col="text",
-        tags={"stream_id": "s1", "stream_epoch": 7},
-    )
-    with open(os.path.join(out, "_stream_epochs.json"), "w") as f:
-        json.dump({"s1": 7}, f)
-    assert trigram_epoch_done(out, "s1", 7)
+    append_trigram_index(spark, out, extra, id_col="doc_id", text_col="text")
     n_before = read_trigram_index(spark, out).n_docs
 
     write_trigram_index(tri_index, out)  # full rewrite
     re = read_trigram_index(spark, out)
     assert re.n_docs == tri_index.n_docs and re.n_docs < n_before
-    assert not trigram_epoch_done(out, "s1", 7)  # HWM cleared
+    assert trigram_segments(out) == []
