@@ -81,6 +81,16 @@ from google_spark.session import LazyParquet, SparkSource
 DELETES_SCHEMA = "doc_id long"
 
 
+def _catalog_summary(summary: dict) -> dict:
+    """The catalog's own keys of ``summary`` (counters, ``n_buckets``,
+    ``stream_epochs``): what a delete or rollback manifest carries over
+    from the snapshot it derives from. A caller's tags (batch lineage,
+    ``stream_id``/``stream_epoch``) belong to their own commit only."""
+    own = ("n_docs", "avgdl", "total_dl", "n_buckets", "n_deletes",
+           "n_pending", "stream_epochs")
+    return {k: summary[k] for k in own if k in summary}
+
+
 class ConcurrentCommitError(RuntimeError):
     """The head snapshot moved between planning and committing an
     operation whose plan depends on snapshot state (upsert/compact).
@@ -700,7 +710,7 @@ class SnapshotCatalog:
                 ids = np.setdiff1d(ids, existing)
             path = self._new_data_path("d", parent.version + 1, ".parquet")
             write_doc_id_file(path, ids)
-            summary = dict(parent.summary)
+            summary = _catalog_summary(parent.summary)
             summary["n_deletes"] = int(summary.get("n_deletes", 0)) + int(len(ids))
             # a plain delete leaves n_docs/avgdl frozen (scores of survivors
             # must not move until compact); n_pending records how many
@@ -723,7 +733,7 @@ class SnapshotCatalog:
         readable (time travel) until :meth:`expire`, and expire's
         reference-based GC keeps every file the rollback head needs."""
         m = self.manifest(version)
-        summary = dict(m.summary)
+        summary = _catalog_summary(m.summary)
         summary["rolled_back_to"] = int(version)
         # Pin the TARGET's stream high-water marks explicitly (an empty map
         # when the target carries none). Without the key present,
@@ -731,10 +741,6 @@ class SnapshotCatalog:
         # discarded epochs could never re-append — a resuming writer would
         # treat the lost data as already committed forever.
         summary["stream_epochs"] = dict(m.summary.get("stream_epochs", {}))
-        # a rollback is not itself a stream commit: drop any tag the target
-        # carried so _commit_apply doesn't re-fold it into the marks
-        summary.pop("stream_id", None)
-        summary.pop("stream_epoch", None)
         return self._commit("rollback", m.segments, m.deletes, summary)
 
     # -- reads ------------------------------------------------------------

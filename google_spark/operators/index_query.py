@@ -17,8 +17,7 @@ or that the serving tier does not cover:
   TakeOrderedAndProject), the analog of the reference's singleSearch full
   scan (ref: src/cis5550/jobs/RankScore.java:147-185). ``scoring=
   "ref_tfidf"`` is the only copy of the reference's own TF-IDF formula,
-  and it is the scorer behind ``spelling.fuzzy_topk`` and
-  ``fusion.hybrid_topk``.
+  and the scan engine is the scorer behind ``spelling.fuzzy_topk``.
 - ``prefix_topk``/``wildcard_topk``/``regexp_term_topk``: expand against
   the whole term dictionary (the facade expands the top-df vocabulary).
 - ``facet_counts``: uncapped (the facade caps its candidates).

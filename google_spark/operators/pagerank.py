@@ -189,80 +189,6 @@ def pagerank(
     return ranks
 
 
-def hits(
-    edges: DataFrame,
-    n_iter: int = 2,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    checkpoint_interval: int = 4,
-) -> DataFrame:
-    """(node, authority, hub) — HITS (Kleinberg 1999), the classic sibling
-    of PageRank: authority(v) = sum of hub over in-neighbors, hub(u) = sum
-    of authority over out-neighbors, both L1-normalized after every
-    half-step so a fixed iteration count is engine-reproducible (the SQL
-    oracle unrolls the same rounds; same fixed-iteration contract as
-    ``pagerank(exact_iters=...)``).
-
-    Scale shape mirrors :func:`pagerank`: each half-step is one edge-keyed
-    join plus one hash aggregate at node grain; the normalizer is collected
-    as a scalar (one one-row job), so each half-step's plan holds the
-    previous vector once — a normalizer joined back in as a subplan holds
-    it twice, and the plan doubles every half-step (three rounds on a
-    4-edge graph took an 11 GB driver). Lineage is truncated with
-    localCheckpoint on the same cadence. Rounds are O(|E|) shuffles —
-    HITS converges in a few rounds on web-ish graphs, and fixed small
-    n_iter is the contract here."""
-    from pyspark.sql import functions as F
-
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-
-    def _normalize(df: DataFrame, col: str) -> DataFrame:
-        total = df.agg(F.sum(col).alias("_t")).collect()[0]["_t"]
-        return df.select("node", (F.col(col) / F.lit(total)).alias(col))
-
-    h = nodes.withColumn("hub", F.lit(1.0))
-    a = nodes.withColumn("authority", F.lit(0.0))
-    for it in range(n_iter):
-        a_raw = (
-            e.join(h, e.src == h.node)
-            .groupBy("dst")
-            .agg(F.sum("hub").alias("authority"))
-        )
-        a = _normalize(
-            nodes.join(a_raw, nodes.node == a_raw.dst, "left").select(
-                "node", F.coalesce("authority", F.lit(0.0)).alias("authority")
-            ),
-            "authority",
-        )
-        h_raw = (
-            e.join(a, e.dst == a.node)
-            .groupBy("src")
-            .agg(F.sum("authority").alias("hub"))
-        )
-        h = _normalize(
-            nodes.join(h_raw, nodes.node == h_raw.src, "left").select(
-                "node", F.coalesce("hub", F.lit(0.0)).alias("hub")
-            ),
-            "hub",
-        )
-        if (it + 1) % checkpoint_interval == 0 or it == n_iter - 1:
-            a = a.localCheckpoint()
-            h = h.localCheckpoint()
-    out = (
-        a.join(h, "node")
-        .select("node", "authority", "hub")
-        .orderBy("node")
-    )
-    nodes.unpersist()
-    return out
-
-
 def synthetic_doc_graph(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministic test graph over an arbitrary doc table: each doc links
     to ``(doc_id*17 + k) mod N`` for k in (1, 5, 11), self-loops dropped.

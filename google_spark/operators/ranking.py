@@ -6,9 +6,10 @@
 - phrase/proximity scoring from the positional index (ref:
   src/cis5550/jobs/RankScore.java:187-300): for each adjacent query-term
   pair co-occurring in a doc, bonus += 1/min_pairwise_gap;
-- priority blend (ref: src/cis5550/jobs/RankScore.java:24-31,43-62):
+- priority blend weights (ref: src/cis5550/jobs/RankScore.java:24-31,43-62):
   ``W_RANK·pagerank + W_TEXT·bm25`` plus a boost when a query term appears
-  in the doc's path/title — weights are module constants so rank-parity
+  in the doc's path/title; the facade's ``SearchEngine._search_uncached``
+  applies the blend, and the weights are module constants so rank-parity
   tests can reference them;
 - snippet generation for the final page of k docs only (ref:
   src/cis5550/jobs/SearchApi.java:335-377).
@@ -227,58 +228,6 @@ def proximity_bonus(doc_terms: DataFrame, terms: list[str]) -> DataFrame:
         )
         out = pair_bonus if out is None else out.unionByName(pair_bonus)
     return out.groupBy("doc_id").agg(F.sum("b").alias("prox_bonus"))
-
-
-def priority_score(
-    bm25_scores: DataFrame,
-    ranks: DataFrame,
-    doc_meta: DataFrame | None = None,
-    terms: list[str] | None = None,
-    path_col: str = "path",
-    title_col: str | None = None,
-) -> DataFrame:
-    """Blend text score with the link signal plus path/title boosts.
-
-    ``bm25_scores``: DataFrame[doc_id, score]; ``ranks``: DataFrame[node,
-    rank] keyed by repo (or doc) — joined through ``doc_meta`` when the rank
-    is per-repo. ``doc_meta``: DataFrame[doc_id, repo, path[, title]]
-    (optional); pass ``title_col`` to boost on docstore titles too (ref:
-    src/cis5550/jobs/RankScore.java:51-60 boosts title and url alike).
-    """
-    from pyspark.sql import functions as F
-
-    scored = bm25_scores
-    if doc_meta is not None:
-        scored = scored.join(doc_meta, "doc_id", "left")
-        scored = scored.join(
-            ranks.withColumnRenamed("node", "repo"), "repo", "left"
-        )
-    else:
-        scored = scored.join(
-            ranks.withColumnRenamed("node", "doc_id"), "doc_id", "left"
-        )
-    scored = scored.withColumn(
-        "rank", F.coalesce(F.col("rank"), F.lit(DEFAULT_RANK))
-    )
-    priority = F.lit(W_RANK) * F.col("rank") + F.lit(W_TEXT) * F.col("score")
-    if doc_meta is not None and terms:
-        # word-boundary match of any query term in the path (the url-boost
-        # analog, ref: src/cis5550/jobs/RankScore.java:51-60)
-        pattern = "(?i)\\b(" + "|".join(terms) + ")\\b"
-        priority = priority + F.when(
-            F.col(path_col).rlike(pattern), F.lit(W_PATH_BOOST)
-        ).otherwise(F.lit(0.0))
-        if title_col is not None:
-            priority = priority + F.when(
-                F.col(title_col).rlike(pattern), F.lit(W_TITLE_BOOST)
-            ).otherwise(F.lit(0.0))
-    return scored.withColumn("priority", priority).select(
-        *(
-            ["doc_id", "score", "rank", "priority"]
-            + ([path_col] if doc_meta is not None else [])
-            + ([title_col] if doc_meta is not None and title_col else [])
-        )
-    )
 
 
 def snippets(

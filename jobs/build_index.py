@@ -16,12 +16,15 @@ checksum, its docs and bytes and its start time (its seconds are
 lineage table.
 
 Resume: every batch commit advances the catalog's ``stream_epochs``
-high-water mark of the ``build`` stream, which every later commit carries
-and ``expire`` keeps. A rerun (after a crash, with the same
-``--n-batches``) starts after the last committed batch; a rerun of a
-finished build commits nothing. After the last batch one ``compact``
-folds the segments into one; the job prints that segment's directory as
-``index``, which ``jobs/query_topk.py --index`` reads.
+high-water mark of the ``build/<n_batches>`` stream, which every later
+commit carries and ``expire`` keeps. A rerun (after a crash) starts after
+the last committed batch; a rerun of a finished build commits nothing.
+The split is part of the stream id, so a rerun with another
+``--n-batches`` finds no mark and starts again at batch 0, whose
+overwrite commit replaces the index and keeps only its own mark. After
+the last batch one ``compact`` folds the segments into one; the job
+prints that segment's directory as ``index``, which
+``jobs/query_topk.py --index`` reads.
 
 Also runnable as plain ``python jobs/build_index.py`` (the session factory
 self-ships the package to executors). Prints one JSON metrics line.
@@ -52,19 +55,20 @@ def build_batches(
     mode: str = "simple",
     n_shards: int = 8,
 ) -> str:
-    """Commit the batches after the catalog's ``build`` mark, compact a
-    head of several segments (or with delete files) into one segment, and
-    return that segment's directory (a
+    """Commit the batches after the catalog's ``build/<n_batches>`` mark,
+    compact a head of several segments (or with delete files) into one
+    segment, and return that segment's directory (a
     :func:`~google_spark.operators.index_build.write_index` layout)."""
     from pyspark.sql import functions as F
 
     from google_spark.operators.catalog import SnapshotCatalog
 
     cat = SnapshotCatalog(root)
+    stream = f"{BUILD_STREAM}/{n_batches}"
     done = -1
     if cat.head() is not None:
         marks = cat.manifest().summary.get("stream_epochs", {})
-        done = int(marks.get(BUILD_STREAM, -1))
+        done = int(marks.get(stream, -1))
     for b in range(done + 1, n_batches):
         started = time.time()
         batch = docs.filter(
@@ -84,7 +88,7 @@ def build_batches(
         ).collect()[0]
         n = int(agg["n"] or 0)
         tags = {
-            "stream_id": BUILD_STREAM,
+            "stream_id": stream,
             "stream_epoch": b,
             "batch": b,
             "content_checksum": f"{n}:{int(agg['x'] or 0):015x}",
@@ -92,6 +96,10 @@ def build_batches(
             "batch_bytes": int(agg["nb"] or 0),
             "batch_started_at": started,
         }
+        if b == 0:
+            # the overwrite drops every earlier commit's docs, so no
+            # earlier mark (another split's) may survive it
+            tags["stream_epochs"] = {stream: 0}
         commit = cat.commit_build if b == 0 else cat.append_docs
         commit(
             spark, batch, id_col=id_col, text_col=text_col, mode=mode,
@@ -139,6 +147,7 @@ def main() -> None:
     )
     wall = time.perf_counter() - t0
     cat = SnapshotCatalog(args.out)
+    marks = cat.manifest().summary["stream_epochs"]
     index = read_index(spark, seg)
     print(
         json.dumps(
@@ -149,7 +158,7 @@ def main() -> None:
                 "avgdl": round(index.avgdl, 4),
                 "wall_s": round(wall, 3),
                 "docs_per_sec": round(n_docs / wall, 2),
-                "batches": cat.manifest().summary["stream_epochs"][BUILD_STREAM] + 1,
+                "batches": marks[f"{BUILD_STREAM}/{args.n_batches}"] + 1,
                 "version": cat.head(),
                 "index": seg,
                 "index_bytes": sum(

@@ -29,13 +29,15 @@ def corpus_df(spark, corpus_pdf):
 
 @pytest.fixture(scope="session")
 def run_batch_build(spark):
-    """``jobs/build_index.py``'s batch loop over the test corpus in 3
-    batches: ``run(docs, root)`` returns the compacted segment dir of the
-    catalog at ``root``."""
+    """``jobs/build_index.py``'s batch loop over the test corpus, in 3
+    batches unless told otherwise: ``run(docs, root)`` returns the
+    compacted segment dir of the catalog at ``root``."""
     from jobs.build_index import build_batches
 
-    def run(docs, root):
-        return build_batches(spark, docs, root, n_batches=3, text_col="content")
+    def run(docs, root, n_batches=3):
+        return build_batches(
+            spark, docs, root, n_batches=n_batches, text_col="content"
+        )
 
     return run
 

@@ -76,15 +76,22 @@ def test_title_boost_promotes_title_match(spark):
 
 
 def test_priority_score_title_boost_distributed(spark):
+    """The served blend boosts a query term in the path by W_PATH_BOOST
+    and in the docstore title by W_TITLE_BOOST, on top of
+    W_RANK·rank + W_TEXT·bm25 (RankScore.java:51-60 boosts title and url
+    alike). Equal texts give equal BM25, so the boosts are the gaps."""
+    from google_spark.operators.index_build import build_index
     from google_spark.operators.ranking import (
         W_PATH_BOOST,
+        W_RANK,
+        W_TEXT,
         W_TITLE_BOOST,
-        priority_score,
     )
+    from google_spark.oracle import OracleIndex
+    from google_spark.search import SearchEngine
 
-    scores = spark.createDataFrame(
-        [(1, 1.0), (2, 1.0), (3, 1.0)], "doc_id long, score double"
-    )
+    texts = [(d, "alpha beta gamma") for d in (1, 2, 3)]
+    docs = spark.createDataFrame(texts, "doc_id long, content string")
     meta = spark.createDataFrame(
         [
             (1, "r1", "src/alpha.py", "no match"),
@@ -93,13 +100,10 @@ def test_priority_score_title_boost_distributed(spark):
         ],
         "doc_id long, repo string, path string, title string",
     )
-    ranks = spark.createDataFrame([("r1", 0.5)], "node string, rank double")
-    out = {
-        r["doc_id"]: r["priority"]
-        for r in priority_score(
-            scores, ranks, meta, terms=["alpha"], title_col="title"
-        ).collect()
-    }
+    eng = SearchEngine(build_index(spark, docs, text_col="content"), {"r1": 0.5}, meta)
+    out = {r.doc_id: r.priority for r in eng.search("alpha", k=3)}
+    bm25 = OracleIndex(texts).bm25("alpha", 3)
+    assert out[3] == pytest.approx(W_RANK * 0.5 + W_TEXT * bm25)
     assert out[1] - out[3] == pytest.approx(W_PATH_BOOST)
     assert out[2] - out[3] == pytest.approx(W_TITLE_BOOST)
 

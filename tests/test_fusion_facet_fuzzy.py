@@ -1,5 +1,5 @@
-"""Round-4 third-wave operators: reciprocal-rank fusion / hybrid search,
-faceted search counts, and typo-tolerant (fuzzy) retrieval."""
+"""Round-4 third-wave operators: faceted search counts and typo-tolerant
+(fuzzy) retrieval."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import dataclasses
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 DOCS = [
     (1, "hash join hash join fast scan", "en", "web"),
@@ -32,90 +31,6 @@ def index(spark, docs):
     from google_spark.operators.index_build import build_index
 
     return build_index(spark, docs, id_col="doc_id", text_col="text")
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    # doc 1 and 2 point the same way; doc 3 orthogonal; 4/5 mixed
-    rows = [
-        (1, [1.0, 0.0, 0.0]),
-        (2, [0.9, 0.1, 0.0]),
-        (3, [0.0, 1.0, 0.0]),
-        (4, [0.5, 0.5, 0.0]),
-        (5, [0.0, 0.0, 1.0]),
-    ]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-# ---------------------------------------------------------------- rrf_fuse
-
-
-def test_rrf_fuse_hand_computed(spark):
-    from google_spark.operators.fusion import rrf_fuse
-
-    a = spark.createDataFrame(
-        [(10, 3.0), (20, 2.0), (30, 1.0)], "doc_id long, score double"
-    )
-    b = spark.createDataFrame(
-        [(20, 9.0), (40, 8.0)], "doc_id long, s2 double"
-    )
-    got = {
-        r["doc_id"]: r["rrf_score"]
-        for r in rrf_fuse([(a, "score"), (b, "s2")], k=10).collect()
-    }
-    exp = {
-        10: round(1 / 61, 6),
-        20: round(1 / 62 + 1 / 61, 6),  # rank 2 in a, rank 1 in b
-        30: round(1 / 63, 6),
-        40: round(1 / 62, 6),
-    }
-    assert got == exp
-
-
-def test_rrf_fuse_rank_ties_break_by_id(spark):
-    from google_spark.operators.fusion import rrf_fuse
-
-    # equal scores after round-4 -> rank order is id asc
-    a = spark.createDataFrame(
-        [(5, 1.00001), (3, 1.00002)], "doc_id long, score double"
-    )
-    got = [
-        (r["doc_id"], r["rrf_score"])
-        for r in rrf_fuse([(a, "score")], k=10).collect()
-    ]
-    assert got == [(3, round(1 / 61, 6)), (5, round(1 / 62, 6))]
-
-
-def test_rrf_fuse_empty_raises():
-    from google_spark.operators.fusion import rrf_fuse
-
-    with pytest.raises(ValueError):
-        rrf_fuse([])
-
-
-def test_hybrid_topk_matches_manual_fusion(index, emb):
-    from google_spark.operators.fusion import hybrid_topk, rrf_fuse
-    from google_spark.operators.index_query import exhaustive_topk
-    from google_spark.operators.similarity import cosine_topk
-
-    got = {
-        r["doc_id"]: r["rrf_score"]
-        for r in hybrid_topk(
-            index, emb, "hash join", probe_vec_id=1, k=10, n_candidates=4
-        ).collect()
-    }
-    lex = exhaustive_topk(index, "hash join", k=4)
-    sem = cosine_topk(emb, 1, k=4).select(
-        F.col("vec_id").alias("doc_id"), "cos_sim"
-    )
-    exp = {
-        r["doc_id"]: r["rrf_score"]
-        for r in rrf_fuse([(lex, "score"), (sem, "cos_sim")], k=10).collect()
-    }
-    assert got == exp
-    # doc 2 ranks in both legs (lexical 'hash', cosine 0.9-ish) so it gets
-    # two contributions
-    assert got[2] > round(1 / 61, 6)
 
 
 # ------------------------------------------------------------ facet_counts

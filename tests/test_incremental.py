@@ -105,7 +105,7 @@ def test_kill_resume_byte_identical(
             run_batch_build(identified, root)
     cat = SnapshotCatalog(root)
     assert cat.versions() == [1] and cat.manifest().operation == "overwrite"
-    assert cat.manifest().summary["stream_epochs"] == {"build": 0}
+    assert cat.manifest().summary["stream_epochs"] == {"build/3": 0}
     assert len(os.listdir(cat.data_dir)) == 2  # batch 1's orphan segment
 
     cat.expire(keep_last=1, orphan_grace_s=0)
@@ -135,10 +135,33 @@ def test_resume_skips_committed_batches(
     third commit leaves) resumes with batch 2 only."""
     cat = batch_catalog
     cat.rollback(2)
-    assert cat.manifest().summary["stream_epochs"] == {"build": 1}
+    assert cat.manifest().summary["stream_epochs"] == {"build/3": 1}
     seg = run_batch_build(identified, cat.root)
     assert batch_commits == [("append_docs", 2)]
     _assert_equals_single_shot(read_index(spark, seg), single)
+
+
+def test_rerun_with_other_split_starts_over(
+    spark, identified, single, batch_catalog, run_batch_build, batch_commits
+):
+    """A finished 3-batch build rerun with 5 batches shares no mark with
+    it: the rerun commits all five batches, batch 0 overwriting, so the
+    head holds each doc once, equals a single-shot build and the oracle,
+    and carries only the new split's mark."""
+    cat = batch_catalog
+    seg = run_batch_build(identified, cat.root, n_batches=5)
+    assert batch_commits == [("commit_build", 0)] + [
+        ("append_docs", b) for b in range(1, 5)
+    ]
+    assert cat.manifest().summary["stream_epochs"] == {"build/5": 4}
+    index = read_index(spark, seg)
+    _assert_equals_single_shot(index, single)
+    oracle = OracleIndex(
+        [(r.doc_id, r.content) for r in identified.select("doc_id", "content").collect()]
+    )
+    for q in QUERIES:
+        got = [(d, round(s, 6)) for d, s in wand_topk_local(index, q, k=10)]
+        assert got == [(d, round(s, 6)) for d, s in oracle.topk(q, k=10)], q
 
 
 def test_lineage_metrics(identified, batch_build):

@@ -329,27 +329,6 @@ def test_index_build_single_exchange(spark, corpus_df):
     assert n_exchanges == 1, final
 
 
-def test_keyed_asof_single_exchange(spark):
-    """The keyed as-of join's executed plan carries exactly ONE data
-    shuffle (the union repartitioned on the key) — the window sort reuses
-    that partitioning."""
-    from google_spark.operators.joins import asof_join
-
-    left = spark.createDataFrame(
-        [(i, i % 3, float(i)) for i in range(60)], "id long, k int, t double"
-    )
-    right = spark.createDataFrame(
-        [(i + 500, i % 3, float(i) + 0.5) for i in range(60)],
-        "rid long, k int, t double",
-    )
-    df = asof_join(left, right, on="t", by="k")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    import re as _re
-
-    assert "CartesianProduct" not in plan
-    assert len(_re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
-
-
 def test_no_cartesian_in_core_candidate_plans(spark, corpus_df):
     """Pushdown/cross-product regression sweep over the candidate-
     generation plans most at risk: MinHash LSH pairs, SimHash chunk
@@ -480,20 +459,6 @@ def test_split_chunks_single_exchange(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_coclick_two_exchanges_no_join(spark):
-    """coclick_pairs: the whole pipeline is two hash exchanges (user
-    collect_set, pair counts) and ZERO joins — pair generation happens
-    scan-side via the nested transform over the capped per-user array."""
-    import re as _re
-
-    from google_spark.operators.similarity import coclick_pairs
-
-    ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
-    plan = _plan(coclick_pairs(ev))
-    assert len(_re.findall(r"Exchange hashpartitioning", plan)) == 2, plan
-    assert "Join" not in plan and "CartesianProduct" not in plan
-
-
 def test_novelty_shuffles_hash_keys_not_shingles(spark):
     """ngram_novelty: every hash exchange keys on the xxhash64 column or
     doc_id (fixed-width longs); the shingle string must not appear in any
@@ -507,19 +472,6 @@ def test_novelty_shuffles_hash_keys_not_shingles(spark):
     for m in _re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", plan):
         assert "shingle" not in m.group(1), m.group(0)
     assert "CartesianProduct" not in plan
-
-
-def test_ltr_scoring_is_codegen_expressions(spark):
-    """score_logistic folds weights in as literals: no joins, no
-    exchanges, no Python evaluation — one projected scan."""
-    from google_spark.operators.ltr import score_logistic
-
-    ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet").select(
-        F.col("value").alias("x1")
-    )
-    plan = _plan(score_logistic(ev, ["x1"], [0.1, -0.2]))
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_prf_pass2_prunes_to_query_terms(spark, monkeypatch):

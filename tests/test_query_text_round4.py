@@ -1,7 +1,7 @@
 """Round-4 second-wave operators: boolean retrieval, explain and NEAR
 through the serving facade (checked against OracleIndex), prefix/wildcard
-expansion, per-doc keyword extraction, PMI collocations, interpolated
-bigram-LM scoring, SemDeDup-style semantic dedup."""
+expansion, per-doc keyword extraction, PMI collocations and interpolated
+bigram-LM scoring."""
 
 from __future__ import annotations
 
@@ -416,81 +416,6 @@ def test_bigram_logprob_short_docs_zero(spark):
     got = {r["doc_id"]: (r["n_bigrams"], r["mean_logprob"])
            for r in bigram_logprob(df).collect()}
     assert got == {1: (0, 0.0), 2: (0, 0.0), 3: (0, 0.0)}
-
-
-# -------------------------------------------------------- semantic dedup
-
-
-def _emb_df(spark, vecs):
-    return spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in vecs],
-        "vec_id long, embedding array<double>",
-    )
-
-
-def test_semantic_dedup_drops_exact_copy_keeps_min_id(spark):
-    from google_spark.operators.similarity import semantic_dedup
-
-    base = [
-        (0, [1.0, 0.0, 0.0, 0.0]),
-        (1, [0.0, 1.0, 0.0, 0.0]),
-        (2, [0.0, 0.0, 1.0, 0.0]),
-        (3, [0.0, 0.0, 0.0, 1.0]),
-        (10, [1.0, 0.0, 0.0, 0.0]),   # copy of 0
-        (11, [0.99, 0.14, 0.0, 0.0]), # near 0 (cos ~0.99)
-    ]
-    got = {
-        r["vec_id"]: r["keep"]
-        for r in semantic_dedup(
-            _emb_df(spark, base), threshold=0.9, n_centroids=4, n_iters=0
-        ).collect()
-    }
-    assert got[0] is True and got[10] is False and got[11] is False
-    assert got[1] and got[2] and got[3]
-
-
-def test_semantic_dedup_chain_keeps_one_canonical(spark):
-    import numpy as np
-
-    from google_spark.operators.similarity import semantic_dedup
-
-    # A~B and B~C above threshold, A~C below: components semantics must
-    # keep exactly A (the pairwise-drop bug the streaming path used to have)
-    a = np.array([1.0, 0.0])
-    b = np.array([np.cos(0.4), np.sin(0.4)])
-    c = np.array([np.cos(0.8), np.sin(0.8)])
-    thr = 0.95  # cos(0.4)=0.921... -> need pairs: cos 0.4 apart = 0.921
-    thr = 0.9
-    assert a @ b > thr and b @ c > thr and a @ c < thr
-    got = {
-        r["vec_id"]: r["keep"]
-        for r in semantic_dedup(
-            _emb_df(spark, [(5, a), (6, b), (7, c)]),
-            threshold=thr,
-            n_centroids=1,
-            n_iters=0,
-        ).collect()
-    }
-    assert got == {5: True, 6: False, 7: False}
-
-
-def test_semantic_dedup_cluster_partition_blocks_cross_pairs(spark):
-    from google_spark.operators.similarity import semantic_dedup
-
-    # two identical vectors that land in DIFFERENT clusters are both kept:
-    # the quantizer bounds the pair search (SemDeDup's approximation,
-    # documented) — seed centroids are vec 0 and vec 1, which ARE the pair
-    vecs = [(0, [1.0, 0.0]), (1, [1.0, 0.0001])]
-    got = {
-        r["vec_id"]: (r["cluster"], r["keep"])
-        for r in semantic_dedup(
-            _emb_df(spark, vecs), threshold=0.99, n_centroids=2, n_iters=0
-        ).collect()
-    }
-    # assignment: each seed maps to its own centroid (cos=1 with itself
-    # beats the near-tie only by the tie-break; both orderings are valid
-    # one-per-cluster outcomes) — the invariant is that nothing is dropped
-    assert got[0][1] is True and got[1][1] is True
 
 
 def test_regexp_term_alternation_fully_anchored(index):

@@ -53,32 +53,46 @@ def test_proximity_bonus_matches_oracle(spark, corpus_df, corpus_pdf):
 
 
 def test_priority_score_blend_and_boost(spark):
+    """The served priority blend (``SearchEngine._search_uncached``):
+    W_RANK·rank + W_TEXT·bm25, plus W_PATH_BOOST when a query term is a
+    word of the path; a repo without a rank takes the reference default
+    (RankScore.java:49). The BM25 part is the oracle's."""
+    from google_spark.operators.index_build import build_index
     from google_spark.operators.ranking import (
         DEFAULT_RANK,
         W_PATH_BOOST,
         W_RANK,
         W_TEXT,
-        priority_score,
     )
+    from google_spark.search import SearchEngine
 
-    bm25 = spark.createDataFrame(
-        [(1, 2.0), (2, 1.0), (3, 5.0)], "doc_id long, score double"
-    )
-    ranks = spark.createDataFrame(
-        [("r1", 0.5), ("r2", 2.0)], "node string, rank double"
-    )
+    texts = [
+        (1, "hash map insert"),
+        (2, "hash hash probe side"),
+        (3, "hash join build side spill"),
+    ]
+    docs = spark.createDataFrame(texts, "doc_id long, content string")
     meta = spark.createDataFrame(
         [(1, "r1", "src/hash-map.py"), (2, "r2", "src/other.py"), (3, "r3", "x.py")],
         "doc_id long, repo string, path string",
     )
-    got = {
-        r["doc_id"]: r["priority"]
-        for r in priority_score(bm25, ranks, meta, terms=["hash"]).collect()
-    }
-    assert got[1] == pytest.approx(W_RANK * 0.5 + W_TEXT * 2.0 + W_PATH_BOOST)
-    assert got[2] == pytest.approx(W_RANK * 2.0 + W_TEXT * 1.0)
+    index = build_index(spark, docs, text_col="content")
+    eng = SearchEngine(index, {"r1": 0.5, "r2": 2.0}, meta)
+    got = {r.doc_id: r for r in eng.search("hash", k=3)}
+    oracle = OracleIndex(texts)
+    bm25 = {d: oracle.bm25("hash", d) for d, _ in texts}
+    assert set(got) == set(bm25)
+    for d, r in got.items():
+        assert r.score == pytest.approx(bm25[d], abs=1e-6)
+    assert got[1].priority == pytest.approx(
+        W_RANK * 0.5 + W_TEXT * bm25[1] + W_PATH_BOOST
+    )
+    assert got[2].priority == pytest.approx(W_RANK * 2.0 + W_TEXT * bm25[2])
     # unknown repo -> reference default rank 0.15 (RankScore.java:49)
-    assert got[3] == pytest.approx(W_RANK * DEFAULT_RANK + W_TEXT * 5.0)
+    assert got[3].rank == DEFAULT_RANK
+    assert got[3].priority == pytest.approx(
+        W_RANK * DEFAULT_RANK + W_TEXT * bm25[3]
+    )
 
 
 def test_snippets_first_occurrence(spark):

@@ -1,8 +1,9 @@
 """Per-stream high-water marks of the snapshot catalog (``stream_epochs``
 in every manifest summary), driven through the batch build
-(``jobs/build_index.py``), whose batch commits are the ``build`` stream's
-epochs: the mark survives manifest expiry, and a rollback resets it to
-the target's so the discarded batches are committed again."""
+(``jobs/build_index.py``), whose batch commits are the ``build/3``
+stream's epochs: the mark survives manifest expiry, a rollback resets it
+to the target's so the discarded batches are committed again, and a
+delete or rollback manifest carries the marks but no batch's tags."""
 
 from __future__ import annotations
 
@@ -36,7 +37,7 @@ def test_epoch_guard_survives_manifest_expiry(
     assert all("batch" not in m["summary"] for m in cat.log()), (
         "precondition: the tagged manifests are really gone"
     )
-    assert cat.manifest().summary["stream_epochs"] == {"build": 2}
+    assert cat.manifest().summary["stream_epochs"] == {"build/3": 2}
 
     head = cat.head()
     seg = run_batch_build(identified, cat.root)
@@ -51,14 +52,14 @@ def test_epoch_guard_survives_manifest_expiry(
         spark, extra, text_col="content",
         tags={"stream_id": "s2", "stream_epoch": 0},
     )
-    assert cat.manifest().summary["stream_epochs"] == {"build": 2, "s2": 0}
+    assert cat.manifest().summary["stream_epochs"] == {"build/3": 2, "s2": 0}
     cat.delete_docs([900000001])
-    assert cat.manifest().summary["stream_epochs"] == {"build": 2, "s2": 0}
+    assert cat.manifest().summary["stream_epochs"] == {"build/3": 2, "s2": 0}
     # the rerun builds no batch; it only folds the extra segment back in
     run_batch_build(identified, cat.root)
     assert batch_commits == [("append_docs", None)]
     assert cat.manifest().operation == "compact"
-    assert cat.manifest().summary["stream_epochs"] == {"build": 2, "s2": 0}
+    assert cat.manifest().summary["stream_epochs"] == {"build/3": 2, "s2": 0}
 
 
 def test_rollback_resets_stream_marks_and_replays(
@@ -73,13 +74,13 @@ def test_rollback_resets_stream_marks_and_replays(
     cat.rollback(1)
     m = cat.manifest()
     assert m.operation == "rollback"
-    assert m.summary["stream_epochs"] == {"build": 0}
+    assert m.summary["stream_epochs"] == {"build/3": 0}
     assert "stream_id" not in m.summary and "stream_epoch" not in m.summary
     assert int(m.summary["n_docs"]) == n_base
 
     seg = run_batch_build(identified, cat.root)
     assert batch_commits == [("append_docs", 1), ("append_docs", 2)]
-    assert cat.manifest().summary["stream_epochs"] == {"build": 2}
+    assert cat.manifest().summary["stream_epochs"] == {"build/3": 2}
     got, want = read_index(spark, seg), read_index(spark, batch_build[1])
     assert (got.n_docs, got.avgdl) == (want.n_docs, want.avgdl)
 
@@ -92,3 +93,21 @@ def test_rollback_resets_stream_marks_and_replays(
     head = cat.head()
     run_batch_build(identified, cat.root)
     assert cat.head() == head and len(batch_commits) == 2
+
+
+def test_delete_and_rollback_carry_no_batch_tags(identified, batch_catalog):
+    """A rollback or delete manifest carries the catalog's own summary
+    keys and marks, not the lineage tags of the commit it derives from."""
+    cat = batch_catalog
+    marks = cat.manifest().summary["stream_epochs"]
+    doc = identified.select("doc_id").first()["doc_id"]
+    cat.rollback(3)
+    cat.delete_docs([doc])
+    for v in cat.versions()[-2:]:
+        s = cat.manifest(v).summary
+        assert not {
+            "batch", "content_checksum", "batch_started_at", "stream_id",
+            "stream_epoch",
+        } & set(s), (v, s)
+        assert s["stream_epochs"] == marks == {"build/3": 2}
+    assert cat.manifest().summary["n_deletes"] == 1

@@ -1,8 +1,8 @@
-"""Text analysis, similarity search, multimodal plumbing."""
+"""Text analysis operators: language id, quality signals, license
+detection, entropy, code rules and Unicode normalization."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -108,164 +108,6 @@ def test_doc_fingerprint_stable_and_order_insensitive(spark):
     # same content -> same fingerprint across runs
     again = {r["doc_id"]: r["fingerprint"] for r in doc_fingerprint(docs).collect()}
     assert got == again
-
-
-@pytest.fixture(scope="module")
-def emb_df(spark):
-    rng = np.random.default_rng(3)
-    base = rng.standard_normal((8, 16))
-    rows = []
-    vid = 0
-    for c in range(8):
-        for _ in range(12):
-            v = base[c] + 0.05 * rng.standard_normal(16)
-            rows.append((vid, [float(x) for x in v]))
-            vid += 1
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_ann_recall_vs_brute_force(spark, emb_df):
-    from google_spark.operators.similarity import ann_lsh_topk, cosine_topk
-
-    exact = [r["vec_id"] for r in cosine_topk(emb_df, 0, k=10).collect()]
-    approx = [
-        r["vec_id"]
-        for r in ann_lsh_topk(emb_df, 0, k=10, n_tables=6, n_planes=6).collect()
-    ]
-    recall = len(set(exact) & set(approx)) / len(exact)
-    assert recall >= 0.8, (recall, exact, approx)
-
-
-def test_embedding_near_dups_lsh_vs_brute(spark, emb_df):
-    from google_spark.operators.similarity import embedding_near_dups
-
-    brute = {
-        (r["a"], r["b"])
-        for r in embedding_near_dups(emb_df, threshold=0.98, brute_force=True).collect()
-    }
-    lsh = {
-        (r["a"], r["b"])
-        for r in embedding_near_dups(
-            emb_df, threshold=0.98, n_tables=8, n_planes=4
-        ).collect()
-    }
-    assert brute  # clusters guarantee high-sim pairs exist
-    assert lsh <= brute  # LSH never invents pairs (same exact verify)
-    assert len(lsh) / len(brute) >= 0.8  # and finds most of them
-
-
-def test_multimodal_roundtrip_and_features(spark):
-    from google_spark.operators.multimodal import (
-        decode_payload,
-        extract_features,
-        resize_stub,
-        sample_frames,
-        synth_media_table,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"document body {i} " * (i + 1)) for i in range(10)],
-        "doc_id long, text string",
-    )
-    media = synth_media_table(spark, docs).persist()
-    assert media.count() == 10
-    feats = {r["media_id"]: r for r in extract_features(media).collect()}
-    for i in range(10):
-        body = (f"document body {i} " * (i + 1)).encode()
-        assert feats[i]["body_bytes"] == len(body)
-        assert feats[i]["byte_mean"] == pytest.approx(
-            sum(body) / len(body), abs=1e-9
-        )
-        assert feats[i]["width"] == 16 + (i % 16) * 8
-
-    resized = {r["media_id"]: r for r in resize_stub(media, max_side=32).collect()}
-    for i in range(10):
-        assert max(resized[i]["width"], resized[i]["height"]) <= 32
-        w, h, n, _ = decode_payload(bytes(resized[i]["payload"]))
-        assert (w, h, n) == (resized[i]["width"], resized[i]["height"], resized[i]["n_frames"])
-
-    frames = sample_frames(media, every=2).collect()
-    want = sum(len(range(0, 1 + i % 4, 2)) for i in range(10))
-    assert len(frames) == want
-    media.unpersist()
-
-
-def test_decode_rejects_foreign_format():
-    from google_spark.operators.multimodal import decode_payload
-
-    with pytest.raises(NotImplementedError):
-        decode_payload(b"JPEG" + b"\x00" * 16)
-
-
-def test_ivf_recall_vs_brute_force(spark, emb_df):
-    from google_spark.operators.similarity import ann_ivf_topk, cosine_topk
-
-    exact = [r["vec_id"] for r in cosine_topk(emb_df, 0, k=10).collect()]
-    approx = [
-        r["vec_id"]
-        for r in ann_ivf_topk(emb_df, 0, k=10, n_centroids=8, nprobe=3).collect()
-    ]
-    recall = len(set(exact) & set(approx)) / len(exact)
-    assert recall >= 0.8, (recall, exact, approx)
-
-
-def test_ann_missing_probe_id_raises_value_error(spark, emb_df):
-    """Every probe-by-id search names the missing id in a ValueError
-    (vec_ids in emb_df run 0..95)."""
-    from google_spark.operators.similarity import (
-        ann_ivf_topk,
-        ann_lsh_topk,
-        ivfpq_topk,
-        pq_topk,
-    )
-
-    for search in (ann_lsh_topk, ann_ivf_topk, pq_topk, ivfpq_topk):
-        with pytest.raises(ValueError, match="vec_id = 9999"):
-            search(emb_df, 9999, k=5)
-
-
-def test_ivf_assignments_cover_all_vectors(spark, emb_df):
-    from google_spark.operators.similarity import ivf_assignments
-
-    cents, assigned = ivf_assignments(emb_df, n_centroids=8)
-    rows = assigned.collect()
-    assert len(rows) == emb_df.count()
-    assert cents.shape == (8, 16)
-    assert {r["cluster"] for r in rows} <= set(range(8))
-
-
-def test_ivf_disk_index_roundtrip_and_pruning(spark, emb_df, tmp_path):
-    """Persisted IVF index: cluster-partitioned parquet, query scans only
-    nprobe partitions (pruning visible in the plan), results match the
-    in-memory IVF path for the same quantizer."""
-    import numpy as np
-
-    from google_spark.operators.similarity import (
-        ann_ivf_topk,
-        ivf_index_topk,
-        write_ivf_index,
-    )
-
-    out = str(tmp_path / "ivf")
-    write_ivf_index(emb_df, out, n_centroids=8, n_iters=2)
-    probe = np.array(
-        emb_df.filter("vec_id = 0").select("embedding").first()[0], dtype=np.float64
-    )
-    got = ivf_index_topk(spark, out, probe, k=11, nprobe=3)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "cluster" in plan  # partition filter reached the scan
-    mem = [
-        (r["vec_id"], round(r["cos_sim"], 6))
-        for r in ann_ivf_topk(emb_df, 0, k=10, n_centroids=8, nprobe=3).collect()
-    ]
-    disk = [
-        (r["vec_id"], round(r["cos_sim"], 6))
-        for r in got.collect()
-        if r["vec_id"] != 0  # external-probe path has no self-exclusion
-    ]
-    assert [d for d, _ in disk] == [d for d, _ in mem]
-    for (_, a), (_, b) in zip(disk, mem):
-        assert abs(a - b) < 1e-5
 
 
 def test_gopher_rules_signals_and_verdict(spark):
