@@ -1,13 +1,17 @@
 """Round-5 additions: RM3 pseudo-relevance feedback (through the
-serving facade, SearchEngine.prf), n-gram novelty scoring and the
-per-term postings cap. These tests pin the operator-level semantics: PRF
-widens the query with corpus-mined terms and stays rank-sane, novelty
-detects planted recycled text, and a capped index keeps corpus-true
-statistics.
+serving facade, SearchEngine.prf), the GD-trained CTR ranker, n-gram
+novelty scoring and the per-term postings cap. These tests pin the
+operator-level semantics: PRF widens the query with corpus-mined terms
+and stays rank-sane, GD matches a NumPy replica bit-for-bit under the
+9-dp gradient grid, novelty detects planted recycled text, and a capped
+index keeps corpus-true statistics.
 """
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -65,6 +69,59 @@ class TestPrf:
 
     def test_no_hits_falls_back_empty(self, toy_engine):
         assert toy_engine.prf("zzzznotaterm") == []
+
+
+class TestLtr:
+    def test_gd_matches_numpy_replica(self, spark):
+        from google_spark.operators.ltr import train_logistic
+
+        rng = np.random.default_rng(7)
+        x1 = rng.uniform(0, 1, 400)
+        x2 = rng.uniform(0, 5, 400)
+        y = (x1 + 0.3 * x2 + rng.normal(0, 0.3, 400) > 1.2).astype(float)
+        df = spark.createDataFrame(
+            [(float(a), float(b), float(c)) for a, b, c in zip(x1, x2, y)],
+            "x1 double, x2 double, y double",
+        )
+        w = train_logistic(df, ["x1", "x2"], "y", iters=3, lr=0.1)
+
+        # NumPy replica with the same 9-dp gradient rounding
+        wb = w1 = w2 = 0.0
+        for _ in range(3):
+            z = wb + w1 * x1 + w2 * x2
+            p = 1.0 / (1.0 + np.exp(-z))
+            r = p - y
+            gb = round(float(np.mean(r)), 9)
+            g1 = round(float(np.mean(r * x1)), 9)
+            g2 = round(float(np.mean(r * x2)), 9)
+            wb, w1, w2 = wb - 0.1 * gb, w1 - 0.1 * g1, w2 - 0.1 * g2
+        # the 9-dp grid absorbs partial-sum order: bit-equality expected
+        assert w == [wb, w1, w2]
+
+    def test_learns_direction(self, spark):
+        # labels correlated with x -> positive learned weight
+        from google_spark.operators.ltr import score_logistic, train_logistic
+
+        rows = [(float(i), 1.0 if i >= 50 else 0.0) for i in range(100)]
+        df = spark.createDataFrame(rows, "x double, y double")
+        df = df.withColumn("x", F.col("x") / 100.0)
+        w = train_logistic(df, ["x"], "y", iters=5, lr=1.0)
+        assert w[1] > 0.0
+        scored = score_logistic(df, ["x"], w).collect()
+        hi = max(scored, key=lambda r: r["x"])
+        lo = min(scored, key=lambda r: r["x"])
+        assert hi["p"] > lo["p"]
+
+    def test_sigmoid_sane(self, spark):
+        from google_spark.operators.ltr import score_logistic
+
+        df = spark.createDataFrame([(0.0,), (100.0,)], "x double")
+        out = {
+            r["x"]: r["p"]
+            for r in score_logistic(df, ["x"], [0.0, 1.0]).collect()
+        }
+        assert math.isclose(out[0.0], 0.5)
+        assert out[100.0] > 0.999999
 
 
 class TestNovelty:

@@ -474,6 +474,19 @@ def test_novelty_shuffles_hash_keys_not_shingles(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_ltr_scoring_is_codegen_expressions(spark):
+    """score_logistic folds weights in as literals: no joins, no
+    exchanges, no Python evaluation — one projected scan."""
+    from google_spark.operators.ltr import score_logistic
+
+    ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet").select(
+        F.col("value").alias("x1")
+    )
+    plan = _plan(score_logistic(ev, ["x1"], [0.1, -0.2]))
+    assert "Exchange" not in plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
 def test_prf_pass2_prunes_to_query_terms(spark, monkeypatch):
     """SearchEngine.prf's second pass reads the posting rows of exactly the
     seed terms plus the mined expansion terms (replayed here from the
